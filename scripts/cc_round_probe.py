@@ -23,13 +23,11 @@ from webscrap_datapipeline_spark.session import get_spark  # noqa: E402
 
 
 def build_edges(spark, sf_dir):
-    from webscrap_datapipeline_spark.catalog import ensure_min_parallelism, load_table
+    from webscrap_datapipeline_spark.catalog import load_table
     from webscrap_datapipeline_spark.operators import dedup as DD
     from webscrap_datapipeline_spark.plans.text_queries import _SHINGLE_CAP
 
-    docs = ensure_min_parallelism(
-        load_table(spark, "documents", sf_dir).select("doc_id", "text"), spark
-    )
+    docs = load_table(spark, "documents", sf_dir, widen=True).select("doc_id", "text")
     return DD.jaccard_pairs(
         docs, "text", "doc_id", n=3, max_shingle_freq=_SHINGLE_CAP
     ).filter(F.col("jaccard") >= 0.5)

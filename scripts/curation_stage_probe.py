@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from webscrap_datapipeline_spark.catalog import ensure_min_parallelism, load_table  # noqa: E402
+from webscrap_datapipeline_spark.catalog import load_table  # noqa: E402
 from webscrap_datapipeline_spark.functions import text as TX  # noqa: E402
 from webscrap_datapipeline_spark.operators import dedup as DD  # noqa: E402
 from webscrap_datapipeline_spark.session import get_spark  # noqa: E402
@@ -46,10 +46,7 @@ def main() -> None:
     from webscrap_datapipeline_spark.plans.text_queries import _SHINGLE_CAP
 
     def corpus():
-        docs = ensure_min_parallelism(
-            load_table(spark, "documents", args.sf_dir).select("doc_id", "lang", "text"),
-            spark,
-        )
+        docs = load_table(spark, "documents", args.sf_dir, widen=True).select("doc_id", "lang", "text")
         dups = docs.filter(F.col("doc_id") % 10 == 0).select(
             (F.col("doc_id") + 1000000).alias("doc_id"), "lang", "text"
         )

@@ -3,8 +3,7 @@
 minhash_lsh_near_dups' 2-consumer shingle-set frame): these queries'
 ONLY materialization is the new lazy localCheckpoint, so identity-
 patching DataFrame.localCheckpoint reproduces the previous tree's
-plan exactly — interleaved in one session (window-bias-free, the
-scripts/r12_change_probe.py method).
+plan exactly — interleaved in one session (window-bias-free).
 
 Run: python scripts/shared_subplan_probe.py [--rounds 3]
 """

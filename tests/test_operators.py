@@ -747,13 +747,10 @@ def test_kmeans_fused_step_matches_decimal_lloyd_relation(spark):
         for r in lloyd_update(_assign(emb, "embedding", C), "embedding").collect():
             n, sums = exact.setdefault(r["cluster"], [r["n"], {}])
             exact[r["cluster"]][1][r["dim"]] = r["new_m"]
-        for forced_parts in (None, 0):
-            # forced_parts=0 forces the "distributed merge" branch
-            # (0 * k * dim > threshold is False — so pass a huge count)
-            fused = _fused_step_centroids(
-                emb, "embedding", C,
-                num_partitions=None if forced_parts is None else 10**9,
-            )
+        # the real width takes the driver-collect merge; a huge count
+        # forces the distributed merge branch
+        for n_parts in (emb.rdd.getNumPartitions(), 10**9):
+            fused = _fused_step_centroids(emb, "embedding", C, num_partitions=n_parts)
             assert set(fused) == set(exact)
             for c, (n, mean) in fused.items():
                 assert n == exact[c][0]
@@ -781,12 +778,12 @@ def test_kmeans_fused_step_overflow_guard_raises_not_wraps(spark):
         [(i, [1.0e11, 0.0]) for i in range(4)], "vec_id int, embedding array<double>"
     ).coalesce(1)
     with pytest.raises(PythonException, match="int64 envelope"):
-        _fused_step_centroids(big, "embedding", [[0.0, 0.0], [1.0, 1.0]])
+        _fused_step_centroids(big, "embedding", [[0.0, 0.0], [1.0, 1.0]], num_partitions=1)
     nan = spark.createDataFrame(
         [(0, [float("nan"), 0.0])], "vec_id int, embedding array<double>"
     )
     with pytest.raises(PythonException, match="non-finite"):
-        _fused_step_centroids(nan, "embedding", [[0.0, 0.0], [1.0, 1.0]])
+        _fused_step_centroids(nan, "embedding", [[0.0, 0.0], [1.0, 1.0]], num_partitions=1)
     # headroom arithmetic, driver-side (no Spark round-trip): 4 rows at
     # |x|=1e11 scaled by 1e8 → bound 4e19 ≥ 2^62 → must trip
     assert 4 * (int(1.0e11 * 1e8) + 1) >= 2**62
@@ -809,7 +806,7 @@ def test_kmeans_fused_step_worstcase_bound_degrades_exact_not_abort(spark):
         [(i, [1.0e10 if i % 2 == 0 else -1.0e10, 0.0]) for i in range(10)],
         "vec_id int, embedding array<double>",
     ).coalesce(1)
-    out = _fused_step_centroids(mixed, "embedding", far)
+    out = _fused_step_centroids(mixed, "embedding", far, num_partitions=1)
     assert out[0][0] == 10 and out[0][1] == [0.0, 0.0]
 
     # cast-wrapping magnitude (1e11 · 1e8 ≥ 2^63) with cancelling signs:
@@ -818,7 +815,7 @@ def test_kmeans_fused_step_worstcase_bound_degrades_exact_not_abort(spark):
         [(0, [1.0e11, 0.0]), (1, [-1.0e11, 0.0])],
         "vec_id int, embedding array<double>",
     ).coalesce(1)
-    out = _fused_step_centroids(wrap, "embedding", far)
+    out = _fused_step_centroids(wrap, "embedding", far, num_partitions=1)
     assert out[0][0] == 2 and out[0][1] == [0.0, 0.0]
 
 
@@ -1658,39 +1655,17 @@ def test_cross_modal_channels_are_individually_load_bearing(spark):
     every planted copy must be eliminated; with one channel disabled,
     exactly the family needing the disabled channel survives — proving
     the union of channels is doing real work, not redundancy."""
-    from webscrap_datapipeline_spark.catalog import ensure_min_parallelism, load_table
     from webscrap_datapipeline_spark.functions.vectors import cosine
     from webscrap_datapipeline_spark.operators import dedup as DD
     from webscrap_datapipeline_spark.operators import similarity as SIM
     from webscrap_datapipeline_spark.operators.components import dedup_survivors
+    from webscrap_datapipeline_spark.plans.crossmodal_queries import seeded_corpus
 
     from tests.conftest import SF_SMALL
 
-    docs = load_table(spark, "documents", SF_SMALL).select("doc_id", "lang", "text")
-    emb = load_table(spark, "embeddings", SF_SMALL).select("vec_id", "embedding")
-    base = ensure_min_parallelism(
-        docs.join(emb, docs["doc_id"] == emb["vec_id"]).select(
-            "doc_id", "lang", "text", "embedding"
-        ),
-        spark,
-    )
-    text_copies = base.filter(F.col("doc_id") % 15 == 0).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        "lang",
-        "text",
-        F.transform("embedding", lambda x: -x).alias("embedding"),
-    )
-    vec_copies = base.filter(F.col("doc_id") % 12 == 0).select(
-        (F.col("doc_id") + 2_000_000).alias("doc_id"),
-        "lang",
-        F.concat(F.lit("rewrite "), F.col("doc_id").cast("string")).alias("text"),
-        "embedding",
-    )
-    corpus = (
-        base.unionByName(text_copies).unionByName(vec_copies).localCheckpoint(eager=False)
-    )
-    n_text_copies = text_copies.count()
-    n_vec_copies = vec_copies.count()
+    corpus = seeded_corpus(spark, SF_SMALL)
+    n_text_copies = corpus.filter(F.col("doc_id").between(1_000_000, 1_999_999)).count()
+    n_vec_copies = corpus.filter(F.col("doc_id") >= 2_000_000).count()
     assert n_text_copies > 0 and n_vec_copies > 0
 
     tedges = (
@@ -1834,3 +1809,86 @@ def test_load_table_schema_cache_is_metadata_only_and_identical(spark):
         assert CAT._read_parquet(spark, p).count() == 3
         spark.range(7).write.mode("overwrite").parquet(p)
         assert CAT._read_parquet(spark, p).count() == 7
+
+
+def test_load_table_widen_decision_matches_spark_scan_width(spark, tmp_path):
+    """``load_table(widen=True)`` decides from file metadata alone; its
+    decision must be exactly "Spark's plain scan plans fewer partitions
+    than defaultParallelism" (``df.rdd`` is only the reference here) —
+    on every shipped table and scale, on a multi-file directory, and
+    under runtime split confs that produce both outcomes."""
+    import webscrap_datapipeline_spark.catalog as CAT
+    from tests.conftest import TESTDATA_ROOT
+
+    n = spark.sparkContext.defaultParallelism
+    multi = str(tmp_path)
+    CAT.load_table(spark, "documents", f"{TESTDATA_ROOT}/sf0.01").repartition(6).write.parquet(
+        f"{multi}/documents.parquet"
+    )
+    cases = [
+        (t, f"{TESTDATA_ROOT}/{sf}") for sf in ("sf0.001", "sf0.01", "sf0.1") for t in CAT.TABLE_NAMES
+    ] + [("documents", multi)]
+    confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = [spark.conf.get(k) for k in confs]
+    outcomes = set()
+    try:
+        for max_bytes, open_cost in ((None, None), ("65536", "4096"), ("200000", "0")):
+            if max_bytes is not None:
+                spark.conf.set(confs[0], max_bytes)
+                spark.conf.set(confs[1], open_cost)
+            for name, sf_dir in cases:
+                width = CAT.load_table(spark, name, sf_dir).rdd.getNumPartitions()
+                assert CAT._scan_partitions(spark, CAT.load_table(spark, name, sf_dir)) == width
+                widened = CAT.load_table(spark, name, sf_dir, widen=True)
+                is_widened = widened._jdf.queryExecution().logical().nodeName() == "Repartition"
+                assert is_widened == (width < n), (name, sf_dir, max_bytes, width)
+                outcomes.add((sf_dir == multi, is_widened))
+    finally:
+        for k, v in zip(confs, saved):
+            spark.conf.set(k, v)
+    assert outcomes == {(False, False), (False, True), (True, False), (True, True)}
+
+
+def test_width_decisions_run_no_jobs(spark, monkeypatch):
+    """Scan-width decisions are metadata, not execution: building the
+    widened ``documents``/``embeddings`` reads, building the seeded
+    cross-modal corpus, and reading kmeans_fit's width on its two
+    callers' inputs (a cached scan, a lazy localCheckpoint of a scan)
+    run no Spark job. seeded_corpus ends in localCheckpoint(eager=False),
+    which on Spark 4 materializes its own AQE query stages when called;
+    that is the checkpoint's work, so it is identity-patched while jobs
+    are counted. The unpatched corpus must stay at least cluster-wide
+    before its coalesce."""
+    from webscrap_datapipeline_spark.catalog import load_table
+    from webscrap_datapipeline_spark.plans.crossmodal_queries import seeded_corpus
+
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    for t in ("documents", "embeddings"):
+        load_table(spark, t, SF_SMALL)  # first read infers the schema (one footer job)
+    cached = load_table(spark, "embeddings", SF_SMALL).select("vec_id", "embedding", "label").cache()
+    group = "width-decisions-run-no-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        load_table(spark, "documents", SF_SMALL, widen=True)
+        load_table(spark, "embeddings", SF_SMALL, widen=True)
+        cached.rdd.getNumPartitions()
+        emb = load_table(spark, "embeddings", SF_SMALL)
+        emb.filter(F.col("vec_id") >= 5).localCheckpoint(eager=False).select(
+            "vec_id", "embedding"
+        ).rdd.getNumPartitions()
+        with monkeypatch.context() as m:
+            m.setattr(type(emb), "localCheckpoint", lambda self, eager=True: self)
+            seeded_corpus(spark, SF_SMALL)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        cached.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    rdd = seeded_corpus(spark, SF_SMALL)._jdf.queryExecution().analyzed().rdd()
+    while rdd.getClass().getSimpleName() != "CoalescedRDD":
+        rdd = rdd.dependencies().head().rdd()
+    assert rdd.dependencies().head().rdd().getNumPartitions() >= n

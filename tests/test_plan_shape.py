@@ -10,6 +10,7 @@ product. Plans are built, never executed — this file costs milliseconds.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from webscrap_datapipeline_spark.catalog import load_table
@@ -23,24 +24,37 @@ def plan_str(df, mode: str = "formatted") -> str:
     return sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
 
-def test_filter_pushdown_reaches_parquet_scan(spark):
-    df = (
-        load_table(spark, "orders", SF_SMALL)
-        .filter(F.col("o_custkey") < 100)
-        .select("o_orderkey", "o_custkey")
-    )
+# (table, widen, kept columns, filter column, pruned columns). A widened
+# read puts a round-robin exchange above the scan; the caller's filter
+# and projection must still reach the parquet scan below it.
+SCANS = {
+    "orders": (
+        "orders", False, ("o_orderkey", "o_custkey"), "o_custkey", ("o_totalprice", "o_orderstatus")
+    ),
+    "documents-widened": ("documents", True, ("doc_id", "text"), "doc_id", ("lang", "source")),
+}
+
+
+@pytest.mark.parametrize("scan", SCANS)
+def test_filter_pushdown_reaches_parquet_scan(spark, scan):
+    table, widen, kept, key, _ = SCANS[scan]
+    df = load_table(spark, table, SF_SMALL, widen=widen).filter(F.col(key) < 100).select(*kept)
     plan = plan_str(df)
+    assert ("RoundRobinPartitioning" in plan) == widen
     assert "PushedFilters" in plan
     pushed = plan.split("PushedFilters:")[1].splitlines()[0]
-    assert "LessThan(o_custkey,100)" in pushed.replace(" ", "")
+    assert f"LessThan({key},100)" in pushed.replace(" ", "")
 
 
-def test_column_pruning_reaches_parquet_scan(spark):
-    df = load_table(spark, "orders", SF_SMALL).select("o_orderkey", "o_custkey")
+@pytest.mark.parametrize("scan", SCANS)
+def test_column_pruning_reaches_parquet_scan(spark, scan):
+    table, widen, kept, _, pruned = SCANS[scan]
+    df = load_table(spark, table, SF_SMALL, widen=widen).select(*kept)
     plan = plan_str(df)
+    assert ("RoundRobinPartitioning" in plan) == widen
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
-    assert "o_orderkey" in read_schema and "o_custkey" in read_schema
-    assert "o_totalprice" not in read_schema and "o_orderstatus" not in read_schema
+    assert all(c in read_schema for c in kept)
+    assert not any(c in read_schema for c in pruned)
 
 
 def test_small_dimension_joins_are_broadcast(spark):

@@ -138,9 +138,50 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(sch).parquet(path)
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one test table. Column pruning + filter pushdown reach the
-    parquet scan because this stays a plain declarative read."""
+def _scan_partitions(spark: SparkSession, df: DataFrame) -> int:
+    """File partitions a plain scan of ``df``'s (first) parquet relation
+    plans: Spark's own split arithmetic (FilePartition.maxSplitBytes,
+    file splitting, next-fit-decreasing packing, the maxPartitionNum
+    cap) under the session's confs, over the file listing Spark already
+    holds for the read. No job runs."""
+    js = spark._jsparkSession
+    conf = js.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_num = conf.filesMinPartitionNum()
+    min_num = min_num.get() if min_num.isDefined() else js.leafNodeDefaultParallelism()
+    relation = df._jdf.queryExecution().analyzed().collectLeaves().head().relation()
+    files = relation.location().allFiles()
+    it = files.iterator()  # a Scala iterator: py4j's JavaList iteration costs ~30 ms
+    sizes = [it.next().getLen() for _ in range(files.size())]
+    total = sum(s + open_cost for s in sizes)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // min_num))
+    chunks = sorted(
+        (min(split, s - off) for s in sizes for off in range(0, s, split)), reverse=True
+    )
+
+    def pack(split: int) -> int:
+        parts, cur = 0, 0
+        for c in chunks:
+            if cur and cur + c > split:
+                parts, cur = parts + 1, 0
+            cur += c + open_cost
+        return parts + (1 if cur else 0)
+
+    parts, max_num = pack(split), conf.filesMaxPartitionNum()
+    if max_num.isDefined() and parts > max_num.get():
+        parts = pack(-(-sum(c + open_cost for c in chunks) // max_num.get()))
+    return parts
+
+
+def load_table(
+    spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR, *, widen: bool = False
+) -> DataFrame:
+    """Read one test table. ``widen=True`` (for compute-heavy per-row
+    work) appends ``repartition(defaultParallelism)`` when file metadata
+    says the scan plans fewer partitions (:func:`_scan_partitions`); a
+    real lake's wide scan is left alone. Column pruning + filter
+    pushdown still reach the parquet scan: Catalyst pushes the caller's
+    filters and projections below the round-robin exchange."""
     if name not in EXPECTED_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(EXPECTED_SCHEMAS)}")
     # Loud guard, not a silent dependency: the NTZ rewrite below builds
@@ -186,40 +227,10 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
                         f" cast(extract(SECOND FROM `{c}`) as decimal(8,6)), 'UTC')"
                     ),
                 )
-    return df
-
-
-# Partition-count memo for ensure_min_parallelism: ``df.rdd`` doesn't
-# just plan — on an AQE plan with exchanges (the seeded-corpus join) it
-# MATERIALIZES every shuffle stage to learn the final partition count,
-# i.e. real jobs run and are thrown away, ~0.2 s warm / ~1 s cold per
-# call. The widen-or-not decision is a pure function of the analyzed
-# plan + the on-disk file sizes, so memoize it per (application,
-# semantic plan hash, target). Plan METADATA only — no rows are cached,
-# and a fresh process starts empty. A 32-bit semanticHash collision
-# could at worst mis-skip a repartition (a width decision, never a
-# result change).
-_NUM_PARTITIONS_CACHE: dict[tuple, int] = {}
-
-
-def ensure_min_parallelism(df: DataFrame, spark: SparkSession, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition IF the plan currently has fewer partitions
-    than the cluster has cores. Compute-heavy per-row work (shingling,
-    hashing, vector math) over a small/single-row-group parquet file
-    otherwise runs on one task; on a real lake the scan already yields
-    ≥cores splits and this is a no-op (we never repartition *down*)."""
-    n = min_partitions or spark.sparkContext.defaultParallelism
-    key = (
-        spark.sparkContext.applicationId,
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        n,
-    )
-    cur = _NUM_PARTITIONS_CACHE.get(key)
-    if cur is None:
-        cur = df.rdd.getNumPartitions()
-        _NUM_PARTITIONS_CACHE[key] = cur
-    if cur < n:
-        return df.repartition(n)
+    if widen:
+        n = spark.sparkContext.defaultParallelism
+        if _scan_partitions(spark, df) < n:
+            df = df.repartition(n)
     return df
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import ensure_min_parallelism, load_table
+from ..catalog import _scan_partitions, load_table
 from ..functions import text as TX
 from ..functions.vectors import cosine
 from ..operators import dedup as DD
@@ -46,12 +46,16 @@ def seeded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-6 review)."""
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "lang", "text")
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    base = ensure_min_parallelism(
-        docs.join(emb, docs["doc_id"] == emb["vec_id"]).select(
-            "doc_id", "lang", "text", "embedding"
-        ),
-        spark,
+    base = docs.join(emb, docs["doc_id"] == emb["vec_id"]).select(
+        "doc_id", "lang", "text", "embedding"
     )
+    # A broadcast join is as wide as its streamed scan, so the join
+    # output takes load_table(widen=True)'s file-metadata rule: widen it
+    # when both scans are narrower than the cluster (widening one scan
+    # instead could widen the side that gets broadcast).
+    width = spark.sparkContext.defaultParallelism
+    if max(_scan_partitions(spark, docs), _scan_partitions(spark, emb)) < width:
+        base = base.repartition(width)
     text_copies = base.filter(F.col("doc_id") % 15 == 0).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         "lang",
@@ -75,7 +79,7 @@ def seeded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         base.unionByName(text_copies)
         .unionByName(vec_copies)
-        .coalesce(spark.sparkContext.defaultParallelism)
+        .coalesce(width)
         .localCheckpoint(eager=False)
     )
 

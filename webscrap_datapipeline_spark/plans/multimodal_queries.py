@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import ensure_min_parallelism, load_table
+from ..catalog import load_table
 from ..operators import multimodal as MM
 from .registry import query
 
@@ -28,7 +28,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → media rows matching operators/multimodal.MEDIA_SCHEMA.
     Deterministic: payload is the utf-8 encoding of the text; kind cycles
     by doc_id; width/height/duration derive from n_chars."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     kind = F.element_at(F.array(*[F.lit(k) for k in _KINDS]), (F.col("doc_id") % 3 + 1).cast("int"))
     return docs.select(
         F.col("doc_id").alias("media_id"),

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import ensure_min_parallelism, load_table
+from ..catalog import load_table
 from ..functions import text as TX
 from ..operators import dedup as DD
 from .registry import query
@@ -118,9 +118,7 @@ def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural exact dups, so a shifted copy of every 10th doc is unioned in
     — the dedup must then collapse exactly those pairs (n_members=2) and
     keep the lowest id as canonical."""
-    docs = ensure_min_parallelism(
-        load_table(spark, "documents", sf_dir).select("doc_id", "text"), spark
-    )
+    docs = load_table(spark, "documents", sf_dir, widen=True).select("doc_id", "text")
     dups = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
     )
@@ -163,7 +161,7 @@ def near_dup_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle index (explode → equi-self-join → count), top-20 pairs.
     The equi-join on shingle is the scale move: candidates come from
     shared shingles only, never an n² document cross join."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     pairs = DD.jaccard_pairs(docs, "text", "doc_id", n=3, max_shingle_freq=_SHINGLE_CAP)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
@@ -294,7 +292,7 @@ def near_dup_jaccard_capped_binding(spark: SparkSession, sf_dir: str) -> DataFra
     to matter. Intersections count only under-cap shingles; sizes stay
     the full distinct-shingle sets (capped-Jaccard is a lower bound of
     true Jaccard)."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     pairs = DD.jaccard_pairs(docs, "text", "doc_id", n=3, max_shingle_freq=5)
     return (
         pairs.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
@@ -405,7 +403,7 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the candidate list back to the per-doc shingle *sets* and
     computes intersection/union per pair — cost scales with |candidates|,
     never with |corpus|²."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     sigs = DD.minhash_signatures(docs, "text", "doc_id", n=3, num_hashes=32)
     cands = DD.minhash_lsh_candidates(sigs, bands=8, rows_per_band=4)
     sh = docs.select(F.col("doc_id").alias("doc"), TX.word_shingles("text", 3).alias("sh"))
@@ -500,7 +498,7 @@ def minhash_lsh_portable_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (equi-join on a string bucket — injective encoding, no hash-bucket
     collisions to diverge from the oracle). Same O(n·bands) scale shape
     as the production xxhash64 path."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     sigs = DD.minhash_signatures_portable(docs, "text", "doc_id", n=3, num_hashes=16)
     return _portable_pairs_from_sigs(sigs)
 
@@ -737,7 +735,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint — a full value check on an iterative graph algorithm."""
     from ..operators.components import connected_components
 
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     edges = DD.jaccard_pairs(docs, "text", "doc_id", n=3, max_shingle_freq=_SHINGLE_CAP).filter(
         F.col("jaccard") >= 0.5
     )
@@ -1009,10 +1007,7 @@ def corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.components import dedup_survivors
 
-    docs = ensure_min_parallelism(
-        load_table(spark, "documents", sf_dir).select("doc_id", "lang", "text"),
-        spark,
-    )
+    docs = load_table(spark, "documents", sf_dir, widen=True).select("doc_id", "lang", "text")
     dups = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "lang", "text"
     )
@@ -1380,7 +1375,7 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_portable_pairs_from_sigs``) and both signature joins, one
     checkpointed shingle frame feeds both set joins, and est/exact come
     out of a single four-join chain with no est⋈ex re-join."""
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     sigs = DD.minhash_signatures_portable(
         docs, "text", "doc_id", n=3, num_hashes=16
     ).localCheckpoint(eager=False)
@@ -1449,7 +1444,7 @@ def token_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped Jaccard miner."""
     from ..operators.sketches import token_heavy_hitters
 
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     return token_heavy_hitters(docs, "text", k=25, capacity=4096)
 
 
@@ -1474,7 +1469,7 @@ def token_cms_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         lower_alnum_tokens,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     toks = docs.select(
         F.explode(lower_alnum_tokens("text")).alias("token")
     ).filter(F.col("token") != "")
@@ -1557,7 +1552,7 @@ def token_cms_portable_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
         lower_alnum_tokens,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, "documents", sf_dir), spark)
+    docs = load_table(spark, "documents", sf_dir, widen=True)
     toks = docs.select(
         F.explode(lower_alnum_tokens("text")).alias("token")
     ).filter(F.col("token") != "")

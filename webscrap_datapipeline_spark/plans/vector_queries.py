@@ -171,11 +171,7 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     unioned in — the operator must find exactly those pairs. At 100 TB
     the bucket join shuffles 8-byte keys; multi-probe or fewer planes
     trade recall for candidate volume."""
-    from ..catalog import ensure_min_parallelism
-
-    emb = ensure_min_parallelism(
-        load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding"), spark
-    )
+    emb = load_table(spark, "embeddings", sf_dir, widen=True).select("vec_id", "embedding")
     dups = emb.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
@@ -307,11 +303,7 @@ def lsh_auto_planes_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the cheap pre-flight that proves the candidate join is linear
     BEFORE paying for it; the driver hash pins auto_planes' arithmetic
     against an independent engine."""
-    from ..catalog import ensure_min_parallelism
-
-    emb = ensure_min_parallelism(
-        load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding"), spark
-    )
+    emb = load_table(spark, "embeddings", sf_dir, widen=True).select("vec_id", "embedding")
     dups = emb.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
