@@ -8,8 +8,7 @@ r11's 14:59 wall was already at the edge).
 NOTHING here is deleted coverage: the default suite still pins every
 moved feature's core behavior (plain-layout twin equality, replay
 idempotence, geometry guards, compaction content-preservation), and
-this file runs the full secondary matrix wherever the gate is set —
-the same opt-in pattern as the transformWithState wire test:
+this file runs the full secondary matrix wherever the gate is set:
 
     SPARK_GRAFT_HEAVY_TESTS=1 python -m pytest tests/optional/ -q
 

@@ -538,24 +538,6 @@ def test_salted_agg_matches_plain_groupby(spark):
     assert got == want
 
 
-def test_salted_join_matches_plain_join(spark):
-    from webscrap_datapipeline_spark.operators.skew import salted_join
-
-    left_rows = [("hot", i) for i in range(500)] + [(f"k{i}", i) for i in range(20)]
-    right_rows = [("hot", "H"), ("k3", "T3"), ("k7", "T7"), ("absent", "X")]
-    left = spark.createDataFrame(left_rows, "k string, uid int")
-    right = spark.createDataFrame(right_rows, "k string, tag string")
-
-    got = sorted(
-        (r["k"], r["uid"], r["tag"])
-        for r in salted_join(left, right, on="k", salt_from="uid", n_salts=4).collect()
-    )
-    want = sorted(
-        (r["k"], r["uid"], r["tag"]) for r in left.join(right, "k").collect()
-    )
-    assert got == want and len(got) == 502
-
-
 def test_multimodal_resize_rewrites_images_only(spark):
     from webscrap_datapipeline_spark.operators.multimodal import (
         fake_resizer,

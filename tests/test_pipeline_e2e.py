@@ -288,189 +288,46 @@ def test_label_centroids_array_matches_exploded(spark):
             assert exploded[(row["label"], i)] == m
 
 
-def test_driver_window_is_least_recently_verified_rotation():
-    """The driver verifies a 50-entry prefix of the registry export
-    order, so the ordering IS the evidence-allocation policy (round-3
-    VERDICT item 1): plan-changed pins first, then oracled queries with
-    no green driver row, then hash-verified queries OLDEST green row
-    first. Uses the committed CORRECTNESS_r*.json history."""
-    from webscrap_datapipeline_spark.plans.registry import (
-        _DEFER_TO_ROUND,
-        _PINNED_FIRST,
-        _driver_history,
-        _ordered_names,
-        REGISTRY,
-    )
+def test_driver_window_is_least_recently_verified_rotation(monkeypatch, tmp_path):
+    """The driver verifies a 50-entry prefix of the export order, so the
+    order is one rule over the committed CORRECTNESS_r*.json files:
+    least recently verified first, then name. It reads files only."""
+    import json
+    import subprocess
 
-    last_green, last_seen, latest_round = _driver_history()
-    names = _ordered_names()
-    assert sorted(names) == sorted(REGISTRY)  # a permutation, nothing lost
+    from webscrap_datapipeline_spark.plans import registry
+    from webscrap_datapipeline_spark.plans.registry import REGISTRY, oracle_sql, queries
 
-    # mid-round additions defer: they sort dead-last until the previous
-    # round's CORRECTNESS file exists, never displacing the allocated
-    # re-verification budget
-    deferred = {
-        n for n, rnd in _DEFER_TO_ROUND.items() if latest_round < rnd - 1
+    def no_process(*a, **k):
+        raise AssertionError("registry ordering started a process")
+
+    monkeypatch.setattr(subprocess, "Popen", no_process)
+    names = list(queries())
+    assert sorted(names) == sorted(REGISTRY)
+    last = registry._last_verified()
+    keys = [(last.get(n, 0), n) for n in names]
+    assert keys == sorted(keys)
+    assert list(oracle_sql()) == [n for n in names if REGISTRY[n].oracle is not None]
+
+    # corrupt and non-dict history is skipped: every query at round 0
+    monkeypatch.setattr(registry, "_repo_root", lambda: str(tmp_path))
+    (tmp_path / "CORRECTNESS_r99.json").write_text("{not json")
+    (tmp_path / "CORRECTNESS_r98.json").write_text("[1, 2]")
+    assert registry._ordered_names() == sorted(REGISTRY)
+
+    # a verified row moves its query to the back; a hash mismatch or a
+    # rows-only failure does not count as verified
+    oracled = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
+    rows_only = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
+    rows = {
+        oracled[0]: {"hash_match": True, "err": None},
+        oracled[1]: {"hash_match": False, "err": None},
+        rows_only[0]: {"hash_match": None, "err": "no_oracle"},
+        rows_only[1]: {"hash_match": None, "err": "Traceback ..."},
     }
-    assert set(names[len(names) - len(deferred):]) == deferred
-
-    active_pins = [
-        n for n, rnd in _PINNED_FIRST.items() if last_green.get(n, 0) < rnd
-    ]
-    # active pins occupy the very front
-    assert set(names[: len(active_pins)]) == set(active_pins)
-
-    # within the hash-verified tail, green rounds are non-decreasing —
-    # the stalest evidence always re-verifies first
-    verified_rounds = [
-        last_green[n]
-        for n in names
-        if n in last_green and n not in active_pins and REGISTRY[n].oracle is not None
-    ]
-    assert verified_rounds == sorted(verified_rounds)
-
-    # oracled-but-never-green queries (deferred aside) outrank every
-    # verified query
-    first_verified = next(
-        i for i, n in enumerate(names) if n in last_green and n not in active_pins
-    )
-    for i, n in enumerate(names):
-        if (
-            REGISTRY[n].oracle is not None
-            and n not in last_green
-            and n not in active_pins
-            and n not in deferred
-        ):
-            assert i < first_verified, f"{n} (never green) sorted after verified rows"
-
-
-def test_rows_only_reentry_rule_is_capped_and_module_change_gated():
-    """round-9 VERDICT item 3 + round-10 VERDICT item 2: a rows-only
-    query re-enters the window (bucket 2) when its implementing module
-    changed since its last driver-seen round OR its record is at least
-    _MAX_ROWS_ONLY_AGE rounds old. Module-changed re-entries are capped
-    at the slots left after pins, never-green oracled rows, never-seen
-    rows, and the FULL oldest-green cohort, so they can never stall the
-    freshness floor (item 8); age-triggered re-entries additionally
-    hold up to _AGE_REENTRY_SLOTS guaranteed slots borrowed from the
-    cohort's tail, so an ancient record refreshes even when the cohort
-    fills the window. Pure-function test over synthetic histories, like
-    the _driver_history contract itself; plus a live check that the git
-    gate really fires for the committed history."""
-    from webscrap_datapipeline_spark.plans.registry import (
-        _AGE_REENTRY_SLOTS,
-        _DEFER_TO_ROUND,
-        _MAX_ROWS_ONLY_AGE,
-        _ROWS_ONLY_PINNED,
-        _driver_history,
-        _module_changed_since_round,
-        _rows_only_reentries,
-        REGISTRY,
-    )
-
-    # mid-round deferred queries yield the window entirely — they are
-    # not re-entry candidates either (all scenarios below use
-    # latest_round=9)
-    deferred = {n for n, rnd in _DEFER_TO_ROUND.items() if 9 < rnd - 1}
-    rows_only = [
-        n for n, q in REGISTRY.items() if q.oracle is None and n not in deferred
-    ]
-    assert len(rows_only) >= 3
-    oracled = [n for n, q in REGISTRY.items() if q.oracle is not None]
-    fresh = 9 - _MAX_ROWS_ONLY_AGE + 1  # seen-round just inside freshness
-
-    # synthetic history: every oracled query green in round 7 (cohort
-    # consumes the whole window) -> zero free slots, no FRESH re-entries
-    # even though every rows-only module "changed"
-    lg_full = {n: 7 for n in oracled}
-    ls = {n: fresh for n in rows_only} | lg_full
-    got = _rows_only_reentries(lg_full, ls, 9, lambda n, r: True)
-    assert got == frozenset()
-
-    # ...but AGED records override the full cohort: seen exactly
-    # _MAX_ROWS_ONLY_AGE rounds ago, module UNchanged -> the guaranteed
-    # floor admits up to _AGE_REENTRY_SLOTS of the oldest candidates
-    ls_aged = {n: 9 - _MAX_ROWS_ONLY_AGE for n in rows_only} | lg_full
-    got = _rows_only_reentries(lg_full, ls_aged, 9, lambda n, r: False)
-    assert len(got) == min(len(rows_only), _AGE_REENTRY_SLOTS)
-    # oldest-seen wins the guaranteed slots: make one candidate one
-    # round staler than its peers and it must be in the chosen set
-    stalest = sorted(rows_only)[-1]
-    ls_one = dict(ls_aged) | {stalest: 9 - _MAX_ROWS_ONLY_AGE - 1}
-    got = _rows_only_reentries(lg_full, ls_one, 9, lambda n, r: False)
-    assert stalest in got
-
-    # one round younger than the age bar, module unchanged -> nothing
-    ls_young = {n: 9 - _MAX_ROWS_ONLY_AGE + 1 for n in rows_only} | lg_full
-    got = _rows_only_reentries(lg_full, ls_young, 9, lambda n, r: False)
-    assert got == frozenset()
-
-    # cohort of 40 + nothing else pending -> 10 free slots, all
-    # changed rows-only queries re-enter (there are fewer than 10)
-    lg_small = {n: (7 if i < 40 else 8) for i, n in enumerate(oracled)}
-    got = _rows_only_reentries(lg_small, ls, 9, lambda n, r: True)
-    assert got == frozenset(rows_only)
-
-    # module-change gate: nothing changed (and nothing aged) ->
-    # nothing re-enters
-    got = _rows_only_reentries(lg_small, ls, 9, lambda n, r: False)
-    assert got == frozenset()
-
-    # cap ordering: with fewer free slots than candidates, the
-    # _ROWS_ONLY_PINNED query wins one regardless of seen-age (here it
-    # is the YOUNGEST-seen candidate, which would otherwise lose).
-    # Green rounds sit ABOVE every _PINNED_FIRST round so no synthetic
-    # pin reactivates and eats a slot; seen-rounds stay inside the age
-    # bar so the guaranteed floor stays out of this scenario.
-    lg_tight = {n: (98 if i < 48 else 99) for i, n in enumerate(oracled)}
-    free = 50 - sum(1 for r in lg_tight.values() if r == 98)
-    assert free == 2 < len(rows_only)
-    pinned = [n for n in _ROWS_ONLY_PINNED if n in rows_only]
-    if pinned:
-        ls_pin = {n: (fresh + 1 if n in pinned else fresh) for n in rows_only} | lg_tight
-        got = _rows_only_reentries(lg_tight, ls_pin, 9, lambda n, r: True)
-        assert set(pinned) <= got  # pin beats older-seen peers
-        assert len(got) == free
-
-    # the guaranteed floor is reserved for AGED candidates BY NAME:
-    # with zero free slots, a FRESH pinned candidate whose module
-    # changed sorts first but must NOT consume a guaranteed slot
-    # (round-11 review — the front-slice implementation handed the
-    # floor to non-aged entries, so the extreme-staleness records the
-    # floor exists for stayed stale forever)
-    if pinned:
-        ls_mixed = {
-            n: (fresh if n in pinned else 9 - _MAX_ROWS_ONLY_AGE)
-            for n in rows_only
-        } | lg_full
-        got = _rows_only_reentries(
-            lg_full, ls_mixed, 9, lambda n, r: n in pinned
-        )
-        assert got and not (set(pinned) & got)  # floor went to the aged
-        assert all(9 - ls_mixed[n] >= _MAX_ROWS_ONLY_AGE for n in got)
-        assert len(got) == min(
-            len(rows_only) - len(pinned), _AGE_REENTRY_SLOTS
-        )
-
-    # the live git gate: the committed record says the round-10 window
-    # grants re-entry to at least the pinned motivating case, and the
-    # gate returns False for a round with no CORRECTNESS file
-    assert _module_changed_since_round("embedding_ivf_topk", 3) is True
-    assert _module_changed_since_round("embedding_ivf_topk", 9999) is False
-
-    # the live age rule: against the committed r1-r10 history, the
-    # three ancient rows-only records (r2/r3 era — round-10 VERDICT
-    # item 2 names them) re-enter the r11 window
-    lg_live, ls_live, latest_live = _driver_history()
-    if latest_live == 10:
-        got = _rows_only_reentries(
-            lg_live, ls_live, latest_live, _module_changed_since_round
-        )
-        assert {
-            "minhash_lsh_near_dups",
-            "stratified_event_sample",
-            "approx_value_percentiles",
-        } <= got
+    (tmp_path / "CORRECTNESS_r5.json").write_text(json.dumps(rows))
+    moved = sorted([oracled[0], rows_only[0]])
+    assert registry._ordered_names() == sorted(set(REGISTRY) - set(moved)) + moved
 
 
 def test_scaled_parity_corpus_preserves_fk_integrity(spark, tmp_path):

@@ -1,19 +1,15 @@
-"""Skew mitigation: salted two-phase aggregation and salted joins.
+"""Skew mitigation: salted two-phase aggregation.
 
 AQE's skew-join splitting (on in session.py) handles sort-merge joins
-whose *partition files* are skewed, but two hot-key shapes still need
-explicit salting at 100 TB:
+whose *partition files* are skewed, but a groupBy where one key holds a
+double-digit percent of all rows still needs explicit salting at
+100 TB: every row of the hot key lands on one reducer regardless of AQE.
 
-* a groupBy where one key holds a double-digit percent of all rows —
-  every row of the hot key lands on one reducer regardless of AQE; and
-* a shuffled join against a side too big to broadcast, keyed by a
-  power-law column.
-
-Both fixes are the textbook two-phase trick: spread the hot key over
-``n_salts`` synthetic sub-keys, do the heavy work per sub-key, then
-combine. Salt must be deterministic under task retry (Spark recomputes
-lost partitions!), so it is derived by hashing a caller-named
-high-entropy column — never ``rand()`` / ``monotonically_increasing_id``.
+The fix is the textbook two-phase trick: spread the hot key over
+``n_salts`` synthetic sub-keys, aggregate per sub-key, then combine.
+Salt must be deterministic under task retry (Spark recomputes lost
+partitions!), so it is derived by hashing a caller-named high-entropy
+column — never ``rand()`` / ``monotonically_increasing_id``.
 """
 
 from __future__ import annotations
@@ -62,23 +58,3 @@ def salted_agg(
         *[_COMBINE[fn][1](f"__p_{fn}_{c}").alias(f"{fn}_{c}") for c, fn in aggs]
     )
 
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    salt_from: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi join where ``left`` is skewed on ``on`` and ``right`` is too
-    big to broadcast: salt the left from a high-entropy left column,
-    replicate the right across all ``n_salts`` sub-keys (explode over a
-    literal range — cost is n_salts × |right|, the price of spreading
-    the hot key over n_salts reducers), join on (key, salt).
-    """
-    l_salted = left.withColumn("__salt", _salt(salt_from, n_salts))
-    r_replicated = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return l_salted.join(r_replicated, [on, "__salt"], how).drop("__salt")

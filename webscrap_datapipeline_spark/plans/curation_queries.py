@@ -1426,8 +1426,7 @@ _DOC_HASH = """CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 2))
     "split_leakage_audit",
     # Same hash-split CTE as train_val_test_split_stats; the overlap
     # join is integer-count arithmetic keyed on the shingle string —
-    # exact on both engines. Registered mid-round-4, deferred to the
-    # round-5 driver window (plans/registry._DEFER_TO_ROUND).
+    # exact on both engines.
     oracle=f"""
     WITH d AS (
       SELECT doc_id, lang, text, {_DOC_HASH} AS hh FROM documents

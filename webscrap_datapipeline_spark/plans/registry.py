@@ -20,6 +20,9 @@ exact value-hash, and Spark sums floats in partition order):
 
 from __future__ import annotations
 
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -52,354 +55,44 @@ def query(name: str, oracle: str | None, tags: tuple[str, ...] = (), doc: str = 
     return deco
 
 
-# Driver-facing ordering. The driver's correctness gate verifies a prefix
-# of the registry (50 entries per round), so the export order is an
-# evidence-allocation decision: queries without a green driver row yet go
-# first; hash-verified queries (they keep local pytest parity) go last.
-_MODULE_RANK = {
-    "text_queries": 0,
-    "crossmodal_queries": 0,  # cross-channel curation flagship
-    "curation_queries": 1,  # round-3 curation surface — all driver-unseen
-    "vector_queries": 1,
-    "temporal_queries": 2,
-    "multimodal_queries": 3,
-    "sql_surface_queries": 4,
-    "core_queries": 5,
-    "analytics_queries": 6,
-}
-
-
 def _repo_root() -> str:
-    import os
-
     return os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _driver_history() -> tuple[dict[str, int], dict[str, int], int]:
-    """({name: last round with a green hash row}, {name: last round the
-    driver SAW the query at all — green, rows-only, or failed}, latest
-    round with a committed CORRECTNESS file — 0 when none), derived
-    from the committed CORRECTNESS_r*.json files rather than a
-    hand-maintained list (round-2 ADVICE: a hard-coded frozenset
-    silently drifts from the actual driver record). Missing/corrupt
-    files degrade to empty — every query then competes for a window
-    slot, which is the safe direction. The latest round is a tuple
-    element, not a module global (round-4 ADVICE: a global set as a
-    side effect reads stale-0 for callers that never invoked this)."""
-    import json
-    import os
-    import re
-
-    repo_root = _repo_root()
-    last_green: dict[str, int] = {}
-    last_seen: dict[str, int] = {}
-    latest_round = 0
-    for fname in sorted(os.listdir(repo_root)):
+def _last_verified() -> dict[str, int]:
+    """{name: last round whose committed ``CORRECTNESS_r<N>.json`` verified
+    it}: ``hash_match is True`` for an oracled query, no error for a
+    rows-only one (the driver marks those ``err == "no_oracle"``). The
+    files are outside input, so an unreadable or non-dict one is skipped."""
+    root = _repo_root()
+    last: dict[str, int] = {}
+    for fname in os.listdir(root):
         m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
         if not m:
             continue
-        rnd = int(m.group(1))
-        latest_round = max(latest_round, rnd)
         try:
-            with open(os.path.join(repo_root, fname)) as f:
+            with open(os.path.join(root, fname)) as f:
                 rows = json.load(f)
         except (OSError, ValueError):
             continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            last_seen[name] = max(last_seen.get(name, 0), rnd)
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    return last_green, last_seen, latest_round
-
-
-def _module_changed_since_round(query_name: str, round_no: int) -> bool:
-    """True when the plans module implementing ``query_name`` was
-    committed to AFTER round ``round_no``'s CORRECTNESS record landed —
-    i.e. the code the driver last saw for this query is no longer the
-    committed code (round-9 VERDICT item 1 under "What's wrong": the
-    bucket-4 rule starved rows-only queries of driver slots forever,
-    letting the record imply r3-era code is what ran). Derived from
-    git rather than a hand-maintained list, same rationale as
-    :func:`_driver_history`; any failure (no git, shallow copy,
-    untracked file) degrades to False — the query then stays in the
-    yield bucket, which never steals a freshness slot by accident.
-
-    "After" is decided by COMMIT ANCESTRY, not committer timestamps:
-    ``git rev-list --count <record-commit>..HEAD -- <module>`` asks
-    whether the module has any commit the record's last commit is an
-    ancestor of — the history-order question. Timestamps are not
-    monotonic with history (rebases, cherry-picks, clock skew), so the
-    previous ``%ct`` comparison could mis-schedule in both directions
-    (round-10 ADVICE item 4)."""
-    import inspect
-    import os
-    import re
-    import subprocess
-
-    repo_root = _repo_root()
-
-    def git(*args: str) -> str | None:
-        try:
-            p = subprocess.run(
-                ["git", *args],
-                cwd=repo_root,
-                capture_output=True,
-                text=True,
-                timeout=10,
-            )
-            return p.stdout.strip() if p.returncode == 0 else None
-        except (OSError, subprocess.SubprocessError):
-            return None
-
-    record = next(
-        (
-            f
-            for f in os.listdir(repo_root)
-            if re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
-            and int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f).group(1)) == round_no
-        ),
-        None,
-    )
-    if record is None:
-        return False
-    try:
-        mod_file = os.path.relpath(inspect.getfile(REGISTRY[query_name].fn), repo_root)
-    except (TypeError, OSError, KeyError):
-        return False
-    record_sha = git("log", "-1", "--format=%H", "--", record)
-    if not record_sha:
-        return False
-    n = git("rev-list", "--count", f"{record_sha}..HEAD", "--", mod_file)
-    try:
-        return int(n) > 0 if n is not None else False
-    except ValueError:
-        return False
-
-# Queries added MID-round, after the current window's 50-slot budget was
-# already allocated. A deferred query sorts LAST until the CORRECTNESS
-# file of the round before its target exists, then it automatically
-# joins bucket 1 (oracled, never green) for the target round's window.
-# Local parity still covers it every pytest run in the meantime.
-# (Round-6 prune: the r4/r5 entries all landed green rows and retired —
-# VERDICT r5 "What's wrong" item 1. Empty ≠ dead: repopulate whenever a
-# query is added mid-round.)
-_DEFER_TO_ROUND: dict[str, int] = {
-    # round 9 added five partsupp-twin queries but the window holds
-    # 50 = 1 pin + 45 stale-r6 rotation slots + 4 new: Q2 (the fifth,
-    # added last) defers to round 10 so no r6-era row loses its slot —
-    # the freshness floor outranks one round of driver latency. Local
-    # parity (sf0.001/0.1), ×64 scaled parity, and the determinism
-    # audit already prove it this round.
-    "min_cost_region_suppliers": 10,
-    # round 10 window is exactly full (min_cost + 3 capped rows-only
-    # re-entries + the entire 46-row r7 freshness cohort): the two new
-    # sketch queries defer one round rather than evict an r7 row.
-    # Local parity / pytest pins cover them this round.
-    "token_heavy_hitters": 11,
-    "token_cms_profile": 11,
-    # round 11 mid-round addition: the r11 window was allocated as
-    # 2 deferred sketch queries + embedding_ivf_trained_topk + age
-    # re-entries + the r8 freshness cohort — this defers one round
-    # rather than evict an r8 row. Local parity covers it now.
-    "embedding_ann_multiprobe_topk": 12,
-    # round 11 late addition (same allocation arithmetic as above):
-    # the portable-CMS value-check twin waits for the r12 window.
-    "token_cms_portable_estimates": 12,
-}
-
-# Queries whose PLAN or ORACLE changed in the round named by the pin —
-# already verified in an earlier round, but the verified code is not the
-# committed code anymore, so a fresh driver row outranks re-greening
-# stale-but-unchanged queries. A pin retires once the driver records a
-# green row in a round >= its pin round (then it rejoins the normal
-# least-recently-verified rotation). Round-6 prune cleared the retired
-# r4/r5 pins; repopulate whenever a shipped plan/oracle changes.
-_PINNED_FIRST: dict[str, int] = {
-    # (Round-8 prune: the three r7 pins — cross_modal_curation_stats,
-    # simhash_documents, simhash_near_dup_pairs — landed green rows in
-    # CORRECTNESS_r07 and retired. For the record, corrected per round-7
-    # ADVICE: the two simhash consumers were routed through the new
-    # wide/narrow flag and the extracted simhash_bit_band_keys helper
-    # while KEEPING the explode plan (wide=False — the wide 63-buffer
-    # aggregate's ~0.7 s codegen compile constant dominates 100-doc
-    # slices); the wide aggregate serves corpus-scale probe calls.
-    # Repopulate whenever a shipped plan/oracle changes.)
-    #
-    # (Round-9 prune: the two r8 pins — lsh_auto_planes_volume,
-    # simhash_near_dup_pairs — landed green rows in CORRECTNESS_r08
-    # and retired.)
-    #
-    # round 9: nation_year_profit upgraded in place from the
-    # retailprice-proxy Q9 to the TRUE Q9 over the synthesized
-    # partsupp twin (plan AND oracle changed — unit cost now
-    # ps_supplycost_cents/100 joined on the composite key); re-verify
-    # under the driver.
-    "nation_year_profit": 9,
-}
-
-
-# The driver verifies this many registry-prefix entries per round — the
-# constant every slot-budget computation below is denominated in.
-_WINDOW_SLOTS = 50
-
-# Rows-only analog of _PINNED_FIRST: the query's EXECUTED PLAN is known
-# to have changed (not merely its module file), so it outranks the
-# automatic module-changed re-entries for the capped re-entry slots.
-# Retires once the driver sees the query in a round >= the pin round.
-_ROWS_ONLY_PINNED: dict[str, int] = {
-    # round 10: ivf_search was split out of ivf_topk after the r3
-    # rows-only row — the driver record implies r3-era code ran
-    # (round-9 VERDICT "What's wrong" item 1, the motivating case).
-    "embedding_ivf_topk": 10,
-}
-
-# Age-based rows-only re-entry (round-10 VERDICT item 2): a rows-only
-# driver record this many rounds old re-enters the window even when the
-# implementing module is unchanged — an r2/r3-era "it executed" row
-# carries little evidentiary weight eight rounds later, and the
-# module-changed rule alone never refreshes untouched code
-# (minhash_lsh_near_dups r3, stratified_event_sample r3,
-# approx_value_percentiles r2 were permanently stale under it).
-_MAX_ROWS_ONLY_AGE = 6
-
-# Age-triggered re-entries get up to this many GUARANTEED slots even
-# when the oldest-green cohort fills the window (it did in r11: the r8
-# cohort is exactly 50 queries). Each guaranteed slot displaces the
-# TAIL of that cohort by one round — deliberately the right trade: an
-# 8-round-stale "it executed" row is far weaker evidence than a
-# 1-round-stale hash row, and without the guarantee the age rule could
-# never fire in a full window. Module-changed-only re-entries still
-# take leftover slots only, never cohort slots.
-_AGE_REENTRY_SLOTS = 3
-
-
-def _rows_only_reentries(
-    last_green: dict[str, int],
-    last_seen: dict[str, int],
-    latest_round: int,
-    module_changed: Callable[[str, int], bool],
-) -> frozenset[str]:
-    """Rows-only queries that RE-ENTER the driver window this round:
-    driver-seen before, but EITHER their implementing module changed
-    since that round (round-9 VERDICT item 3 — the stale record no
-    longer describes the committed code) OR the record is at least
-    ``_MAX_ROWS_ONLY_AGE`` rounds old (round-10 VERDICT item 2 —
-    unchanged code with an ancient record still deserves a periodic
-    refresh). Capped at the window slots
-    LEFT OVER after (a) active plan-change pins, (b) oracled queries
-    with no green row yet, (c) never-seen rows-only queries, and
-    (d) the full oldest-green cohort — so re-entries never stall the
-    freshness floor (round-9 VERDICT item 8: the floor must keep
-    advancing) — EXCEPT that age-triggered candidates hold up to
-    ``_AGE_REENTRY_SLOTS`` guaranteed slots taken from the cohort's
-    tail when the cohort alone fills the window (see the constant's
-    comment for why that trade is correct). Within the cap: explicit
-    _ROWS_ONLY_PINNED first, then oldest-seen first, name as the
-    total-order tiebreak."""
-    pins = sum(
-        1 for n, rnd in _PINNED_FIRST.items()
-        if n in REGISTRY and last_green.get(n, 0) < rnd
-    )
-    deferred = {
-        n for n, rnd in _DEFER_TO_ROUND.items() if latest_round < rnd - 1
-    }
-    never_green = sum(
-        1
-        for n, q in REGISTRY.items()
-        if q.oracle is not None and n not in last_green and n not in deferred
-    )
-    never_seen = sum(
-        1
-        for n, q in REGISTRY.items()
-        if q.oracle is None and n not in last_seen and n not in deferred
-    )
-    green_rounds = [
-        rnd for n, rnd in last_green.items()
-        if n in REGISTRY and REGISTRY[n].oracle is not None
-    ]
-    oldest_cohort = (
-        sum(1 for r in green_rounds if r == min(green_rounds)) if green_rounds else 0
-    )
-    budget = max(0, _WINDOW_SLOTS - pins - never_green - never_seen)
-    free = max(0, budget - oldest_cohort)
-    candidates = sorted(
-        (
-            n
-            for n, q in REGISTRY.items()
-            if q.oracle is None
-            and n in last_seen
-            and n not in deferred
-            and (
-                module_changed(n, last_seen[n])
-                or latest_round - last_seen[n] >= _MAX_ROWS_ONLY_AGE
-            )
-        ),
-        key=lambda n: (
-            0
-            if last_seen.get(n, 0) < _ROWS_ONLY_PINNED.get(n, 0)
-            else 1,
-            last_seen[n],
-            n,
-        ),
-    )
-    # guaranteed floor for EXTREME staleness only: when the oldest-green
-    # cohort leaves no free slots, up to _AGE_REENTRY_SLOTS of the AGED
-    # candidates still enter (bounded by the post-mandatory budget so
-    # they can never evict a pin or a never-verified query). The floor
-    # is reserved for aged candidates BY NAME, not taken as a larger
-    # front slice of the combined list: a fresher pinned/module-changed
-    # candidate sorts first and would otherwise consume the guaranteed
-    # slots while the extreme-staleness records the floor exists for
-    # stay stale forever (round-11 review)
-    aged_set = {
-        n for n in candidates if latest_round - last_seen[n] >= _MAX_ROWS_ONLY_AGE
-    }
-    take_free = candidates[:free]
-    want_aged = min(len(aged_set), _AGE_REENTRY_SLOTS, budget)
-    have_aged = sum(1 for n in take_free if n in aged_set)
-    extra_aged = [n for n in candidates if n in aged_set and n not in take_free][
-        : max(0, min(want_aged - have_aged, budget - free))
-    ]
-    return frozenset(take_free) | frozenset(extra_aged)
+        for name, row in rows.items() if isinstance(rows, dict) else ():
+            q = REGISTRY.get(name)
+            if q is not None and isinstance(row, dict) and (
+                row.get("hash_match") is True if q.oracle is not None
+                else row.get("err") in (None, "no_oracle")
+            ):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
 
 
 def _ordered_names() -> list[str]:
-    last_green, last_seen, latest_round = _driver_history()
-    reentries = _rows_only_reentries(
-        last_green, last_seen, latest_round, _module_changed_since_round
-    )
-
-    def rank(name: str) -> tuple[int, int, int, int]:
-        q = REGISTRY[name]
-        mod = q.fn.__module__.rsplit(".", 1)[-1]
-        sub = 0
-        if name in _DEFER_TO_ROUND and latest_round < _DEFER_TO_ROUND[name] - 1:
-            bucket = 9  # mid-round addition: yields this window entirely
-        elif name in _PINNED_FIRST and last_green.get(name, 0) < _PINNED_FIRST[name]:
-            bucket = 0  # plan/oracle changed this round — re-verify first
-        elif q.oracle is not None and name not in last_green:
-            bucket = 1  # exact check available but no green driver row yet
-        elif q.oracle is None and name not in last_seen:
-            bucket = 2  # rows-only, never even driver-seen
-        elif q.oracle is None and name in reentries:
-            bucket = 2  # rows-only whose module drifted past its driver
-            # record — slot-capped re-entry (round-9 VERDICT item 3),
-            # sorted after the never-seen rows
-            sub = 1
-        elif q.oracle is not None:
-            bucket = 3  # hash-verified: least-recently-verified first, so
-            # the window is a rotating re-verification budget (round-3
-            # VERDICT item 1 — evidence freshness, oldest rows first)
-        else:
-            bucket = 4  # rows-only, already driver-seen, code unchanged
-            # since: a repeat rows-only check adds nothing, so these
-            # yield their slots to the hash-verified rotation
-        age = last_green.get(name, 0) if bucket == 3 else 0
-        return (bucket, sub, age, _MODULE_RANK.get(mod, 99))
-
-    return sorted(REGISTRY, key=rank)  # stable: insertion order within a bucket
+    """The driver verifies a 50-entry prefix of this order per round, so
+    the order is a rotation: least recently verified first (never
+    verified counts as round 0), then name. A changed plan waits at most
+    ceil(len(REGISTRY) / 50) rounds; local oracle parity covers it on
+    every pytest run meanwhile."""
+    last = _last_verified()
+    return sorted(REGISTRY, key=lambda n: (last.get(n, 0), n))
 
 
 def queries() -> dict[str, QueryFn]:
