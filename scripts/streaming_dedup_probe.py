@@ -31,8 +31,6 @@ Run (the corpus-independence pair — same rate, 64x the index):
   python scripts/streaming_dedup_probe.py --rate 100000 --corpus-docs 384000
 
 Round-10 cells:
-  --bucketed                   corpus index as a bucketed catalog table;
-                               `corpus_join_exchanges` drops by one
   --compact-max-partitions K   tiered in-sink fold (bounded fold width)
   --max-rows-per-trigger N     admission control: overload becomes
                                backlog (`implied_backlog_rows`) instead
@@ -74,11 +72,7 @@ def replicate_band_index(base_idx, k: int):
     per-copy REHASHED buckets (md5(bucket || copy)) so each copy keeps
     the base's bucket-occupancy distribution without colliding into
     the base's buckets — the corpus side of the mine join grows k-fold
-    with realistic posting-list shapes. ONE definition shared by this
-    probe and bucketed_index_decomp_probe: the two scripts' measured
-    cells are only comparable if their corpus constructions are
-    identical, so the construction lives in exactly one place
-    (round-11 review)."""
+    with realistic posting-list shapes."""
     copies = [base_idx]
     for c in range(1, k):
         copies.append(
@@ -175,21 +169,6 @@ def main() -> None:
         "item 6)",
     )
     ap.add_argument(
-        "--bucketed",
-        action="store_true",
-        help="store the corpus index as a bucketed (band, bucket) "
-        "catalog table — the per-batch join then plans with NO "
-        "corpus-side Exchange (round-9 VERDICT item 2); the probe "
-        "records the plan's Exchange count either way",
-    )
-    ap.add_argument(
-        "--index-buckets",
-        type=int,
-        default=32,
-        help="bucket count for --bucketed (layout contract; 32 for the "
-        "local probe, warehouse-scale would pick e.g. 4096)",
-    )
-    ap.add_argument(
         "--max-rows-per-trigger",
         type=int,
         default=0,
@@ -214,8 +193,7 @@ def main() -> None:
         type=int,
         default=1,
         help="replicate the bootstrap index this many times (per-copy "
-        "doc prefixes, per-copy REHASHED buckets — same construction "
-        "as bucketed_index_decomp_probe --replicate) so the LIVE wire "
+        "doc prefixes, per-copy REHASHED buckets) so the LIVE wire "
         "can run against a corpus far past what local minhashing can "
         "bootstrap in a probe window; stream dups keep matching copy-0 "
         "docs, the corpus side of the join grows K-fold",
@@ -262,13 +240,9 @@ def main() -> None:
         F.concat(F.lit("c"), F.col("id")).alias("doc_id"),
         synth_text(F.col("id")).alias("text"),
     )
-    index_table = "probe_lsh_idx" if args.bucketed else None
-    if index_table:
-        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
     if args.replicate > 1:
         from webscrap_datapipeline_spark.streaming.dedup_stream import (
             _write_index_partition,
-            register_lsh_index_table,
         )
 
         # minhash the base corpus once into a scratch dir, replicate
@@ -287,16 +261,10 @@ def main() -> None:
         # contaminate) the new corpus (round-11 review);
         # bootstrap_lsh_index does this wipe itself on the normal path
         shutil.rmtree(index_dir, ignore_errors=True)
-        if index_table:
-            register_lsh_index_table(
-                spark, index_table, index_dir, num_buckets=args.index_buckets
-            )
-        _write_index_partition(big, -1, index_dir, index_table, args.index_buckets)
+        _write_index_partition(big, -1, index_dir)
         shutil.rmtree(scratch, ignore_errors=True)
     else:
-        bootstrap_lsh_index(
-            corpus, index_dir, index_table=index_table, index_buckets=args.index_buckets
-        )
+        bootstrap_lsh_index(corpus, index_dir)
     print(
         json.dumps(
             {
@@ -352,8 +320,6 @@ def main() -> None:
         pairs_dir,
         compact_every=args.compact_every or None,
         compact_max_partitions=args.compact_max_partitions or None,
-        index_table=index_table,
-        index_buckets=args.index_buckets,
         retain_batches=args.retain_batches or None,
     )
     if args.outage_seconds:
@@ -394,8 +360,7 @@ def main() -> None:
     )
     # plan-shape evidence: Exchange count of the per-batch corpus join
     # exactly as the sink builds it (broadcast off so the structure is
-    # visible) — bucketed layout must show ONE fewer (no corpus-side
-    # shuffle; round-9 VERDICT item 2)
+    # visible)
     from webscrap_datapipeline_spark.operators.dedup import (
         incremental_lsh_candidates_from_index,
         lsh_band_index,
@@ -408,9 +373,7 @@ def main() -> None:
         synth_text(F.col("id")).alias("text"),
     )
     probe_idx = lsh_band_index(minhash_signatures(probe_doc, "text", "doc_id"))
-    corpus_df = (
-        spark.table(index_table) if index_table else spark.read.parquet(index_dir)
-    ).filter(F.col("__batch_id") < 10**9)
+    corpus_df = spark.read.parquet(index_dir).filter(F.col("__batch_id") < 10**9)
     join_plan = (
         incremental_lsh_candidates_from_index(corpus_df, probe_idx)
         ._jdf.queryExecution()
@@ -440,7 +403,6 @@ def main() -> None:
         "compact_every": args.compact_every,
         "compact_max_partitions": args.compact_max_partitions,
         "retain_batches": args.retain_batches,
-        "bucketed": bool(args.bucketed),
         "corpus_join_exchanges": corpus_join_exchanges,
         "index_partitions_end": n_index_parts,
         "batches_measured": len(usable),

@@ -604,44 +604,184 @@ def test_ann_ivf_kind_matches_batch_ivf_search(spark, sf_dir, tmp_path):
         incremental_ann_sink(index_dir, dim=DIM, centroids=other)(b0, 2)
 
 
-# test_ann_bucketed_layout_serves_identically_and_prunes_the_scan moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
-
-
-def test_choose_ann_layout_policy():
-    """The measured serve-layout policy (SCALE.md r12): flat below the
-    cold-cache crossover; above it a power-of-two P sized to the query
-    batch so the base probe set prunes to ≲1/8 of the parts; unknown
-    corpus → flat; P clamped to the namespace ceiling."""
+def test_ann_geometry_migration_adopts_new_geometry(spark, sf_dir, tmp_path):
+    """migrate_ann_index_geometry (round-11 VERDICT item 3): a
+    retrained codebook / changed plane count is adopted by ONE whole-corpus re-bucket fold. After migration the
+    index answers exactly what the batch operator answers under the
+    NEW geometry over the same corpus, historical cuts keep answering
+    (per-row __ingest survives), the retention age marker carries
+    over, and the sink accepts only the new geometry."""
+    from webscrap_datapipeline_spark.operators.clustering import (
+        hash_sample_vectors,
+    )
+    from webscrap_datapipeline_spark.operators.similarity import ivf_search
     from webscrap_datapipeline_spark.streaming.ann_stream import (
-        BUCKETED_SERVE_BREAKEVEN_VECS,
-        choose_ann_layout,
+        migrate_ann_index_geometry,
     )
 
-    assert choose_ann_layout(0) is None
-    assert choose_ann_layout(-5) is None
-    assert choose_ann_layout(BUCKETED_SERVE_BREAKEVEN_VECS - 1) is None
-    p = choose_ann_layout(BUCKETED_SERVE_BREAKEVEN_VECS)
-    assert p == 64  # default batch 8 → 8×8 → min_parts floor
-    assert choose_ann_layout(10**8, query_batch=100) == 1024
-    assert choose_ann_layout(10**9, query_batch=10**6) == 4096  # clamped
-    # every returned P is a power of two (Hamming-1 probes then stay
-    # within 1 + log2 P parts per query)
-    for qb in (1, 8, 33, 100, 5000):
-        p = choose_ann_layout(10**8, query_batch=qb)
-        assert p & (p - 1) == 0
+    emb = _emb(spark, sf_dir)
+    index_dir = str(tmp_path / "ann_idx")
+    boot = emb.filter(F.col("vec_id") < 200)
+    b0 = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 300))
+    b1 = emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400))
+    queries = _queries(emb, 400, 405)
+    cols = ("query_id", "vec_id", "rnk")
+
+    bootstrap_ann_index(boot, index_dir, dim=DIM, n_planes=6)
+    sink = incremental_ann_sink(index_dir, dim=DIM, n_planes=6)
+    sink(b0, 0)
+    sink(b1, 1)
+
+    # the retrained production codebook, trained on the live corpus
+    full = boot.unionByName(b0).unionByName(b1)
+    cents = hash_sample_vectors(full, "embedding", "vec_id", 8)
+    out = migrate_ann_index_geometry(spark, index_dir, centroids=cents)
+    assert out["migrated_partitions"] == 3 and out["rows"] == full.count()
+
+    geo = read_ann_geometry(spark, index_dir)
+    assert geo["kind"] == "ivf"
+    want = ivf_search(
+        full, queries, [(i, c) for i, c in enumerate(cents)], k=5, nprobe=2
+    )
+    got = ann_query_index(spark, index_dir, queries, k=5, nprobe=2)
+    assert _rows(got, *cols) == _rows(want, *cols) and got.count() > 0
+
+    # the historical cut answers the OLD prefix under the NEW geometry
+    prefix = boot.unionByName(b0)
+    want_cut = ivf_search(
+        prefix, queries, [(i, c) for i, c in enumerate(cents)], k=5, nprobe=2
+    )
+    got_cut = ann_query_index(spark, index_dir, queries, k=5, nprobe=2, upto_batch_id=1)
+    assert _rows(got_cut, *cols) == _rows(want_cut, *cols)
+
+    # retention age carried over from the folded sources
+    from webscrap_datapipeline_spark.fsutil import fs_read_text
+
+    assert fs_read_text(
+        spark, f"{index_dir}/__batch_id={out['new_partition_id']}/.maxbatch"
+    ).strip() == "1"
+
+    # the sink now accepts ONLY the new geometry
+    b2 = emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 450))
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(b2, 2)
+    incremental_ann_sink(index_dir, dim=DIM, centroids=cents)(b2, 2)
+    assert read_ann_index(spark, index_dir).count() == full.count() + b2.count()
+
+    # migrating to the geometry the index already has is a no-op
+    again = migrate_ann_index_geometry(spark, index_dir, centroids=cents)
+    assert again["migrated_partitions"] == 0
 
 
-# test_ann_bucketed_layout_ivf_kind moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
+def test_ann_geometry_migration_crash_windows_recover(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The migration swap's crash windows: a crash between rename-aside
+    and rename-in leaves no index at index_dir (readers fail LOUDLY —
+    never mixed geometry) with a COMPLETE scratch; re-running finishes
+    the swap. A crash that left the old dir renamed aside with an
+    incomplete scratch restores the old index and redoes the work. An
+    uncommitted partition above the checkpoint watermark aborts."""
+    import webscrap_datapipeline_spark.streaming.ann_stream as anns
+
+    emb = _emb(spark, sf_dir)
+    index_dir = str(tmp_path / "ann_idx")
+    corpus = emb.filter(F.col("vec_id") < 150)
+    queries = _queries(emb, 200, 203)
+    cols = ("query_id", "vec_id", "rnk")
+    bootstrap_ann_index(corpus, index_dir, dim=DIM, n_planes=6)
+    sink = incremental_ann_sink(index_dir, dim=DIM, n_planes=6)
+    sink(emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200)), 0)
+    all_corpus = emb.filter(F.col("vec_id") < 200)
+
+    real = anns.fs_rename
+    calls = {"n": 0}
+
+    def crash_on_second(spark_, src, dst):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash mid-swap")
+        return real(spark_, src, dst)
+
+    monkeypatch.setattr(anns, "fs_rename", crash_on_second)
+    with pytest.raises(RuntimeError, match="mid-swap"):
+        anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
+    monkeypatch.setattr(anns, "fs_rename", real)
+
+    # the loud window: no index at index_dir, no mixed answers possible
+    assert not os.path.exists(index_dir)
+    with pytest.raises(ValueError, match="no ANN index"):
+        ann_query_index(spark, index_dir, queries, k=3)
+
+    # re-run finishes the swap from the complete scratch
+    out = anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
+    assert out.get("recovered") is True
+    assert not os.path.exists(index_dir + ".migrate_old")
+    assert not os.path.exists(index_dir + ".migrate_scratch")
+    assert read_ann_geometry(spark, index_dir)["n_planes"] == 4
+    want = lsh_topk(all_corpus, queries, k=3, dim=DIM, n_planes=4)
+    got = ann_query_index(spark, index_dir, queries, k=3)
+    assert _rows(got, *cols) == _rows(want, *cols) and got.count() > 0
+
+    # incomplete-scratch window: old dir renamed aside, scratch junk
+    os.rename(index_dir, index_dir + ".migrate_old")
+    os.makedirs(index_dir + ".migrate_scratch/__batch_id=-9", exist_ok=True)
+    out2 = anns.migrate_ann_index_geometry(spark, index_dir, n_planes=6)
+    assert out2["migrated_partitions"] > 0
+    assert read_ann_geometry(spark, index_dir)["n_planes"] == 6
+    want6 = lsh_topk(all_corpus, queries, k=3, dim=DIM, n_planes=6)
+    assert _rows(
+        ann_query_index(spark, index_dir, queries, k=3), *cols
+    ) == _rows(want6, *cols)
+
+    # uncommitted partition above the watermark aborts (fresh ckpt:
+    # wm=-1, so the batch-5 partition is provably uncommitted)
+    incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(
+        emb.filter(F.col("vec_id") == 250), 5
+    )
+    with pytest.raises(ValueError, match="committed watermark"):
+        anns.migrate_ann_index_geometry(
+            spark, index_dir, n_planes=4,
+            checkpoint_dir=str(tmp_path / "ckpt_none"),
+        )
 
 
-# test_ann_geometry_migration_adopts_new_geometry moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
+def test_ann_legacy_bucket_parts_sidecar_fails_loudly(spark, sf_dir, tmp_path):
+    """The ``bucket_parts`` serve-prune layout was removed. An index
+    whose sidecar still pins it is outside input: every reader and
+    writer refuses it with a re-bootstrap message instead of serving or
+    appending under a layout nothing writes any more, and a
+    re-bootstrap replaces it."""
+    from webscrap_datapipeline_spark.fsutil import fs_write_text
+    from webscrap_datapipeline_spark.streaming.ann_stream import (
+        GEOMETRY_FILE,
+        migrate_ann_index_geometry,
+    )
 
-
-# test_ann_geometry_migration_crash_windows_recover moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
+    emb = _emb(spark, sf_dir)
+    index_dir = str(tmp_path / "ann_idx")
+    corpus = emb.filter(F.col("vec_id") < 50)
+    bootstrap_ann_index(corpus, index_dir, dim=DIM, n_planes=6)
+    geo = read_ann_geometry(spark, index_dir)
+    fs_write_text(
+        spark,
+        f"{index_dir}/{GEOMETRY_FILE}",
+        _json.dumps({**geo, "bucket_parts": 8}, sort_keys=True),
+    )
+    removed = "layout removed, re-bootstrap"
+    batch = emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
+    for call in (
+        lambda: read_ann_index(spark, index_dir),
+        lambda: ann_query_index(spark, index_dir, _queries(emb, 60, 62), k=3),
+        lambda: incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(batch, 0),
+        lambda: compact_ann_index(spark, index_dir, upto_batch_id=0),
+        lambda: migrate_ann_index_geometry(spark, index_dir, n_planes=4),
+    ):
+        with pytest.raises(ValueError, match=removed):
+            call()
+    bootstrap_ann_index(corpus, index_dir, dim=DIM, n_planes=6)
+    assert read_ann_geometry(spark, index_dir) == geo
+    assert read_ann_index(spark, index_dir).count() == corpus.count()
 
 
 def test_ann_wrong_kind_recall_knob_and_malformed_codebook_fail_loudly(

@@ -136,6 +136,49 @@ def test_missing_file_gets_null_log_row(spark, workspace):
     assert res2.changed_keys == 1  # CHARLIE still pending
 
 
+def test_uri_paths_and_a_failed_swap_rename_keep_every_warehouse_row(
+    spark, workspace, monkeypatch
+):
+    """Every path a cycle touches goes through the Hadoop FileSystem for
+    its own scheme, so ``file://`` URIs work. A warehouse swap whose
+    second rename fails (reported as False, as a FileSystem does) must
+    raise, and the next cycle must restore the renamed-aside warehouse
+    instead of rebuilding it from the new batch alone."""
+    from pathlib import Path
+
+    from webscrap_datapipeline_spark import fsutil
+
+    uri = {k: Path(v).as_uri() for k, v in workspace.items()}
+    args = (uri["raw"] + "/*.csv", uri["state"], uri["warehouse"], uri["log"])
+    _write_raw(workspace["raw"], "ALPHA", "08132026_10-00-00", 5)
+    res = run_incremental(spark, _available(spark, [("ALPHA", "v1")]), *args)
+    assert (res.changed_keys, res.loaded_rows) == (1, 5)
+
+    _write_raw(workspace["raw"], "BRAVO", "08132026_10-30-00", 3)
+    listing = _available(spark, [("ALPHA", "v1"), ("BRAVO", "v1")])
+    real, calls = fsutil.fs_rename, []
+
+    def fail_second(spark_, src, dst):
+        calls.append((src, dst))
+        return False if len(calls) == 2 else real(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "fs_rename", fail_second)
+    with pytest.raises(IOError, match="fs_swap"):
+        run_incremental(spark, listing, *args)
+    monkeypatch.setattr(fsutil, "fs_rename", real)
+    assert not os.path.exists(workspace["warehouse"])  # the crash window
+
+    # the committed state and the restored warehouse are both found:
+    # only BRAVO is new, and ALPHA's rows are kept
+    res = run_incremental(spark, listing, *args)
+    assert (res.changed_keys, res.loaded_rows) == (1, 8)
+    wh = spark.read.parquet(uri["warehouse"])
+    assert wh.filter(F.col("LOC_ID") == "ALPHA").count() == 5
+    assert read_state(spark, uri["state"]).count() == 2
+    for leftover in (".old", ".staging"):
+        assert not os.path.exists(workspace["warehouse"] + leftover)
+
+
 def test_pipeline_quarantine_stage_diverts_bad_rows(spark, workspace, tmp_path):
     """Optional quarantine stage: rows violating load rules leave the
     warehouse path as data (with reasons) — never silently swallowed

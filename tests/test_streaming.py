@@ -876,90 +876,6 @@ def test_sink_compact_every_folds_inside_the_batch_thread(spark, tmp_path):
     assert got == {("n3", "c1"), ("n3", "n2")}
 
 
-def test_auto_layout_picks_and_sink_follows_the_disk(spark, tmp_path, monkeypatch):
-    """round-10 VERDICT item 3 (auto-switch): (1) choose_index_layout
-    implements the measured two-regime policy — plain for any batch
-    inside the broadcast envelope (no corpus shuffle exists to elide),
-    the >=8x corpus:batch break-even only above it; (2) an auto-layout
-    bootstrap below break-even writes PLAIN and registers no table;
-    (3) the sink handed the same index_table FOLLOWS the on-disk plain
-    layout — no 'Invalid bucket file', no lost pairs, no accidental
-    catalog entry; (4) above break-even auto writes bucketed and the
-    sink uses the catalog. (2)/(4) shrink the measured constants to
-    test-corpus scale — the mechanism under test is the plumbing, the
-    constants are measured policy pinned by (1)."""
-    from webscrap_datapipeline_spark.streaming import dedup_stream as ds
-    from webscrap_datapipeline_spark.streaming.dedup_stream import (
-        BROADCASTABLE_BATCH_DOCS,
-        BUCKETED_BREAKEVEN_RATIO,
-        bootstrap_lsh_index,
-        choose_index_layout,
-        incremental_near_dup_sink,
-    )
-
-    env, r = BROADCASTABLE_BATCH_DOCS, BUCKETED_BREAKEVEN_RATIO
-    # regime 1: broadcastable batch -> plain at ANY ratio
-    assert choose_index_layout(10**12, env - 1) == "plain"
-    # regime 2: above-envelope batch -> the ratio gate
-    assert choose_index_layout(env * r, env) == "bucketed"  # at the bar
-    assert choose_index_layout(env * r - 1, env) == "plain"  # just under
-    assert choose_index_layout(10**12, 0) == "plain"  # unknown batch
-    assert choose_index_layout(0, env) == "plain"  # empty corpus
-
-    # shrink the measured constants so a 10-30 doc corpus exercises
-    # both auto branches (see docstring)
-    monkeypatch.setattr(ds, "BROADCASTABLE_BATCH_DOCS", 1)
-    monkeypatch.setattr(ds, "BUCKETED_BREAKEVEN_RATIO", 25)
-
-    t_a = "alpha beta gamma delta epsilon zeta eta theta"
-    table = "lsh_idx_auto_layout_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    corpus = spark.createDataFrame(
-        [(f"c{i}", f"{t_a} {i}") for i in range(10)], "doc_id string, text string"
-    )
-
-    # 10-doc corpus, 1000-doc expected batches: far below break-even
-    plain_dir = str(tmp_path / "idx_plain")
-    got = bootstrap_lsh_index(
-        corpus, plain_dir, index_table=table, layout="auto",
-        expected_batch_docs=1000,
-    )
-    assert got == "plain"
-    assert not spark.catalog.tableExists(table)
-    sink = incremental_near_dup_sink(
-        str(plain_dir), str(tmp_path / "pairs_plain"), index_table=table
-    )
-    sink(
-        spark.createDataFrame([("n1", f"{t_a} 3")], "doc_id string, text string"), 0
-    )
-    got_pairs = {
-        (r_["doc_a"], r_["doc_b"])
-        for r_ in spark.read.parquet(str(tmp_path / "pairs_plain")).collect()
-    }
-    # the corpus docs are near-dups of each other by construction, so
-    # the exact pair set is wide; the property under test is that the
-    # batch mined against the REAL corpus (not an empty fall-through)
-    assert ("n1", "c3") in got_pairs
-    assert {b for _, b in got_pairs} <= {f"c{i}" for i in range(10)}
-    assert not spark.catalog.tableExists(table)  # still plain after the batch
-
-    # 30-doc corpus with 1-doc expected batches: ratio >= 25 holds,
-    # auto picks bucketed and registers the catalog entry
-    big_corpus = spark.createDataFrame(
-        [(f"c{i}", f"{t_a} {i}") for i in range(30)], "doc_id string, text string"
-    )
-    bkt_dir = str(tmp_path / "idx_bkt")
-    got = bootstrap_lsh_index(
-        big_corpus, bkt_dir, index_table=table, layout="auto", expected_batch_docs=1
-    )
-    assert got == "bucketed" and spark.catalog.tableExists(table)
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-# test_migrate_plain_index_to_bucketed_preserves_mining moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
-
-
 def test_index_retention_prunes_by_newest_ingest_and_bounds_the_corpus(
     spark, tmp_path
 ):
@@ -973,12 +889,12 @@ def test_index_retention_prunes_by_newest_ingest_and_bounds_the_corpus(
     NEWEST content expired; (3) an unmarked (legacy) chunk is never
     pruned — unknown age fails safe."""
     from webscrap_datapipeline_spark.streaming.dedup_stream import (
-        _max_ingest_batch,
         bootstrap_lsh_index,
         compact_lsh_index,
         incremental_near_dup_sink,
         prune_lsh_index,
     )
+    from webscrap_datapipeline_spark.streaming.index_core import max_ingest_marker
 
     t_a = "alpha beta gamma delta epsilon zeta eta theta"
     t_b = "one two three four five six seven eight nine"
@@ -1011,7 +927,7 @@ def test_index_retention_prunes_by_newest_ingest_and_bounds_the_corpus(
     stats = compact_lsh_index(spark, index_dir, upto_batch_id=2)
     cid = stats["new_partition_id"]
     base = index_dir.rstrip("/")
-    assert _max_ingest_batch(spark, base, cid) == 2
+    assert max_ingest_marker(spark, base, cid) == 2
     assert prune_lsh_index(spark, index_dir, min_batch_id=2)["pruned_ids"] == []
     assert prune_lsh_index(spark, index_dir, min_batch_id=3)["pruned_ids"] == [cid]
 
@@ -1020,7 +936,7 @@ def test_index_retention_prunes_by_newest_ingest_and_bounds_the_corpus(
     spark.createDataFrame(
         [("x", 0, "b")], "doc string, band int, bucket string"
     ).write.mode("overwrite").parquet(f"{base}/__batch_id=-9")
-    assert _max_ingest_batch(spark, base, -9) is None
+    assert max_ingest_marker(spark, base, -9) is None
     assert prune_lsh_index(spark, index_dir, min_batch_id=10**6)["pruned_ids"] == []
 
 
@@ -1224,45 +1140,119 @@ def test_sink_compaction_follows_non_string_doc_type(spark, tmp_path):
     assert got == {(300, 100), (300, 202)}
 
 
-def test_sink_reregisters_bucketed_table_from_on_disk_index(spark, tmp_path):
-    """round-10 ADVICE item 2: index_table set, the catalog entry
-    missing (fresh metastore), but index_dir already populated — the
-    sink must re-register and mine against the REAL corpus, never fall
-    through to an empty one (which would permanently and silently lose
-    that batch's pairs against the entire prior corpus)."""
+def test_tiered_compaction_bounds_fold_width_and_clamps_to_checkpoint(
+    spark, tmp_path
+):
+    """round-10 (VERDICT items 4/6 + round-9 ADVICE): (1) with
+    ``checkpoint_dir`` given, compact_lsh_index CLAMPS upto_batch_id to
+    the checkpoint's committed watermark — a maintenance caller cannot
+    fold a replayable batch; (2) ``max_fold_partitions=K`` folds only
+    the K oldest batch partitions (bounded fold width — no whole-corpus
+    rewrite in one cadence); (3) chunk merging is size-tiered and
+    bounded by ``chunk_merge_at``; (4) index CONTENT survives every
+    fold shape and mining stays exact."""
     from webscrap_datapipeline_spark.streaming.dedup_stream import (
         bootstrap_lsh_index,
+        compact_lsh_index,
         incremental_near_dup_sink,
     )
 
-    t_a = "alpha beta gamma delta epsilon zeta eta theta"
+    texts = [
+        "alpha beta gamma delta epsilon zeta eta theta",
+        "one two three four five six seven eight nine",
+        "red orange yellow green blue indigo violet shades",
+        "north south east west up down left right center",
+        "apple pear plum grape mango papaya kiwi lime",
+        "stone iron bronze silver gold platinum copper tin",
+    ]
     index_dir = str(tmp_path / "lsh_index")
     pairs_dir = str(tmp_path / "pairs")
-    table = "lsh_idx_reregister_test"
-    corpus = spark.createDataFrame([("c1", t_a)], "doc_id string, text string")
-    bootstrap_lsh_index(corpus, index_dir, index_table=table, index_buckets=8)
-    # simulate the fresh-metastore session: catalog entry gone, files
-    # (bucketed layout, bucket ids in the names) still on disk
-    spark.sql(f"DROP TABLE {table}")
-    assert not spark.catalog.tableExists(table)
-
-    sink = incremental_near_dup_sink(
-        index_dir, pairs_dir, index_table=table, index_buckets=8
+    bootstrap_lsh_index(
+        spark.createDataFrame(
+            [("c1", texts[0]), ("c2", texts[1])], "doc_id string, text string"
+        ),
+        index_dir,
     )
+    sink = incremental_near_dup_sink(index_dir, pairs_dir)
+    for i in range(6):  # batches 0..5, all distinct texts
+        sink(
+            spark.createDataFrame(
+                [(f"n{i}", texts[i] + f" tail{i}")], "doc_id string, text string"
+            ),
+            i,
+        )
+    pre_rows = {
+        tuple(r)
+        for r in spark.read.parquet(index_dir)
+        .select("doc", "band", "bucket")
+        .collect()
+    }
+
+    # (1) clamp: checkpoint committed only batches 0 and 1 -> an
+    # upto=99 request folds just {-1, 0, 1}
+    ckpt = tmp_path / "ckpt"
+    (ckpt / "commits").mkdir(parents=True)
+    for name in ("0", "1"):
+        (ckpt / "commits" / name).write_text("v1")
+    stats = compact_lsh_index(
+        spark, index_dir, upto_batch_id=99, checkpoint_dir=str(ckpt)
+    )
+    assert stats["folded_partitions"] == 3
+    assert stats["new_partition_id"] == -2
+    parts = lambda: {
+        r[0]
+        for r in spark.read.parquet(index_dir)
+        .select("__batch_id")
+        .distinct()
+        .collect()
+    }
+    assert parts() == {-2, 2, 3, 4, 5}
+
+    # (2) tiered fold K=3: only the 3 oldest batch partitions fold;
+    # the existing chunk (-2) is NOT re-absorbed
+    stats = compact_lsh_index(
+        spark, index_dir, upto_batch_id=5, max_fold_partitions=3
+    )
+    assert stats["folded_partitions"] == 3  # {2, 3, 4}
+    assert stats["new_partition_id"] == -3
+    assert "merged_chunks" not in stats  # 2 chunks < default chunk_merge_at
+    assert parts() == {-3, -2, 5}
+
+    # (3) chunk merge at threshold 2: batch tier has only {5} (no fold
+    # of a single partition), chunks {-2, -3} merge into one
+    stats = compact_lsh_index(
+        spark,
+        index_dir,
+        upto_batch_id=5,
+        max_fold_partitions=3,
+        chunk_merge_at=2,
+    )
+    assert stats["folded_partitions"] == 0
+    assert stats["merged_chunks"] == 2
+    assert stats["chunk_partition_id"] == -4
+    assert parts() == {-4, 5}
+
+    # (4) content identical through every fold shape, and mining across
+    # the folded layout is exact: n6 dups n5's text
+    assert {
+        tuple(r)
+        for r in spark.read.parquet(index_dir)
+        .select("doc", "band", "bucket")
+        .collect()
+    } == pre_rows
     sink(
-        spark.createDataFrame([("n1", t_a)], "doc_id string, text string"), 0
+        spark.createDataFrame(
+            [("n6", texts[5] + " tail5")], "doc_id string, text string"
+        ),
+        6,
     )
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in spark.read.parquet(pairs_dir).filter(F.col("__batch_id") == 0).collect()
+        for r in spark.read.parquet(pairs_dir)
+        .filter(F.col("__batch_id") == 6)
+        .collect()
     }
-    assert got == {("n1", "c1")}  # pre-fix: empty — the corpus was dropped
-    assert spark.catalog.tableExists(table)  # registered as a side effect
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-# test_tiered_compaction_bounds_fold_width_and_clamps_to_checkpoint moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
+    assert got == {("n6", "n5")}
 
 
 def test_fs_rename_rejects_cross_scheme_and_fs_dir_size_counts_bytes(
@@ -1296,11 +1286,10 @@ def test_regime1_mine_broadcasts_bounded_batch_no_corpus_shuffle(spark, tmp_path
     """round-11 two-regime pin (SCALE.md): a batch index inside the
     broadcast envelope must mine as a BroadcastHashJoin of the BATCH
     against a plain corpus SCAN — zero Exchange on the corpus side of
-    the join. This is the plan the choose_index_layout policy's regime
-    1 rests on (plain wins every ratio because there is no corpus
-    shuffle to elide); if a planner change ever degrades a bounded
-    batch to a corpus-shuffling SMJ, this pin flags the policy for
-    re-measurement."""
+    the join. This is the plan the single plain index layout rests on
+    (a bounded batch has no corpus shuffle to elide); if a planner
+    change ever degrades a bounded batch to a corpus-shuffling SMJ,
+    this pin flags the layout for re-measurement."""
     from webscrap_datapipeline_spark.operators.dedup import (
         incremental_lsh_candidates_from_index,
         lsh_band_index,
@@ -1336,38 +1325,22 @@ def test_regime1_mine_broadcasts_bounded_batch_no_corpus_shuffle(spark, tmp_path
     assert "SortMergeJoin" not in plan, plan[:2000]
 
 
-# test_bucketed_index_sink_matches_plain_layout_and_elides_corpus_exchange moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
-
-
-# test_bucketed_index_compaction_keeps_layout_and_mining moved to tests/optional/test_heavy_streaming.py
-# (opt-in heavy suite: SPARK_GRAFT_HEAVY_TESTS=1 — round-13 budget fix, no coverage deleted)
-
-
 def test_round11_review_guards_markers_and_stale_catalog(spark, tmp_path):
-    """Round-11 review fixes, pinned: (1) retention combined with an
-    in-sink MAXIMAL fold is rejected on both streaming sinks — the fold
+    """Round-11 review fix, pinned: retention combined with an in-sink
+    MAXIMAL fold is rejected on both streaming sinks — the fold
     re-marks all content fresh every cadence, so partition-granular
-    retention would silently never prune (inert-retention); (2)
-    migrate_lsh_index_to_bucketed writes the .maxbatch age marker, so
-    retention can still prune migrated content; (3) a plain
-    auto-layout re-bootstrap DROPS a stale bucketed catalog entry left
-    by an earlier deployment — otherwise every subsequent batch reads
-    the stale bucketed table over plain files."""
+    retention would silently never prune (inert-retention). Both sinks
+    share one guard (`index_core.check_sink_retention`)."""
     import pytest
 
-    from webscrap_datapipeline_spark.fsutil import fs_read_text
     from webscrap_datapipeline_spark.streaming.ann_stream import (
         incremental_ann_sink,
     )
     from webscrap_datapipeline_spark.streaming.dedup_stream import (
-        bootstrap_lsh_index,
         incremental_near_dup_sink,
-        migrate_lsh_index_to_bucketed,
-        prune_lsh_index,
     )
 
-    # (1) the inert combination fails loudly at sink construction
+    # the inert combination fails loudly at sink construction
     with pytest.raises(ValueError, match="inert"):
         incremental_near_dup_sink(
             str(tmp_path / "i"), str(tmp_path / "p"),
@@ -1377,65 +1350,13 @@ def test_round11_review_guards_markers_and_stale_catalog(spark, tmp_path):
         incremental_ann_sink(
             str(tmp_path / "a"), dim=4, compact_every=2, retain_batches=3
         )
+    with pytest.raises(ValueError, match="retain_ts_seconds .* inert"):
+        incremental_ann_sink(
+            str(tmp_path / "a"), dim=4, compact_every=2,
+            ts_col="ts", retain_ts_seconds=60.0,
+        )
     # tiered fold + retention remains the supported pairing
     incremental_near_dup_sink(
         str(tmp_path / "i"), str(tmp_path / "p"),
         compact_every=2, compact_max_partitions=4, retain_batches=3,
     )
-
-    # (2) migration carries the age marker; retention can expire it
-    index_dir = str(tmp_path / "lsh_idx")
-    pairs_dir = str(tmp_path / "pairs")
-    docs = spark.createDataFrame(
-        [("c1", "alpha beta gamma delta"), ("c2", "one two three four")],
-        "doc_id string, text string",
-    )
-    bootstrap_lsh_index(docs, index_dir)
-    sink = incremental_near_dup_sink(index_dir, pairs_dir)
-    sink(
-        spark.createDataFrame(
-            [("n1", "five six seven eight")], "doc_id string, text string"
-        ),
-        0,
-    )
-    table = "t_r11_migrate_marker"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    out = migrate_lsh_index_to_bucketed(spark, index_dir, table)
-    marker = fs_read_text(
-        spark, f"{index_dir}/__batch_id={out['new_partition_id']}/.maxbatch"
-    )
-    assert marker is not None and int(marker.strip()) == 0
-    # newest content is ingest batch 0 -> prunable once the window
-    # moves past it (previously: unknown age, never prunable)
-    assert prune_lsh_index(spark, index_dir, 0, index_table=table) == {
-        "pruned_partitions": 0,
-        "pruned_ids": [],
-    }
-    pruned = prune_lsh_index(spark, index_dir, 1, index_table=table)
-    assert pruned["pruned_ids"] == [out["new_partition_id"]]
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-    # (3) auto-layout plain re-bootstrap drops the stale catalog entry
-    idx2 = str(tmp_path / "lsh_idx2")
-    table2 = "t_r11_stale_entry"
-    spark.sql(f"DROP TABLE IF EXISTS {table2}")
-    bootstrap_lsh_index(docs, idx2, index_table=table2)  # bucketed era
-    assert spark.catalog.tableExists(table2)
-    layout = bootstrap_lsh_index(
-        docs, idx2, index_table=table2, layout="auto", expected_batch_docs=10
-    )
-    assert layout == "plain"
-    assert not spark.catalog.tableExists(table2)
-    # the sink handed the same table name follows the (plain) disk
-    sink2 = incremental_near_dup_sink(idx2, str(tmp_path / "p2"), index_table=table2)
-    sink2(
-        spark.createDataFrame(
-            [("n2", "alpha beta gamma delta")], "doc_id string, text string"
-        ),
-        0,
-    )
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in spark.read.parquet(str(tmp_path / "p2")).collect()
-    }
-    assert got == {("n2", "c1")}

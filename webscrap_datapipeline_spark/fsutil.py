@@ -1,6 +1,7 @@
 """Hadoop FileSystem helpers shared by every module that touches paths
 outside a DataFrame reader/writer (SCD upserts, streaming index
-maintenance, small-file compaction).
+maintenance, small-file compaction, the pipeline's warehouse and state
+swaps).
 
 One home instead of per-module copies (round-9 review: `scd.py`,
 `streaming/dedup_stream.py`, and `operators/maintenance.py` had each
@@ -60,6 +61,36 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
             "not a rename)"
         )
     return bool(fs.rename(jsrc, fs.makeQualified(jdst)))
+
+
+def fs_swap(spark: SparkSession, path: str, staging: str) -> None:
+    """Replace ``path`` with the fully written ``staging`` directory:
+    rename ``path`` aside to its fixed ``.old`` sibling, rename
+    ``staging`` in, delete the aside copy. Readers see the old content
+    until the second rename. A crash between the two renames leaves
+    only ``.old``, which :func:`fs_heal_swap` restores — call it
+    before reading ``path``. Every rename's result is checked: a
+    FileSystem that reports failure raises instead of going on."""
+    fs_heal_swap(spark, path)
+    old = path + ".old"
+    if fs_exists(spark, path) and not fs_rename(spark, path, old):
+        raise IOError(f"fs_swap: rename {path} -> {old} failed")
+    if not fs_rename(spark, staging, path):
+        raise IOError(f"fs_swap: rename {staging} -> {path} failed")
+    fs_delete(spark, old)
+
+
+def fs_heal_swap(spark: SparkSession, path: str) -> None:
+    """Finish a :func:`fs_swap` that crashed: with ``path`` missing its
+    ``.old`` sibling is the last complete content and is renamed back;
+    with ``path`` present a leftover ``.old`` is stale and deleted."""
+    old = path + ".old"
+    if not fs_exists(spark, old):
+        return
+    if fs_exists(spark, path):
+        fs_delete(spark, old)
+    elif not fs_rename(spark, old, path):
+        raise IOError(f"fs_heal_swap: rename {old} -> {path} failed")
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:

@@ -16,12 +16,12 @@ use so Spark's recompute-on-failure can't re-fire side effects.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fsutil import fs_exists, fs_heal_swap, fs_swap
 from .operators.change_detection import detect_changes, update_state
 from .operators.enrich import enrich_reports
 from .operators.log_table import build_log_table
@@ -52,6 +52,10 @@ def run_incremental(
     """One incremental cycle. ``available`` is the already-fetched source
     listing (the scrape scaffold produces it in production; tests build it
     directly — the pipeline is pure downstream of it)."""
+    # finish any swap a crashed cycle left half done, so neither the
+    # state nor the warehouse reads as absent
+    fs_heal_swap(spark, state_path)
+    fs_heal_swap(spark, warehouse_path)
     state = read_state(spark, state_path)
     changed = detect_changes(available, state, "key", "last_seen_ts").cache()
     n_changed = changed.count()
@@ -78,7 +82,7 @@ def run_incremental(
             n_quarantined = bad.count()
 
     # Warehouse append with SCD current-flag maintenance (K5+K3).
-    if os.path.exists(warehouse_path):
+    if fs_exists(spark, warehouse_path):
         existing = spark.read.parquet(warehouse_path)
         # ingest only files not already loaded (the reference relied on
         # emptying its raw dir each run, K6; lineage anti-join replaces
@@ -97,7 +101,7 @@ def run_incremental(
         )
     tmp = warehouse_path + ".staging"
     merged.write.mode("overwrite").parquet(tmp)
-    _swap(warehouse_path, tmp)
+    fs_swap(spark, warehouse_path, tmp)
     loaded = spark.read.parquet(warehouse_path).count()
 
     # Audit log (ST5): every changed key gets a row; keys whose file never
@@ -128,14 +132,3 @@ def run_incremental(
 
     changed.unpersist()
     return PipelineResult(n_changed, loaded, n_log, n_quarantined)
-
-
-def _swap(path: str, staging: str) -> None:
-    import shutil
-    import uuid
-
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)

@@ -9,7 +9,7 @@ Delta table with MERGE; the protocol below keeps the same two guarantees
 without the dependency:
 
   * atomic visibility  — readers see the old state until the new one is
-    fully written (write temp dir → rename);
+    fully written (write a staging dir → `fsutil.fs_swap`);
   * commit-after-load ordering (ST2) — the caller updates state only
     after the warehouse append succeeds, so a failed run retries the same
     keys next cycle (the reference gets this right at main.py:91 and we
@@ -20,12 +20,10 @@ without the dependency:
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..fsutil import fs_exists, fs_swap
 
 STATE_SCHEMA = T.StructType(
     [
@@ -38,21 +36,17 @@ STATE_SCHEMA = T.StructType(
 def read_state(spark: SparkSession, path: str) -> DataFrame:
     """Empty-state bootstrap: missing path → empty DataFrame (the
     reference crashes if the JSON is absent)."""
-    if not os.path.exists(path):
+    if not fs_exists(spark, path):
         return spark.createDataFrame([], STATE_SCHEMA)
     return spark.read.schema(STATE_SCHEMA).json(path)
 
 
 def commit_state(state: DataFrame, path: str) -> None:
-    """Atomic overwrite: write to a temp sibling, rename over the old
-    state. The state is small by construction (one row per key), so a
-    coalesce(1) write is correct — it is the *watermark*, not the data.
+    """Atomic overwrite: write a staging sibling, swap it in
+    (`fsutil.fs_swap`). The state is small by construction (one row per
+    key), so a coalesce(1) write is correct — it is the *watermark*,
+    not the data.
     """
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    state.coalesce(1).write.mode("overwrite").json(tmp)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    if os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
+    staging = path + ".staging"
+    state.coalesce(1).write.mode("overwrite").json(staging)
+    fs_swap(state.sparkSession, path, staging)

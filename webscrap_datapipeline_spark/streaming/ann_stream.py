@@ -36,32 +36,15 @@ a stream:
      against the corpus scan, and exact-cosine rescored with a
      total-order tiebreak.
 
-Scale posture — and the deliberate asymmetry with the dedup index:
-the dedup mine joins a whole MICRO-BATCH against the corpus, so past
-the broadcast envelope it needs the bucketed catalog layout to elide
-a corpus-side shuffle. The ANN serve path joins a QUERY SET, which is
-small by definition (a serving request, a curation probe list): the
-query side always broadcasts, the corpus side is one partition-pruned
-scan with NO Exchange in any layout — so a shuffle never limits
-serving, and this module deliberately has no catalog-table variant.
-
-What DOES grow with the corpus is the serve SCAN itself: under the
-default flat layout every serve reads every index row even though
-only the probed buckets can match (round-11 VERDICT item 1 — at
-100 TB a full-scan-per-serve is the first thing a user hits).
-``bucket_parts=P`` pins a second Hive partition level
-``__bpart = pmod(bucket, P)`` into the layout (and the geometry
-sidecar — writers and readers must agree on it exactly like the
-planes), and the serve path pushes each query set's probed-bucket
-parts as a STATIC partition filter: the scan then reads only the
-probed cells, so serve I/O is ∝ probes × (corpus/P), not corpus.
-With a power-of-two P a Hamming-1 probe set touches at most
-1 + log2(P) parts (bit flips at or above log2(P) stay in the query's
-own part), so multiprobe serving still prunes ~(1+log2 P)/P of the
-corpus. The flat layout remains the zero-setup default — right for
-small indexes and highest-ingest-rate streams (a bucketed batch
-write fans into up to P files per batch; compaction re-consolidates,
-but tiny batches pay the small-files term first).
+Scale posture: the serve path joins a QUERY SET, which is small by
+definition (a serving request, a curation probe list): the query side
+always broadcasts, and the corpus side is one partition-pruned scan
+with NO Exchange. What grows with the corpus is that scan: every serve
+reads every index row, even though only the probed buckets can match.
+A bucket-keyed partition level would prune the scan to the probed
+cells, but pays off only above ~4M vectors (SCALE.md), a size no
+workload reaches, so the index has one layout: plain
+``__batch_id``-partitioned parquet.
 
 Per-query-set cost beyond the scan: the file LISTING (reclaimed by
 :func:`compact_ann_index`, same fold discipline as the dedup
@@ -110,6 +93,7 @@ from ..operators.similarity import (
     probe_buckets,
 )
 from .index_core import (
+    check_sink_retention,
     fold_index_partitions,
     last_committed_batch,
     latest_known_ts,
@@ -121,46 +105,24 @@ from .index_core import (
 
 GEOMETRY_FILE = "_geometry.json"
 
-# The measured local crossover for the serve-prune layout
-# (SCALE.md round 12, scripts/ann_serve_prune_probe.py): below ~6.4M
-# vectors the flat layout's lower fixed costs (fewer files, no
-# probed-parts driver job) beat the pruned scan even COLD — at 6.4M
-# the cold-cache cells cross (flat 2.29 s vs bucketed 1.77 s at mp0)
-# as the scan starts to dominate. local[32]-on-NVMe is the
-# conservative harness for this constant: on an object store the scan
-# is I/O-bound far earlier, so this gate errs toward flat — never
-# picks bucketed where flat measured faster locally.
-BUCKETED_SERVE_BREAKEVEN_VECS = 4_000_000
-
-
-def choose_ann_layout(
-    corpus_vecs: int, query_batch: int = 8, min_parts: int = 64
-) -> int | None:
-    """``bucket_parts`` for a new ANN index, by the measured policy —
-    the serve twin of `dedup_stream.choose_index_layout`. Returns
-    None (flat layout) below the measured crossover; above it, a
-    power-of-two P sized so a typical ``query_batch``'s base probe
-    set still prunes to ≲1/8 of the parts (probed parts ≤ distinct
-    query buckets at multiprobe=0, so P ≈ 8 × batch keeps the pruned
-    fraction ≤ ~12%), clamped to [min_parts, 4096] — 4096 dirs is the
-    sane namespace ceiling for one index (mirror of
-    `operators/bucketing.py`'s bucket-count guidance).
-    ``corpus_vecs <= 0`` (unknown) → flat, the zero-setup default."""
-    if corpus_vecs <= 0 or corpus_vecs < BUCKETED_SERVE_BREAKEVEN_VECS:
-        return None
-    target = max(min_parts, 8 * max(1, query_batch))
-    p = 1 << (target - 1).bit_length()  # next power of two >= target
-    return max(min_parts, min(4096, p))
-
 
 def read_ann_geometry(spark: SparkSession, index_dir: str) -> dict | None:
     """The index's pinned geometry (``dim``, ``n_planes``, ``seed``,
     ``id_type``, ``vec_type``) from the ``_geometry.json`` sidecar;
-    None when the index has never been written."""
+    None when the index has never been written. A sidecar carrying
+    ``bucket_parts`` pins the removed serve-prune partition layout,
+    whose rows this module can no longer write or read consistently:
+    it fails loudly for every reader and writer."""
     txt = fs_read_text(spark, f"{index_dir.rstrip('/')}/{GEOMETRY_FILE}")
     if txt is None:
         return None
-    return json.loads(txt)
+    geo = json.loads(txt)
+    if "bucket_parts" in geo:
+        raise ValueError(
+            f"ANN index under {index_dir} pins bucket_parts in its "
+            f"{GEOMETRY_FILE}: layout removed, re-bootstrap the index."
+        )
+    return geo
 
 
 def _write_geometry(spark: SparkSession, index_dir: str, geo: dict) -> None:
@@ -215,37 +177,15 @@ def _ann_schema(geo: dict) -> T.StructType:
     hardening the dedup index reads got). ``__ingest`` is present only
     in consolidated fold output; reading it over batch partitions
     yields NULL, which :func:`read_ann_index` coalesces with the
-    partition id to recover every row's true ingest batch. Under the
-    ``bucket_parts`` layout the second partition column ``__bpart``
-    joins the schema — it is derived (pmod of bucket), carried only so
-    the file index can prune on it."""
-    fields = [
-        T.StructField("vec_id", T._parse_datatype_string(geo["id_type"])),
-        T.StructField("embedding", T._parse_datatype_string(geo["vec_type"])),
-        T.StructField("bucket", T.LongType()),
-        T.StructField("__ingest", T.LongType()),
-        T.StructField("__batch_id", T.LongType()),
-    ]
-    if geo.get("bucket_parts"):
-        fields.append(T.StructField("__bpart", T.IntegerType()))
-    return T.StructType(fields)
-
-
-def _partition_cols(geo: dict) -> list[str]:
-    return (
-        ["__batch_id", "__bpart"] if geo.get("bucket_parts") else ["__batch_id"]
-    )
-
-
-def _with_bpart(df: DataFrame, geo: dict) -> DataFrame:
-    """Attach the derived ``__bpart`` partition column under the
-    bucketed layout; identity otherwise. pmod keeps it non-negative
-    for any bucket id."""
-    p = geo.get("bucket_parts")
-    if not p:
-        return df
-    return df.withColumn(
-        "__bpart", F.pmod(F.col("bucket"), F.lit(int(p))).cast("int")
+    partition id to recover every row's true ingest batch."""
+    return T.StructType(
+        [
+            T.StructField("vec_id", T._parse_datatype_string(geo["id_type"])),
+            T.StructField("embedding", T._parse_datatype_string(geo["vec_type"])),
+            T.StructField("bucket", T.LongType()),
+            T.StructField("__ingest", T.LongType()),
+            T.StructField("__batch_id", T.LongType()),
+        ]
     )
 
 
@@ -291,7 +231,6 @@ def _build_geometry(
     n_planes: int,
     seed: int,
     centroids: list[list[float]] | None,
-    bucket_parts: int | None = None,
 ) -> dict:
     """The geometry dict a writer pins / validates. ``kind`` selects
     the cell function: ``hyperplane`` (seeded sign-bit LSH — no
@@ -302,12 +241,8 @@ def _build_geometry(
     and pass its centroid list). The codebook lives IN the sidecar:
     cell ids are only comparable under the exact centroid values, so
     they are index geometry in precisely the sidecar's sense — a
-    retrained codebook is a re-bootstrap, never an in-place swap.
-    ``bucket_parts`` pins the physical serve-prune layout (module
-    docstring): it rides in the sidecar because every writer must
-    produce, and every reader must prune on, the same pmod — a
-    drifted P would scatter rows across incomparable partition
-    schemes."""
+    retrained codebook is a re-bootstrap or a
+    :func:`migrate_ann_index_geometry`, never an in-place swap."""
     return _geometry_from_types(
         schema[id_col].dataType.simpleString(),
         schema[vec_col].dataType.simpleString(),
@@ -315,7 +250,6 @@ def _build_geometry(
         n_planes,
         seed,
         centroids,
-        bucket_parts,
     )
 
 
@@ -326,21 +260,15 @@ def _geometry_from_types(
     n_planes: int,
     seed: int,
     centroids: list[list[float]] | None,
-    bucket_parts: int | None,
 ) -> dict:
     """:func:`_build_geometry` without a schema in hand — the geometry
     migration builds the target geometry from the OLD sidecar's types
-    (row types can't change in place; only the cell function and
-    layout can)."""
+    (row types can't change in place; only the cell function can)."""
     geo = {
         "dim": dim,
         "id_type": id_type,
         "vec_type": vec_type,
     }
-    if bucket_parts is not None:
-        if int(bucket_parts) < 2:
-            raise ValueError(f"bucket_parts must be >= 2, got {bucket_parts}")
-        geo["bucket_parts"] = int(bucket_parts)
     if centroids is not None:
         # a centroid of the wrong width must fail HERE, at index
         # creation: zip_with over mismatched-length arrays silently
@@ -372,7 +300,6 @@ def bootstrap_ann_index(
     n_planes: int = 12,
     seed: int = 7,
     centroids: list[list[float]] | None = None,
-    bucket_parts: int | None = None,
 ) -> int:
     """Seed ``index_dir`` with an existing corpus (one-time batch
     backfill before the stream takes over), stamped ``__batch_id = -1``
@@ -382,12 +309,6 @@ def bootstrap_ann_index(
     hyperplane-bucketed (see :func:`_build_geometry`); every other
     protocol — partitions, replay, compaction, retention, serve cuts —
     is identical, because none of them care what the bucket MEANS.
-    ``bucket_parts=P`` selects the serve-prune layout (module
-    docstring): a second ``__bpart`` partition level lets every serve
-    read only probed cells instead of the corpus — the right layout
-    once the index outgrows what one serve should scan; prefer a
-    power of two so Hamming-1 probe sets stay within 1 + log2(P)
-    parts.
 
     The sidecar is written BEFORE the data: a crash mid-backfill then
     leaves (sidecar, partial data) — a later writer with matching
@@ -398,28 +319,18 @@ def bootstrap_ann_index(
     planes produced them)."""
     spark = corpus.sparkSession
     geo = _build_geometry(
-        corpus.schema, id_col, vec_col, dim, n_planes, seed, centroids,
-        bucket_parts,
+        corpus.schema, id_col, vec_col, dim, n_planes, seed, centroids
     )
     fs_delete(spark, index_dir)
     _write_geometry(spark, index_dir, geo)
     obs = Observation("ann_bootstrap_rows")
-    stamped = (
-        _with_bpart(_bucketed_batch(corpus, geo, id_col, vec_col), geo)
+    (
+        _bucketed_batch(corpus, geo, id_col, vec_col)
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .withColumn("__batch_id", F.lit(-1).cast("long"))
-    )
-    if geo.get("bucket_parts"):
-        # one-time backfill: pay one shuffle to land ~one file per
-        # cell — without it every write task emits a file into every
-        # cell dir (tasks × P small files), the same rationale as the
-        # fold's repartition. Streaming batches deliberately do NOT
-        # do this (ingest stays shuffle-free; the fold consolidates).
-        stamped = stamped.repartition(int(geo["bucket_parts"]), "__bpart")
-    (
-        stamped.write.mode("overwrite")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*_partition_cols(geo))
+        .partitionBy("__batch_id")
         .parquet(index_dir)
     )
     return int(obs.get["n"])
@@ -436,7 +347,6 @@ def incremental_ann_sink(
     compact_every: int | None = None,
     compact_max_partitions: int | None = None,
     retain_batches: int | None = None,
-    bucket_parts: int | None = None,
     ts_col: str | None = None,
     retain_ts_seconds: float | None = None,
 ) -> Callable[[DataFrame, int], None]:
@@ -464,18 +374,7 @@ def incremental_ann_sink(
     only meaningful within a freshness window. ``centroids`` selects
     the IVF cell geometry exactly as in :func:`bootstrap_ann_index`
     (must match a bootstrapped index's sidecar bit-for-bit — the
-    geometry guard enforces it), and ``bucket_parts`` the serve-prune
-    layout likewise (it rides the sidecar too, so a sink drifting
-    from the bootstrapped layout fails loudly).
-
-    Under the bucketed layout a replayed batch's partition dir is
-    deleted before its rewrite: dynamic overwrite replaces only the
-    ``(batch, part)`` leaves present in the replay data, so a replay
-    whose row set differs could otherwise strand stale leaves. The
-    delete-then-write pair runs inside the strictly serial
-    foreachBatch thread, and the partition it touches is by
-    definition uncommitted — above every committed serve cut — so no
-    consistent reader can be scanning it.
+    geometry guard enforces it).
 
     TIME-BASED retention (round-11 VERDICT item 5): ``ts_col`` names
     the stream's event-time column; the sink then records each batch
@@ -488,42 +387,16 @@ def incremental_ann_sink(
     corpus out). Same partition granularity and fail-safe unknown-age
     rules as batch-count retention; combine both and a partition
     expires only when every cutoff agrees."""
-    if retain_ts_seconds is not None and ts_col is None:
-        raise ValueError("retain_ts_seconds needs ts_col (no event time to age by)")
-    if retain_ts_seconds and compact_every and compact_max_partitions is None:
-        # same inert-retention reasoning as retain_batches below: a
-        # maximal in-sink fold re-marks all content with the newest
-        # .maxts every cadence
-        raise ValueError(
-            "retain_ts_seconds with an in-sink MAXIMAL fold (compact_every "
-            "set, compact_max_partitions=None) makes retention inert: "
-            "every fold re-marks all content fresh. Pass "
-            "compact_max_partitions=K (tiered fold) so chunks age-band "
-            "and expire, or run maximal folds in maintenance windows."
-        )
-    if retain_batches and compact_every and compact_max_partitions is None:
-        # same inert-retention combination as the dedup sink (see
-        # incremental_near_dup_sink): a maximal in-sink fold re-marks
-        # all content fresh every cadence, so partition-granular
-        # retention never prunes anything
-        raise ValueError(
-            "retain_batches with an in-sink MAXIMAL fold (compact_every "
-            "set, compact_max_partitions=None) makes retention inert: "
-            "every fold re-marks all content fresh. Pass "
-            "compact_max_partitions=K (tiered fold) so chunks age-band "
-            "and expire, or run maximal folds in maintenance windows."
-        )
+    check_sink_retention(
+        compact_every, compact_max_partitions, retain_batches, ts_col, retain_ts_seconds
+    )
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         geo = _build_geometry(
-            batch_df.schema, id_col, vec_col, dim, n_planes, seed, centroids,
-            bucket_parts,
+            batch_df.schema, id_col, vec_col, dim, n_planes, seed, centroids
         )
         geo = _check_geometry(spark, index_dir, geo)
-        if geo.get("bucket_parts"):
-            # replay exactness under the two-level layout (docstring)
-            fs_delete(spark, f"{index_dir.rstrip('/')}/__batch_id={batch_id}")
         src = batch_df
         tobs = None
         if ts_col is not None:
@@ -535,11 +408,11 @@ def incremental_ann_sink(
                 tobs, F.max(F.col(ts_col).cast("double")).alias("t")
             )
         (
-            _with_bpart(_bucketed_batch(src, geo, id_col, vec_col), geo)
+            _bucketed_batch(src, geo, id_col, vec_col)
             .withColumn("__batch_id", F.lit(batch_id).cast("long"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*_partition_cols(geo))
+            .partitionBy("__batch_id")
             .parquet(index_dir)
         )
         if tobs is not None and tobs.get["t"] is not None:
@@ -611,7 +484,6 @@ def read_ann_index(
     index_dir: str,
     upto_batch_id: int | None = None,
     geo: dict | None = None,
-    probe_parts: list[int] | None = None,
 ) -> DataFrame:
     """The index as a DataFrame ``(vec_id, embedding, bucket,
     __ingest)`` — ``__ingest`` is every row's true ingest batch id
@@ -621,11 +493,7 @@ def read_ann_index(
     ingested strictly BEFORE that batch (partition-pruned for batch
     partitions; chunk rows filtered on ``__ingest``). Pass ``geo``
     when the caller already holds the sidecar (the serve path does —
-    one FS round-trip instead of two per query on an object store).
-    ``probe_parts`` (bucketed layout only) is a static ``__bpart``
-    partition filter — literal values, so the file index prunes the
-    un-probed cells before any file is opened; the serve path derives
-    it from each query set's probed buckets."""
+    one FS round-trip instead of two per query on an object store)."""
     if geo is None:
         geo = read_ann_geometry(spark, index_dir)
     if geo is None:
@@ -635,14 +503,6 @@ def read_ann_index(
         .parquet(index_dir)
         .withColumn("__ingest", F.coalesce(F.col("__ingest"), F.col("__batch_id")))
     )
-    if probe_parts is not None:
-        if not geo.get("bucket_parts"):
-            raise ValueError(
-                "probe_parts given but this index has the flat layout "
-                "(no bucket_parts in its geometry) — there is no "
-                "__bpart partition level to prune on"
-            )
-        df = df.filter(F.col("__bpart").isin([int(p) for p in probe_parts]))
     if upto_batch_id is not None:
         # partition-level prune first (skips whole batch partitions),
         # then the row-level __ingest cut inside consolidated chunks
@@ -741,23 +601,7 @@ def ann_query_index(
                 probe_buckets(F.col("qbucket"), geo["n_planes"], multiprobe)
             ).alias("bucket"),
         )
-    probe_parts = None
-    if geo.get("bucket_parts"):
-        # the probed-bucket parts as a DRIVER-SIDE literal list, so the
-        # corpus read below partition-prunes statically (a join-time
-        # value could only prune dynamically). Driver-sized by
-        # construction: |queries| × probes distinct buckets, and the
-        # collect evaluates query-side bucketing only — never the
-        # corpus. One extra tiny job per serve is the price of reading
-        # probes × (corpus/P) instead of the corpus.
-        p = int(geo["bucket_parts"])
-        probe_parts = sorted(
-            {int(r["bucket"]) % p for r in qx.select("bucket").distinct().collect()}
-        )
-    corpus = read_ann_index(
-        spark, index_dir, upto_batch_id=upto_batch_id, geo=geo,
-        probe_parts=probe_parts,
-    )
+    corpus = read_ann_index(spark, index_dir, upto_batch_id=upto_batch_id, geo=geo)
     cand = corpus.join(F.broadcast(qx), "bucket")
     scored = cand.select(
         "query_id",
@@ -791,8 +635,7 @@ def prune_ann_index(
     (and therefore the per-query corpus scan) over the stream's
     lifetime. Partition granularity, fail-safe unknown-age handling,
     and the concurrency contract are the shared lifecycle
-    (`index_core.prune_index_partitions`); this index has no catalog,
-    so the wrapper adds nothing."""
+    (`index_core.prune_index_partitions`)."""
     return prune_index_partitions(
         spark, index_dir, min_batch_id=min_batch_id, min_ingest_ts=min_ingest_ts
     )
@@ -829,13 +672,7 @@ def compact_ann_index(
     and the tier policy are the SHARED index lifecycle
     (`index_core.fold_index_partitions`; round-11 VERDICT item 4).
     This wrapper contributes only the ANN policy: the consolidated
-    row (per-row ``__ingest`` recovered from the partition id), and
-    the scratch layout — ``__bpart``-partitioned under the
-    serve-prune layout so pruning survives folds (the chunks ARE the
-    corpus bulk at steady state), repartitioned to ~one file per cell
-    (the fold already shuffles for distinct; without the repartition
-    every write task would emit a file into every cell dir —
-    tasks × cells small files instead of cells)."""
+    row (per-row ``__ingest`` recovered from the partition id)."""
     if not fs_exists(spark, index_dir):
         return {"folded_partitions": 0, "rows": 0, "new_partition_id": None}
     geo = read_ann_geometry(spark, index_dir)
@@ -857,25 +694,11 @@ def compact_ann_index(
             .distinct()
         )
 
-    def write_scratch(df, scratch: str) -> None:
-        if geo.get("bucket_parts"):
-            p = int(geo["bucket_parts"])
-            (
-                _with_bpart(df, geo)
-                .repartition(p, "__bpart")
-                .write.mode("overwrite")
-                .partitionBy("__bpart")
-                .parquet(scratch)
-            )
-        else:
-            df.write.mode("overwrite").parquet(scratch)
-
     return fold_index_partitions(
         spark,
         index_dir,
         upto_batch_id,
         read_consolidated,
-        write_scratch,
         checkpoint_dir=checkpoint_dir,
         max_fold_partitions=max_fold_partitions,
         chunk_merge_at=chunk_merge_at,
@@ -888,16 +711,14 @@ def migrate_ann_index_geometry(
     n_planes: int = 12,
     seed: int = 7,
     centroids: list[list[float]] | None = None,
-    bucket_parts: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> dict:
     """Adopt a NEW geometry for an existing ANN index — the
     maintenance-window alternative to a full re-bootstrap that the
     sidecar's fail-loudly drift guard otherwise forces (round-11
     VERDICT item 3). A production index periodically retrains its IVF
-    codebook (or re-scales its plane count with the corpus, or switches
-    serve-prune layout via ``bucket_parts``); all of these change cell
-    ids, so the whole corpus must be re-bucketed — this does that as
+    codebook (or re-scales its plane count with the corpus); both
+    change cell ids, so the whole corpus must be re-bucketed — this does that as
     ONE distinct-fold of every partition into a single consolidated
     chunk under the new geometry, preserving each row's ``__ingest``
     (historical ``upto_batch_id`` cuts keep answering) and the chunk's
@@ -971,7 +792,7 @@ def migrate_ann_index_geometry(
             )
     new_geo = _geometry_from_types(
         old_geo["id_type"], old_geo["vec_type"], old_geo["dim"],
-        n_planes, seed, centroids, bucket_parts,
+        n_planes, seed, centroids,
     )
     if new_geo == old_geo:
         return {
@@ -981,31 +802,20 @@ def migrate_ann_index_geometry(
     new_id = min(min(part_vals), -1) - 1
     obs = Observation("ann_migrate_rows")
     rebucketed = (
-        _with_bpart(
-            _bucketed_batch(
-                read_ann_index(spark, base, geo=old_geo).select(
-                    "vec_id", "embedding", "__ingest"
-                ),
-                new_geo,
-                "vec_id",
-                "embedding",
-                keep=("__ingest",),
+        _bucketed_batch(
+            read_ann_index(spark, base, geo=old_geo).select(
+                "vec_id", "embedding", "__ingest"
             ),
             new_geo,
+            "vec_id",
+            "embedding",
+            keep=("__ingest",),
         )
         .distinct()
         .observe(obs, F.count(F.lit(1)).alias("n"))
     )
     data_dir = f"{scratch}/__batch_id={new_id}"
-    if new_geo.get("bucket_parts"):
-        (
-            rebucketed.repartition(int(new_geo["bucket_parts"]), "__bpart")
-            .write.mode("overwrite")
-            .partitionBy("__bpart")
-            .parquet(data_dir)
-        )
-    else:
-        rebucketed.write.mode("overwrite").parquet(data_dir)
+    rebucketed.write.mode("overwrite").parquet(data_dir)
     rows = int(obs.get["n"])
     # age markers from the SOURCES (read before they are deleted);
     # either marker only when every source knows it — the shared

@@ -24,18 +24,15 @@ module wires that operator into Structured Streaming via
      pairs, no duplicate index rows).
 
 Scale posture: per-batch cost is O(|batch| × bands) signature work plus
-one equi-join against the index on the batch's (band, bucket) keys.
-The join has two measured regimes (SCALE.md rounds 9–11): a batch
-whose band index fits the broadcast envelope joins as a BROADCAST
-against a corpus SCAN — no corpus-side shuffle exists in EITHER
-layout, and plain partitioned parquet wins outright (admission-
-controlled streams live here by design). Past the envelope the join
-is SMJ and the plain layout re-shuffles the corpus every trigger;
-``index_table`` (round-10, closing round-9 VERDICT item 2) makes the
-index a bucketed catalog table on (band, bucket) whose spec elides
-exactly that corpus-side Exchange — measured to win once the corpus
-is ≳8× the batch (round-11 ×40 cell). ``choose_index_layout``
-encodes the policy; the plain layout remains the zero-setup default.
+one equi-join against the index on the batch's (band, bucket) keys. A
+batch whose band index fits the broadcast envelope joins as a
+BROADCAST against a corpus SCAN — no corpus-side shuffle (SCALE.md
+rounds 9–11; admission-controlled streams live here by design). Past
+the envelope the join is a sort-merge join that re-shuffles the corpus
+every trigger; a bucketed index would elide that shuffle only for
+batches of ≥1M docs against a corpus ≥8× the batch (SCALE.md), a
+regime no workload reaches, so the index has one layout: plain
+``__batch_id``-partitioned parquet.
 
 The one cost that DOES grow with stream age — one parquet partition
 per micro-batch, 2,880/day at 30 s triggers, eventually dominating the
@@ -54,93 +51,19 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..fsutil import (
-    fs_delete,
-    fs_exists,
-    fs_rename,
-    fs_write_text,
-    list_child_names,
-)
+from ..fsutil import fs_delete, fs_exists, fs_write_text
 from ..operators.dedup import (
     incremental_lsh_candidates_from_index,
     lsh_band_index,
     minhash_signatures,
 )
 from .index_core import (
+    check_sink_retention,
     fold_index_partitions,
     last_committed_batch,  # noqa: F401  (re-export: public API of this module)
     latest_known_ts,
-    list_batch_partitions,
-    max_ingest_marker,
     prune_index_partitions,
 )
-
-# compat aliases — the pre-round-12 private names, pinned by tests
-_max_ingest_batch = max_ingest_marker
-
-
-# The two measured regimes of the bucketed-vs-plain index trade
-# (SCALE.md round 11, bucketed_index_decomp_probe --replicate + the
-# /tmp replication experiments it codifies):
-#
-# 1. BROADCASTABLE BATCH. When the batch's band index fits the
-#    broadcast envelope, the mine join plans as a BROADCAST of the
-#    batch in BOTH layouts — there is no corpus-side Exchange to
-#    elide, so the bucketed layout only pays (bucket-capped scan
-#    parallelism with many files per bucket, pricier append). Measured
-#    at ×26 (10M-doc corpus): plain per-batch 7.6 s vs bucketed 12.7 s
-#    at a 60k-doc batch, 11.8 vs 17.1 s at 500k docs — plain wins at
-#    EVERY corpus:batch ratio in this regime. Admission-controlled
-#    streams live here by design.
-# 2. ABOVE-ENVELOPE BATCH. Past the broadcast envelope (measured
-#    boundary between 4M and 12M batch index rows at the default 10 MB
-#    threshold) the join is SMJ and the plain layout re-shuffles the
-#    whole corpus every trigger; bucketed elides exactly that Exchange
-#    (plan: 3 vs 4). Measured at a 1.5M-doc batch: corpus shuffle cost
-#    2.6 s at a 10M-doc corpus (∝ corpus) vs a fixed ~3 s append
-#    penalty (∝ batch) — crossover near corpus ≈ 8× batch locally; a
-#    network-shuffled cluster reaches it earlier.
-#
-# The constants are DOC-denominated at the default 8-band layout (the
-# unit callers actually hold); they are local[32] measurements — on a
-# real cluster the regime-2 ratio shrinks, so this gate is the
-# conservative one (never picks bucketed where plain measured faster).
-BROADCASTABLE_BATCH_DOCS = 1_000_000  # ≈ 8M index rows, mid-envelope
-BUCKETED_BREAKEVEN_RATIO = 8
-
-
-def choose_index_layout(corpus_docs: int, batch_docs: int) -> str:
-    """'bucketed' or 'plain' for an LSH corpus index, by the measured
-    two-regime policy above: plain whenever the per-batch index
-    broadcasts (no corpus shuffle exists, the bucketed layout only
-    costs); for above-envelope batches, bucketed once the corpus holds
-    at least ``BUCKETED_BREAKEVEN_RATIO`` × the batch's docs.
-    ``batch_docs <= 0`` (unknown) → plain, the zero-setup default."""
-    if batch_docs <= 0 or corpus_docs <= 0:
-        return "plain"
-    if batch_docs < BROADCASTABLE_BATCH_DOCS:
-        return "plain"
-    return "bucketed" if corpus_docs >= BUCKETED_BREAKEVEN_RATIO * batch_docs else "plain"
-
-
-def _dir_layout(spark, index_dir: str) -> str | None:
-    """Which physical layout the on-disk index actually has: 'bucketed'
-    when its data files carry Spark's bucket-id suffix (`_NNNNN` before
-    the extension — the spec rides in file NAMES for bucketed tables),
-    'plain' when they don't, None when no data file exists yet. The
-    sink consults this before (re-)registering a catalog entry over an
-    existing directory: declaring CLUSTERED BY over plain-named files
-    would make every catalog read fail with 'Invalid bucket file'."""
-    import re
-
-    for part in list_child_names(spark, index_dir, dirs_only=True):
-        if not part.startswith("__batch_id="):
-            continue
-        for f in list_child_names(spark, f"{index_dir.rstrip('/')}/{part}"):
-            if f.startswith(("_", ".")):
-                continue
-            return "bucketed" if re.search(r"_\d{5}(\.|$)", f) else "plain"
-    return None
 
 
 def _index_schema(doc_type: str = "string") -> T.StructType:
@@ -164,7 +87,6 @@ def prune_lsh_index(
     spark,
     index_dir: str,
     min_batch_id: int | None = None,
-    index_table: str | None = None,
     min_ingest_ts: float | None = None,
 ) -> dict:
     """RETENTION for the streaming dedup index: delete partitions whose
@@ -197,29 +119,9 @@ def prune_lsh_index(
     ``min_ingest_ts`` is the EVENT-TIME cutoff over the ``.maxts``
     sidecars a ``ts_col``-configured sink writes ("drop corpus older
     than 30 days"); mechanics and fail-safe rules live in
-    `index_core.prune_index_partitions`, this wrapper only adds the
-    bucketed catalog mirroring."""
-    bucketed = index_table is not None and spark.catalog.tableExists(index_table)
+    `index_core.prune_index_partitions`."""
     return prune_index_partitions(
-        spark,
-        index_dir,
-        min_batch_id=min_batch_id,
-        min_ingest_ts=min_ingest_ts,
-        on_drop=(
-            (
-                lambda v: spark.sql(
-                    f"ALTER TABLE {index_table} DROP IF EXISTS "
-                    f"PARTITION (__batch_id={v})"
-                )
-            )
-            if bucketed
-            else None
-        ),
-        on_done=(
-            (lambda: spark.sql(f"REFRESH TABLE {index_table}"))
-            if bucketed
-            else None
-        ),
+        spark, index_dir, min_batch_id=min_batch_id, min_ingest_ts=min_ingest_ts
     )
 
 
@@ -231,8 +133,6 @@ def compact_lsh_index(
     max_fold_partitions: int | None = None,
     chunk_merge_at: int = 8,
     doc_type: str = "string",
-    index_table: str | None = None,
-    index_buckets: int = 32,
 ) -> dict:
     """Fold index partitions with ``__batch_id <= upto_batch_id`` into
     consolidated partitions — the maintenance operator that keeps
@@ -270,173 +170,42 @@ def compact_lsh_index(
     lifecycle — they live in `index_core.fold_index_partitions`
     (round-11 VERDICT item 4: one core, two index policies). This
     wrapper contributes only the dedup policy: what a consolidated row
-    IS (distinct ``(doc, band, bucket)``), how the scratch is written
-    (plain parquet, or through a bucketed scratch TABLE with the same
-    (band, bucket) spec so the bucket ids riding in the file NAMES
-    survive the publish rename), and the catalog partition mirroring
-    + MSCK heal for the bucketed layout.
+    IS (distinct ``(doc, band, bucket)``).
     """
     if not fs_exists(spark, index_dir):
         return {"folded_partitions": 0, "rows": 0, "new_partition_id": None}
-    bucketed = index_table is not None and spark.catalog.tableExists(index_table)
-    if bucketed:
-        # heal the catalog partition list first: a crash between a
-        # prior fold's publish-rename and its ADD PARTITION leaves an
-        # unregistered (or an undeleted dropped) partition dir; MSCK
-        # re-syncs from the directory layout. Duplicate rows a heal
-        # resurrects are content-harmless (miner distinct) and the
-        # fold below re-distincts them away.
-        spark.sql(f"MSCK REPAIR TABLE {index_table}")
     schema = _index_schema(doc_type)
 
     def read_consolidated(ids: list[int]):
-        src = (
-            spark.table(index_table)
-            if bucketed
-            else spark.read.schema(schema).parquet(index_dir)
-        )
         return (
-            src.filter(F.col("__batch_id").isin(ids))
+            spark.read.schema(schema)
+            .parquet(index_dir)
+            .filter(F.col("__batch_id").isin(ids))
             .select("doc", "band", "bucket")
             .distinct()
         )
-
-    def write_scratch(df, scratch: str) -> None:
-        if bucketed:
-            scratch_table = f"{index_table}__compact_scratch"
-            spark.sql(f"DROP TABLE IF EXISTS {scratch_table}")
-            fs_delete(spark, scratch)
-            (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(index_buckets, "band", "bucket")
-                .sortBy("band", "bucket")
-                .option("path", scratch)
-                .saveAsTable(scratch_table)
-            )
-            spark.sql(f"DROP TABLE {scratch_table}")  # files stay (external)
-        else:
-            df.write.mode("overwrite").parquet(scratch)
 
     return fold_index_partitions(
         spark,
         index_dir,
         upto_batch_id,
         read_consolidated,
-        write_scratch,
         checkpoint_dir=checkpoint_dir,
         max_fold_partitions=max_fold_partitions,
         chunk_merge_at=chunk_merge_at,
-        on_publish=(
-            (
-                lambda new_id: spark.sql(
-                    f"ALTER TABLE {index_table} ADD IF NOT EXISTS "
-                    f"PARTITION (__batch_id={new_id})"
-                )
-            )
-            if bucketed
-            else None
-        ),
-        on_drop=(
-            (
-                lambda v: spark.sql(
-                    f"ALTER TABLE {index_table} DROP IF EXISTS "
-                    f"PARTITION (__batch_id={v})"
-                )
-            )
-            if bucketed
-            else None
-        ),
-        on_fold_done=(
-            (lambda: spark.sql(f"REFRESH TABLE {index_table}"))
-            if bucketed
-            else None
-        ),
     )
 
 
-def register_lsh_index_table(
-    spark,
-    table: str,
-    index_dir: str,
-    num_buckets: int = 32,
-    doc_type: str = "string",
-) -> None:
-    """(Re-)register the BUCKETED catalog entry for an LSH index
-    directory — the warehouse-scale layout the sink's scale posture
-    assumes (round-9 VERDICT item 2). The bucket spec lives in the
-    catalog, not the files, so a fresh session (or a fresh metastore)
-    must re-declare it before `spark.table` reads regain the
-    no-corpus-shuffle plan; MSCK REPAIR resyncs the partition list
-    from the directory layout. Idempotent — safe to call at every
-    stream start.
-
-    ``num_buckets`` is a LAYOUT CONTRACT: every writer of ``table``
-    must use the same count (the sink and compactor take it from their
-    own ``index_buckets`` argument — keep them equal), and changing it
-    means rewriting the table. 32 suits the local harness; at
-    warehouse scale pick the bucket count for the TARGET corpus (e.g.
-    4096) exactly as `operators/bucketing.py` documents."""
-    spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {table}
-            (doc {doc_type}, band INT, bucket STRING, __batch_id BIGINT)
-        USING PARQUET
-        PARTITIONED BY (__batch_id)
-        CLUSTERED BY (band, bucket) SORTED BY (band, bucket)
-            INTO {int(num_buckets)} BUCKETS
-        LOCATION '{index_dir}'
-        """
-    )
-    if fs_exists(spark, index_dir):  # MSCK throws on a not-yet-written location
-        spark.sql(f"MSCK REPAIR TABLE {table}")
-
-
-def _write_index_partition(
-    idx: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    index_table: str | None,
-    index_buckets: int,
-) -> None:
-    """Publish one ``__batch_id`` partition of the band index.
-
-    Plain layout: dynamic partition overwrite (a replayed batch
-    rewrites exactly its own partition). Bucketed layout: the catalog
-    write path does not support dynamic overwrite of a bucketed
-    partitioned table, so replay idempotence is explicit — DROP + dir
-    delete of this batch's partition, then a bucketed APPEND with the
-    matching spec. The drop-then-append pair runs inside the strictly
-    serial foreachBatch thread, so no concurrent reader exists (same
-    argument as in-sink compaction)."""
-    stamped = idx.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-    if index_table is None:
-        (
-            stamped.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(index_dir)
-        )
-        return
-    spark = idx.sparkSession
-    if not spark.catalog.tableExists(index_table):
-        # stream started with no bootstrap: declare the layout first
-        register_lsh_index_table(
-            spark, index_table, index_dir, index_buckets,
-            doc_type=idx.schema["doc"].dataType.simpleString(),
-        )
-    spark.sql(
-        f"ALTER TABLE {index_table} DROP IF EXISTS PARTITION (__batch_id={batch_id})"
-    )
-    fs_delete(spark, f"{index_dir.rstrip('/')}/__batch_id={batch_id}")
+def _write_index_partition(idx: DataFrame, batch_id: int, index_dir: str) -> None:
+    """Publish one ``__batch_id`` partition of the band index by
+    dynamic partition overwrite: a replayed batch rewrites exactly its
+    own partition."""
     (
-        stamped.write.mode("append")
-        .format("parquet")
-        .bucketBy(index_buckets, "band", "bucket")
-        .sortBy("band", "bucket")
+        idx.withColumn("__batch_id", F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch_id")
-        .option("path", index_dir)
-        .saveAsTable(index_table)
+        .parquet(index_dir)
     )
 
 
@@ -449,159 +218,15 @@ def bootstrap_lsh_index(
     num_hashes: int = 32,
     bands: int = 8,
     rows_per_band: int = 4,
-    index_table: str | None = None,
-    index_buckets: int = 32,
-    layout: str = "explicit",
-    expected_batch_docs: int | None = None,
-) -> str:
+) -> None:
     """Seed ``index_dir`` with the band index of an existing corpus —
     the one-time batch backfill before the stream takes over. Stamped
     ``__batch_id = -1`` so streaming batches (ids ≥ 0) can never
-    collide with the bootstrap partition. With ``index_table`` set the
-    backfill is written through the bucketed catalog layout (see
-    :func:`register_lsh_index_table`); the table is registered first,
-    so a single call bootstraps the whole warehouse-scale setup.
-
-    ``layout`` (round-10 VERDICT item 3 — deployments shouldn't need
-    to know the knob):
-
-    * ``"explicit"`` (default) — bucketed iff ``index_table`` is set,
-      exactly the pre-round-11 behavior.
-    * ``"auto"`` — requires ``index_table`` AND ``expected_batch_docs``:
-      picks by :func:`choose_index_layout` from the bootstrap corpus's
-      own doc count vs the expected micro-batch size (the measured
-      two-regime policy). Below break-even the backfill is written PLAIN
-      and the catalog entry is NOT created; the sink (given the same
-      ``index_table``) follows the on-disk layout, and
-      :func:`migrate_lsh_index_to_bucketed` upgrades later in a
-      maintenance window once the corpus has outgrown the batch.
-
-    Returns the layout actually written: ``"bucketed"`` or ``"plain"``.
-    """
-    spark = docs.sparkSession
-    effective_table = index_table
-    if layout == "auto":
-        if index_table is None or not expected_batch_docs:
-            raise ValueError(
-                "layout='auto' needs index_table and expected_batch_docs"
-            )
-        n_docs = docs.count()  # one scan — the backfill is one-time
-        if choose_index_layout(n_docs, expected_batch_docs) == "plain":
-            effective_table = None
-            # an earlier bucketed deployment may have left a catalog
-            # entry under this name; a plain re-bootstrap must drop it,
-            # or the sink's follow-the-disk logic (which only fires when
-            # the entry is MISSING) would read the stale bucketed table
-            # over the new plain files every batch — 'Invalid bucket
-            # file' at best, an empty-corpus mine at worst (round-11
-            # review)
-            spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-    elif layout != "explicit":
-        raise ValueError(f"unknown layout {layout!r}")
+    collide with the bootstrap partition; replaces any prior index."""
     sigs = minhash_signatures(docs, text_col, id_col, n, num_hashes)
     idx = lsh_band_index(sigs, bands, rows_per_band)
-    fs_delete(spark, index_dir)  # a bootstrap replaces the whole index
-    if effective_table is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {effective_table}")
-        register_lsh_index_table(
-            spark, effective_table, index_dir, index_buckets,
-            doc_type=idx.schema["doc"].dataType.simpleString(),
-        )
-    _write_index_partition(idx, -1, index_dir, effective_table, index_buckets)
-    return "plain" if effective_table is None else "bucketed"
-
-
-def migrate_lsh_index_to_bucketed(
-    spark,
-    index_dir: str,
-    index_table: str,
-    index_buckets: int = 32,
-    doc_type: str = "string",
-    checkpoint_dir: str | None = None,
-) -> dict:
-    """Rewrite a PLAIN-layout LSH index as the bucketed catalog table —
-    the maintenance-window upgrade path once a stream that started
-    below the bucketed break-even has outgrown it (corpus ≥
-    ``BUCKETED_BREAKEVEN_RATIO`` × batch; :func:`choose_index_layout`).
-    A layout change is necessarily a full rewrite (bucket ids live in
-    the file layout), so this is one distinct-fold of the whole index
-    through a bucketed scratch table into a single consolidated
-    partition — the same job shape as a maximal
-    :func:`compact_lsh_index`, and it doubles as one.
-
-    MUST run with the stream stopped. Pass ``checkpoint_dir`` to have
-    that enforced structurally: any partition above the checkpoint's
-    committed watermark (a batch that crashed mid-run and WILL replay)
-    aborts the migration — folding it would let its replay see its own
-    rows (self-pairs), the same contract as compaction.
-
-    Crash safety: scratch-write → publish-rename → delete-old →
-    register. Not atomic end-to-end — a crash can leave mixed plain +
-    bucketed partitions (catalog reads would fail LOUDLY with 'Invalid
-    bucket file', never wrong answers) — but RE-RUNNING converges: the
-    rewrite reads every partition as plain parquet (bucket-named files
-    are still valid parquet), re-distincts, and replaces the lot.
-    """
-    base = index_dir.rstrip("/")
-    part_vals = list_batch_partitions(spark, index_dir)
-    if not part_vals:
-        raise ValueError(f"no index partitions under {index_dir}")
-    if checkpoint_dir is not None:
-        wm = last_committed_batch(spark, checkpoint_dir)
-        uncommitted = sorted(v for v in part_vals if v > wm)
-        if uncommitted:
-            raise ValueError(
-                f"partitions {uncommitted} are above the checkpoint's "
-                f"committed watermark ({wm}): that batch will replay and "
-                "must not be folded — resume the stream to commit it (or "
-                "delete the orphan partition) before migrating"
-            )
-    spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-    new_id = min(min(part_vals), -1) - 1
-    obs = Observation("migrate_rows")
-    consolidated = (
-        spark.read.schema(_index_schema(doc_type))
-        .parquet(index_dir)
-        .select("doc", "band", "bucket")
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-    )
-    scratch = base + "/.migrate_scratch"
-    scratch_table = f"{index_table}__migrate_scratch"
-    spark.sql(f"DROP TABLE IF EXISTS {scratch_table}")
-    fs_delete(spark, scratch)
-    (
-        consolidated.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(index_buckets, "band", "bucket")
-        .sortBy("band", "bucket")
-        .option("path", scratch)
-        .saveAsTable(scratch_table)
-    )
-    spark.sql(f"DROP TABLE {scratch_table}")  # files stay (external)
-    rows = obs.get["n"]
-    if not fs_rename(spark, scratch, f"{base}/__batch_id={new_id}"):  # pragma: no cover - FS race
-        raise IOError(f"migrate_lsh_index_to_bucketed: publish rename failed under {index_dir}")
-    # age marker, read from the SOURCES before they are deleted (same
-    # rule as compact_lsh_index): without it the migrated partition has
-    # unknown age and retention could never prune any pre-migration
-    # content again — the per-batch corpus scan retention exists to
-    # bound would silently resume growing (round-11 review)
-    ingests = [_max_ingest_batch(spark, base, v) for v in part_vals]
-    if all(i is not None for i in ingests):
-        fs_write_text(
-            spark, f"{base}/__batch_id={new_id}/.maxbatch", str(max(ingests))
-        )
-    for v in part_vals:
-        fs_delete(spark, f"{base}/__batch_id={v}")
-    register_lsh_index_table(
-        spark, index_table, index_dir, index_buckets, doc_type=doc_type
-    )
-    return {
-        "migrated_partitions": len(part_vals),
-        "rows": rows,
-        "new_partition_id": new_id,
-    }
+    fs_delete(docs.sparkSession, index_dir)  # a bootstrap replaces the whole index
+    _write_index_partition(idx, -1, index_dir)
 
 
 def incremental_near_dup_sink(
@@ -615,8 +240,6 @@ def incremental_near_dup_sink(
     rows_per_band: int = 4,
     compact_every: int | None = None,
     compact_max_partitions: int | None = None,
-    index_table: str | None = None,
-    index_buckets: int = 32,
     retain_batches: int | None = None,
     ts_col: str | None = None,
     retain_ts_seconds: float | None = None,
@@ -653,18 +276,6 @@ def incremental_near_dup_sink(
     spike (22.8 s in one batch, SCALE.md); pick ``K > compact_every``
     so reclaim keeps pace with partition arrival.
 
-    ``index_table`` switches the corpus index to the BUCKETED catalog
-    layout on (band, bucket) — the above-broadcast-envelope posture
-    this module's docstring names (round-9 VERDICT item 2; round-11
-    two-regime measurement). The per-batch mine then reads the corpus
-    through the catalog, whose bucket spec lets the planner elide the
-    corpus-side shuffle Exchange the SMJ of an above-envelope batch
-    would otherwise pay — for broadcastable batches the layout only
-    costs, so pick by ``choose_index_layout``. Use
-    :func:`bootstrap_lsh_index` with the same ``index_table`` (or
-    :func:`register_lsh_index_table` on a fresh session) first;
-    ``index_buckets`` must match the registered spec.
-
     ``retain_batches=N`` is RETENTION (round 11): after each batch the
     index keeps only content ingested in the last N batches
     (:func:`prune_lsh_index`, cutoff ``batch_id - N + 1``) — the
@@ -677,16 +288,6 @@ def incremental_near_dup_sink(
     ``compact_every``/``compact_max_partitions`` — the tiered fold
     age-bands the chunks so retention reclaims them in arrival order.
 
-    The sink FOLLOWS THE DISK: if the catalog entry is missing it is
-    re-derived from the index directory (bucket-suffixed files →
-    re-register; plain files → this stream runs plain, the
-    ``index_table`` argument notwithstanding) — so an auto-layout
-    bootstrap (:func:`bootstrap_lsh_index` ``layout="auto"``) and the
-    sink can both be handed the table name unconditionally, and the
-    pair output is identical either way (pinned in pytest). Upgrade a
-    plain index with :func:`migrate_lsh_index_to_bucketed` in a
-    maintenance window.
-
     TIME-BASED retention (round-11 VERDICT item 5): ``ts_col`` names
     the stream's event-time column; each batch partition then carries
     a ``.maxts`` sidecar (observed on the batch's own signature job —
@@ -696,32 +297,9 @@ def incremental_near_dup_sink(
     wall clock). A doc older than the window no longer pairs — the
     bounded-corpus posture stated in event time, the way real
     pipelines state it ("dedup against the last 30 days")."""
-    if retain_ts_seconds is not None and ts_col is None:
-        raise ValueError("retain_ts_seconds needs ts_col (no event time to age by)")
-    if retain_ts_seconds and compact_every and compact_max_partitions is None:
-        raise ValueError(
-            "retain_ts_seconds with an in-sink MAXIMAL fold (compact_every "
-            "set, compact_max_partitions=None) makes retention inert: "
-            "every fold re-marks all content fresh. Pass "
-            "compact_max_partitions=K (tiered fold) so chunks age-band "
-            "and expire, or run maximal folds in maintenance windows."
-        )
-    if retain_batches and compact_every and compact_max_partitions is None:
-        # the in-sink MAXIMAL fold re-absorbs EVERYTHING — including
-        # expired rows and prior chunks — into one chunk whose
-        # .maxbatch is always batch_id - 1, i.e. always inside the
-        # retention window: retention then never prunes anything while
-        # the operator believes the corpus is bounded (round-11
-        # review). The tiered fold is the compatible shape — it folds
-        # only the K OLDEST batch partitions, so chunks age-band and
-        # expire in arrival order.
-        raise ValueError(
-            "retain_batches with an in-sink MAXIMAL fold (compact_every "
-            "set, compact_max_partitions=None) makes retention inert: "
-            "every fold re-marks all content fresh. Pass "
-            "compact_max_partitions=K (tiered fold) so chunks age-band "
-            "and expire, or run maximal folds in maintenance windows."
-        )
+    check_sink_retention(
+        compact_every, compact_max_partitions, retain_batches, ts_col, retain_ts_seconds
+    )
 
     def mine_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -742,37 +320,7 @@ def incremental_near_dup_sink(
         new_idx = lsh_band_index(sigs, bands, rows_per_band).localCheckpoint(
             eager=True
         )
-        eff_table = index_table
-        if index_table is not None and not spark.catalog.tableExists(index_table):
-            if fs_exists(spark, index_dir):
-                # on-disk index without a catalog entry (fresh
-                # metastore, or a bootstrap that skipped
-                # register_lsh_index_table): NEVER fall through to an
-                # empty corpus — that would silently and PERMANENTLY
-                # lose this batch's pairs against the entire prior
-                # corpus (round-10 ADVICE item 2). Follow the layout
-                # the files actually have: bucket-suffixed names →
-                # re-register the catalog entry; plain names → run
-                # this stream plain (registering CLUSTERED BY over
-                # plain files would fail every catalog read with
-                # 'Invalid bucket file'; migrate_lsh_index_to_bucketed
-                # upgrades the layout in a maintenance window).
-                layout = _dir_layout(spark, index_dir)
-                if layout == "plain":
-                    eff_table = None
-                else:  # bucketed files, or no data files yet
-                    register_lsh_index_table(
-                        spark, index_table, index_dir, index_buckets,
-                        doc_type=new_idx.schema["doc"].dataType.simpleString(),
-                    )
-        if eff_table is not None and spark.catalog.tableExists(eff_table):
-            # catalog read — the bucket spec rides along, so the
-            # (band, bucket) join plans with NO Exchange on this
-            # side; the __batch_id predicate partition-prunes
-            corpus = spark.table(eff_table).filter(
-                F.col("__batch_id") < batch_id
-            )
-        elif fs_exists(spark, index_dir):
+        if fs_exists(spark, index_dir):
             # the corpus side is the index AS IT STOOD BEFORE THIS
             # BATCH (__batch_id < batch_id, partition-pruned): a
             # replayed batch then mines against exactly the same
@@ -808,9 +356,7 @@ def incremental_near_dup_sink(
         # index advances ONLY after the pairs write returned (ST2
         # ordering); __batch_id partitioning makes a replay overwrite
         # its own rows instead of double-appending
-        _write_index_partition(
-            new_idx, batch_id, index_dir, eff_table, index_buckets
-        )
+        _write_index_partition(new_idx, batch_id, index_dir)
         if tobs is not None and tobs.get["t"] is not None:
             fs_write_text(
                 spark,
@@ -827,14 +373,12 @@ def incremental_near_dup_sink(
                 index_dir,
                 upto_batch_id=batch_id - 1,
                 max_fold_partitions=compact_max_partitions,
-                # the plain-layout fold reads with an EXPLICIT schema;
+                # the fold reads with an EXPLICIT schema;
                 # its doc column must follow the stream's id type, not
                 # the string default — a long-keyed stream's first
                 # in-sink fold otherwise dies on a parquet type
                 # conversion (round-10 ADVICE item 1)
                 doc_type=new_idx.schema["doc"].dataType.simpleString(),
-                index_table=eff_table,
-                index_buckets=index_buckets,
             )
         if retain_batches:
             # retention runs AFTER compaction so a cadence that both
@@ -842,19 +386,13 @@ def incremental_near_dup_sink(
             # serial foreachBatch thread = no concurrent reader (same
             # contract as the in-sink fold)
             prune_lsh_index(
-                spark,
-                index_dir,
-                min_batch_id=batch_id - retain_batches + 1,
-                index_table=eff_table,
+                spark, index_dir, min_batch_id=batch_id - retain_batches + 1
             )
         if retain_ts_seconds is not None:
             horizon = latest_known_ts(spark, index_dir)
             if horizon is not None:
                 prune_lsh_index(
-                    spark,
-                    index_dir,
-                    min_ingest_ts=horizon - retain_ts_seconds,
-                    index_table=eff_table,
+                    spark, index_dir, min_ingest_ts=horizon - retain_ts_seconds
                 )
 
     return mine_batch

@@ -12,9 +12,8 @@ scratch-write → publish-rename → delete ordering, (c) ``.maxbatch``
 consolidated content, and (d) partition-granular RETENTION. Round 11
 shipped those protocols twice, deliberately mirrored; round-11 VERDICT
 item 4 asked for one core with the two indexes as policies — the
-index-specific parts (what a consolidated row IS, how the scratch is
-written, catalog mirroring for the bucketed dedup layout) enter as
-callables, and every safety-critical ordering lives HERE, once.
+index-specific part (what a consolidated row IS) enters as a
+callable, and every safety-critical ordering lives HERE, once.
 
 Contracts (shared by both indexes; each module's public functions
 document their own specifics):
@@ -165,13 +164,41 @@ def write_age_markers(
         )
 
 
+def check_sink_retention(
+    compact_every: int | None,
+    compact_max_partitions: int | None,
+    retain_batches: int | None,
+    ts_col: str | None,
+    retain_ts_seconds: float | None,
+) -> None:
+    """Reject a sink's retention options when they cannot work, at
+    sink construction. Time retention needs an event-time column. Any
+    retention combined with an in-sink MAXIMAL fold (``compact_every``
+    set, ``compact_max_partitions=None``) is inert: every fold
+    re-absorbs everything, expired rows and prior chunks included,
+    into one chunk whose age markers are always inside the window, so
+    partition-granular retention never prunes while the operator
+    believes the corpus is bounded. The tiered fold is the compatible
+    shape: it folds only the K oldest batch partitions, so chunks
+    age-band and expire in arrival order."""
+    if retain_ts_seconds is not None and ts_col is None:
+        raise ValueError("retain_ts_seconds needs ts_col (no event time to age by)")
+    if (retain_ts_seconds or retain_batches) and compact_every and compact_max_partitions is None:
+        knob = "retain_ts_seconds" if retain_ts_seconds else "retain_batches"
+        raise ValueError(
+            f"{knob} with an in-sink MAXIMAL fold (compact_every "
+            "set, compact_max_partitions=None) makes retention inert: "
+            "every fold re-marks all content fresh. Pass "
+            "compact_max_partitions=K (tiered fold) so chunks age-band "
+            "and expire, or run maximal folds in maintenance windows."
+        )
+
+
 def prune_index_partitions(
     spark: SparkSession,
     index_dir: str,
     min_batch_id: int | None = None,
     min_ingest_ts: float | None = None,
-    on_drop: Callable[[int], None] | None = None,
-    on_done: Callable[[], None] | None = None,
 ) -> dict:
     """RETENTION: delete partitions whose NEWEST content is expired —
     ingested before batch ``min_batch_id``, or carrying no event time
@@ -180,10 +207,7 @@ def prune_index_partitions(
     conservative conjunction). Partition-granular: a chunk mixing old
     and fresh rows is retained whole; the tiered fold consolidates
     oldest-first, so chunks age-band and expire in arrival order.
-    Unknown age (no marker) is never pruned. ``on_drop(part_id)`` runs
-    before each directory delete (catalog DROP PARTITION for the
-    bucketed dedup layout); ``on_done()`` once after any delete
-    (catalog REFRESH)."""
+    Unknown age (no marker) is never pruned."""
     if min_batch_id is None and min_ingest_ts is None:
         raise ValueError("prune needs min_batch_id and/or min_ingest_ts")
     base = index_dir.rstrip("/")
@@ -197,12 +221,8 @@ def prune_index_partitions(
             eff_ts = max_ingest_ts_marker(spark, base, v)
             if eff_ts is None or eff_ts >= min_ingest_ts:
                 continue
-        if on_drop is not None:
-            on_drop(v)
         fs_delete(spark, f"{base}/__batch_id={v}")
         removed.append(v)
-    if removed and on_done is not None:
-        on_done()
     return {"pruned_partitions": len(removed), "pruned_ids": sorted(removed)}
 
 
@@ -211,13 +231,9 @@ def fold_index_partitions(
     index_dir: str,
     upto_batch_id: int,
     read_consolidated: Callable[[list[int]], DataFrame],
-    write_scratch: Callable[[DataFrame, str], None],
     checkpoint_dir: str | None = None,
     max_fold_partitions: int | None = None,
     chunk_merge_at: int = 8,
-    on_publish: Callable[[int], None] | None = None,
-    on_drop: Callable[[int], None] | None = None,
-    on_fold_done: Callable[[], None] | None = None,
 ) -> dict:
     """COMPACTION: fold partitions with ``__batch_id <= upto_batch_id``
     into consolidated negative-id partitions — the maintenance operator
@@ -226,13 +242,9 @@ def fold_index_partitions(
     triggers: the classic small-files failure, hit at month scale even
     on a 1000-executor cluster).
 
-    Policy callables: ``read_consolidated(ids)`` returns the rows to
+    Policy callable: ``read_consolidated(ids)`` returns the rows to
     persist for those source partitions (each index's own schema,
-    already distinct); ``write_scratch(df, path)`` writes them in the
-    index's physical layout (plain parquet, ``__bpart``-partitioned,
-    or through a bucketed scratch table). ``on_publish(new_id)`` /
-    ``on_drop(old_id)`` / ``on_fold_done()`` mirror partition changes
-    into a catalog when the index has one. Everything else — the
+    already distinct), written as parquet. Everything else — the
     watermark clamp, the scratch → rename → delete ordering, row-count
     observation on the write job itself, age markers, and the tier
     policy — is the shared contract (module docstring).
@@ -267,18 +279,12 @@ def fold_index_partitions(
             obs, F.count(F.lit(1)).alias("n")
         )
         scratch = base + "/.compact_scratch"
-        write_scratch(consolidated, scratch)
+        consolidated.write.mode("overwrite").parquet(scratch)
         if not fs_rename(spark, scratch, f"{base}/__batch_id={new_id}"):  # pragma: no cover - FS race
             raise IOError(f"index fold: publish rename failed under {index_dir}")
         write_age_markers(spark, base, new_id, ids)
-        if on_publish is not None:
-            on_publish(new_id)
         for v in ids:
-            if on_drop is not None:
-                on_drop(v)
             fs_delete(spark, f"{base}/__batch_id={v}")
-        if on_fold_done is not None:
-            on_fold_done()
         return obs.get["n"]
 
     eligible = sorted(v for v in part_vals if v <= upto_batch_id)

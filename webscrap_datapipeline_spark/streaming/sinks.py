@@ -11,11 +11,12 @@ recovery) overwrites its own output instead of double-appending.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..fsutil import fs_exists
 
 
 def warehouse_append_sink(
@@ -67,8 +68,8 @@ def warehouse_append_sink(
         # state advances ONLY after the warehouse write returned — the
         # reference's commit ordering (ST2).
         watermarks = batch_df.groupBy(key_col).agg(F.max(ts_col).alias("last_seen"))
-        prev_path = os.path.join(state_dir, "current")
-        if os.path.exists(prev_path):
+        prev_path = f"{state_dir.rstrip('/')}/current"
+        if fs_exists(spark, prev_path):
             prev = spark.read.parquet(prev_path)
             merged = (
                 watermarks.unionByName(prev)
@@ -81,7 +82,7 @@ def warehouse_append_sink(
             merged = merged.repartition(state_shards, key_col)
         else:
             merged = merged.coalesce(1)
-        tmp = os.path.join(state_dir, f"_staging_{batch_id}")
+        tmp = f"{state_dir.rstrip('/')}/_staging_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         final = spark.read.parquet(tmp)
         if state_shards > 1:
