@@ -404,6 +404,47 @@ def test_warehouse_sink_sharded_state_table(spark, tmp_path):
         warehouse_append_sink(wh, st, key_col="key", ts_col="ts", state_shards=0)
 
 
+def test_warehouse_sink_swaps_state_and_heals_a_failed_rename(spark, tmp_path, monkeypatch):
+    """The sink writes each batch's state once, to the fixed sibling
+    ``current.staging``, and swaps it in: no per-batch staging dir is
+    left behind. A swap whose second rename fails raises, and the next
+    batch restores the renamed-aside state, keeping every watermark."""
+    import pytest
+
+    from webscrap_datapipeline_spark import fsutil
+    from webscrap_datapipeline_spark.streaming.sinks import warehouse_append_sink
+
+    wh = str(tmp_path / "warehouse")
+    st = str(tmp_path / "state")
+    sink = warehouse_append_sink(wh, st, key_col="key", ts_col="ts")
+    mk = lambda rows: spark.createDataFrame(rows, "key string, ts timestamp, v double")
+    t = lambda h: dt.datetime(2024, 1, 1, h)
+    state = lambda: {
+        r["key"]: r["last_seen"] for r in spark.read.parquet(os.path.join(st, "current")).collect()
+    }
+    sink(mk([("A", t(0), 1.0), ("B", t(1), 2.0)]), 0)
+    sink(mk([("A", t(2), 3.0)]), 1)
+    sink(mk([("C", t(3), 4.0)]), 2)
+    assert sorted(os.listdir(st)) == ["current"]
+    assert state() == {"A": t(2), "B": t(1), "C": t(3)}
+
+    real, calls = fsutil.fs_rename, []
+
+    def fail_second(spark_, src, dst):
+        calls.append((src, dst))
+        return False if len(calls) == 2 else real(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "fs_rename", fail_second)
+    with pytest.raises(IOError, match="fs_swap"):
+        sink(mk([("D", t(4), 5.0)]), 3)
+    monkeypatch.setattr(fsutil, "fs_rename", real)
+    assert not os.path.exists(os.path.join(st, "current"))  # the crash window
+
+    sink(mk([("D", t(4), 5.0)]), 3)  # the engine replays the failed batch
+    assert state() == {"A": t(2), "B": t(1), "C": t(3), "D": t(4)}
+    assert sorted(os.listdir(st)) == ["current"]
+
+
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     from webscrap_datapipeline_spark.streaming.enrich import interval_join_streams
 

@@ -9,16 +9,17 @@ reference's main() (main.py:30-112, traced in SURVEY.md §3.1):
   audit log append                                      │
   state commit (ONLY after loads succeed — ST2)  ←──────┘
 
-Two actions total (warehouse write, log write) + one small state write;
-everything between is one lazy DAG. The scrape result is cached before
-use so Spark's recompute-on-failure can't re-fire side effects.
+A steady cycle (20 of 60 hotels changed, 32 shuffle partitions) runs 21
+jobs of 28 tasks: changed keys are cached as one partition and broadcast.
+Reads: state, raw scan, existing warehouse (lineage anti-join, SCD union),
+committed warehouse once (log, loaded keys). Counts are observed on writes.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .fsutil import fs_exists, fs_heal_swap, fs_swap
@@ -57,17 +58,19 @@ def run_incremental(
     fs_heal_swap(spark, state_path)
     fs_heal_swap(spark, warehouse_path)
     state = read_state(spark, state_path)
-    changed = detect_changes(available, state, "key", "last_seen_ts").cache()
+    # one partition: cached as is, the dedupe's output keeps every one of
+    # spark.sql.shuffle.partitions (AQE cannot coalesce a cached plan)
+    changed = detect_changes(available, state, "key", "last_seen_ts").coalesce(1).cache()
     n_changed = changed.count()
     if n_changed == 0:
+        changed.unpersist()
         return PipelineResult(0, 0, 0)  # early-exit (reference main.py:58-59)
 
     # Enrich every fetched raw file in one scan; restrict to changed keys
     # (semi-join — the reference restricts by only downloading changed files).
+    requested = changed.select(F.col("key").alias("LOC_ID"))
     raw = read_raw_reports(spark, raw_glob)
-    enriched = enrich_reports(raw).join(
-        F.broadcast(changed.select(F.col("key").alias("LOC_ID"))), "LOC_ID", "left_semi"
-    )
+    enriched = enrich_reports(raw).join(F.broadcast(requested), "LOC_ID", "left_semi")
 
     # Optional row quarantine (ST4 generalized): rule violations leave
     # the load path as DATA (reprocessable, with reasons) instead of
@@ -75,52 +78,47 @@ def run_incremental(
     n_quarantined = 0
     if quarantine_rules:
         enriched, bad = quarantine(enriched, quarantine_rules)
-        if quarantine_path is not None:
-            bad.write.mode("append").parquet(quarantine_path)
-            n_quarantined = spark.read.parquet(quarantine_path).count()
-        else:
+        if quarantine_path is None:
             n_quarantined = bad.count()
+        else:  # this cycle's rows only, counted as they are written
+            q_obs = Observation()
+            bad = bad.observe(q_obs, F.count("*").alias("n"))
+            bad.write.mode("append").parquet(quarantine_path)
+            n_quarantined = int(q_obs.get["n"])
 
     # Warehouse append with SCD current-flag maintenance (K5+K3).
+    existing = enriched.limit(0)
     if fs_exists(spark, warehouse_path):
         existing = spark.read.parquet(warehouse_path)
         # ingest only files not already loaded (the reference relied on
         # emptying its raw dir each run, K6; lineage anti-join replaces
         # that filesystem lifecycle and is replay-safe)
-        enriched = enriched.join(
-            existing.select("LOC_ID", "SRC_FILENAME").distinct(),
-            ["LOC_ID", "SRC_FILENAME"],
-            "left_anti",
-        )
-        merged = apply_current_flag(
-            existing, enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
-        )
-    else:
-        merged = apply_current_flag(
-            enriched.limit(0), enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
-        )
-    tmp = warehouse_path + ".staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    fs_swap(spark, warehouse_path, tmp)
-    loaded = spark.read.parquet(warehouse_path).count()
-
-    # Audit log (ST5): every changed key gets a row; keys whose file never
-    # arrived get the NULL row (J4 left-outer semantics).
-    log_df = build_log_table(
-        changed.select(F.col("key").alias("LOC_ID")),
-        spark.read.parquet(warehouse_path).filter(F.col("CURRENT_IND") == "Y"),
+        lineage = existing.select("LOC_ID", "SRC_FILENAME").distinct()
+        enriched = enriched.join(lineage, ["LOC_ID", "SRC_FILENAME"], "left_anti")
+    merged = apply_current_flag(
+        existing, enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
     )
+    tmp = warehouse_path + ".staging"
+    w_obs = Observation()
+    merged.observe(w_obs, F.count("*").alias("n")).write.mode("overwrite").parquet(tmp)
+    fs_swap(spark, warehouse_path, tmp)
+    loaded = int(w_obs.get["n"])
+
+    # Audit log (ST5): one row per changed key, the NULL row for a key whose
+    # file never arrived (J4 left-outer). One read of the committed warehouse
+    # (schema as written: no inference job) feeds the log and the state.
+    current = (
+        spark.read.schema(merged.schema)
+        .parquet(warehouse_path)
+        .filter(F.col("CURRENT_IND") == "Y")
+        .join(F.broadcast(requested), "LOC_ID", "left_semi")
+    )
+    log_df = build_log_table(requested, current).cache()
     log_df.write.mode("append").parquet(log_path)
-    n_log = log_df.count()
 
     # State commit LAST (ST2): only keys that made it into the warehouse
     # advance the watermark, so failures retry next cycle.
-    loaded_keys = (
-        spark.read.parquet(warehouse_path)
-        .filter(F.col("CURRENT_IND") == "Y")
-        .select(F.col("LOC_ID").alias("key"))
-        .distinct()
-    )
+    loaded_keys = log_df.filter(F.col("DATA_AMT") > 0).select(F.col("LOC_ID").alias("key"))
     updates = changed.join(loaded_keys, "key", "left_semi").select("key", "last_seen_ts")
     new_state = update_state(
         state.withColumnRenamed("last_seen_ts", "ts_state"),
@@ -130,5 +128,7 @@ def run_incremental(
     ).withColumnRenamed("ts_state", "last_seen_ts")
     commit_state(new_state, state_path)
 
+    log_df.unpersist()
     changed.unpersist()
-    return PipelineResult(n_changed, loaded, n_log, n_quarantined)
+    # changed keys are distinct and the log left-joins one row per key
+    return PipelineResult(n_changed, loaded, n_changed, n_quarantined)

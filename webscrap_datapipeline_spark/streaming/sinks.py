@@ -16,7 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_exists
+from ..fsutil import fs_exists, fs_heal_swap, fs_swap
 
 
 def warehouse_append_sink(
@@ -69,6 +69,7 @@ def warehouse_append_sink(
         # reference's commit ordering (ST2).
         watermarks = batch_df.groupBy(key_col).agg(F.max(ts_col).alias("last_seen"))
         prev_path = f"{state_dir.rstrip('/')}/current"
+        fs_heal_swap(spark, prev_path)
         if fs_exists(spark, prev_path):
             prev = spark.read.parquet(prev_path)
             merged = (
@@ -82,13 +83,11 @@ def warehouse_append_sink(
             merged = merged.repartition(state_shards, key_col)
         else:
             merged = merged.coalesce(1)
-        tmp = f"{state_dir.rstrip('/')}/_staging_{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        if state_shards > 1:
-            final = final.repartition(state_shards, key_col)
-        else:
-            final = final.coalesce(1)
-        final.write.mode("overwrite").parquet(prev_path)
+        # one write to a fixed sibling, then a swap: readers see the old
+        # state or the new one, and a crash between the swap's renames is
+        # healed by fs_heal_swap above on the next batch
+        staging = prev_path + ".staging"
+        merged.write.mode("overwrite").parquet(staging)
+        fs_swap(spark, prev_path, staging)
 
     return write_batch
