@@ -48,18 +48,13 @@ def _dilute(value, args):
     `value` increases by `keys` per occurrence, so value div (keys*P)
     is non-decreasing — the monotone contract holds — and only every
     P-th occurrence is a CHANGE, the rest are duplicate (key, ts) pairs
-    the operators must cheaply re-absorb (at-least-once re-emit on the
-    agg path; state no-op on the dedupe path).
+    the operators must cheaply re-absorb (a state no-op on both paths).
 
-    The value is zero-padded to a FIXED 19-digit width (round-8
-    ADVICE): the jvm mode's operator orders this STRING column with
-    F.max, and bare decimal strings order lexicographically
-    ('1000000' < '999999'), so across a digit-length boundary the
-    stored max would stick and long stretches would stop advancing
-    state — breaking both the per-key monotone contract and the
-    "every row a state write" worst-case claim. %019d covers every
-    non-negative int64, making string order == numeric order for all
-    modes (python/jvm_once compare by equality and are unaffected)."""
+    The value is zero-padded to a FIXED 19-digit width so that string
+    order equals numeric order (bare decimal strings order
+    lexicographically, '1000000' < '999999'): the STRING column stays
+    monotone per key, as the monotone path's contract requires. %019d
+    covers every non-negative int64."""
     if args.change_period <= 1:
         return F.format_string("%019d", value)
     return F.format_string(
@@ -83,13 +78,10 @@ def main() -> None:
     )
     ap.add_argument(
         "--mode",
-        choices=("python", "jvm", "jvm_once"),
+        choices=("python", "jvm_once"),
         default="python",
         help="'python' = exact applyInPandasWithState path (full ST1 "
-        "semantics, per-group Python dispatch bound); 'jvm' = "
-        "detect_changes_stream_monotone — update-mode max() aggregate, "
-        "every per-key op in the JVM state store (monotone versions, "
-        "at-least-once emission, no change_kind); 'jvm_once' = "
+        "semantics, per-group Python dispatch bound); 'jvm_once' = "
         "detect_changes_stream_monotone_exactly_once — append-mode "
         "dropDuplicatesWithinWatermark on (key, value), still all-JVM, "
         "exactly-once inside the watermark horizon (state is "
@@ -120,7 +112,6 @@ def main() -> None:
     from webscrap_datapipeline_spark.session import get_spark
     from webscrap_datapipeline_spark.streaming.change_detection import (
         detect_changes_stream,
-        detect_changes_stream_monotone,
         detect_changes_stream_monotone_exactly_once,
     )
 
@@ -141,13 +132,7 @@ def main() -> None:
         )
     )
 
-    if args.mode == "jvm":
-        ws = (
-            detect_changes_stream_monotone(src)
-            .writeStream.format("noop")
-            .outputMode("update")
-        )
-    elif args.mode == "jvm_once":
+    if args.mode == "jvm_once":
         # keep the rate source's event time for the watermark; the
         # worst-case-churn mapping stays identical otherwise
         src_once = (

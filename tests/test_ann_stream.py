@@ -673,75 +673,103 @@ def test_ann_geometry_migration_adopts_new_geometry(spark, sf_dir, tmp_path):
     assert again["migrated_partitions"] == 0
 
 
-def test_ann_geometry_migration_crash_windows_recover(
+def test_ann_geometry_migration_crash_at_every_step_recovers(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The migration swap's crash windows: a crash between rename-aside
-    and rename-in leaves no index at index_dir (readers fail LOUDLY —
-    never mixed geometry) with a COMPLETE scratch; re-running finishes
-    the swap. A crash that left the old dir renamed aside with an
-    incomplete scratch restores the old index and redoes the work. An
-    uncommitted partition above the checkpoint watermark aborts."""
+    """The migration's crash contract, at every step: the k-th mutating
+    ``fsutil`` call of a clean migration raises, for every k. After the
+    crash the index answers exactly the batch operator under ONE
+    geometry (the old one until the commit rename, the new one after)
+    or fails loudly with "no ANN index"; it never mixes. The next
+    migration ends at the new geometry with no ``.old`` or ``.staging``
+    sibling left. An uncommitted partition above the checkpoint
+    watermark aborts."""
+    import shutil
+
+    import webscrap_datapipeline_spark.fsutil as fsutil
     import webscrap_datapipeline_spark.streaming.ann_stream as anns
 
     emb = _emb(spark, sf_dir)
     index_dir = str(tmp_path / "ann_idx")
-    corpus = emb.filter(F.col("vec_id") < 150)
+    pristine = str(tmp_path / "pristine")
     queries = _queries(emb, 200, 203)
     cols = ("query_id", "vec_id", "rnk")
-    bootstrap_ann_index(corpus, index_dir, dim=DIM, n_planes=6)
-    sink = incremental_ann_sink(index_dir, dim=DIM, n_planes=6)
-    sink(emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200)), 0)
-    all_corpus = emb.filter(F.col("vec_id") < 200)
+    bootstrap_ann_index(emb.filter(F.col("vec_id") < 150), index_dir, dim=DIM, n_planes=6)
+    incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(
+        emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200)), 0
+    )
+    shutil.copytree(index_dir, pristine)
+    corpus = emb.filter(F.col("vec_id") < 200)
+    want = {
+        n: _rows(lsh_topk(corpus, queries, k=3, dim=DIM, n_planes=n), *cols)
+        for n in (6, 4)
+    }
+    assert want[6] and want[4] and want[6] != want[4]
 
-    real = anns.fs_rename
-    calls = {"n": 0}
+    calls = []
+    crash_at = {"k": None}
 
-    def crash_on_second(spark_, src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated crash mid-swap")
-        return real(spark_, src, dst)
+    def patched(name, real):
+        def call(*args):
+            calls.append((name, args[1:]))
+            if len(calls) == crash_at["k"]:
+                raise RuntimeError(f"simulated crash at {name}")
+            return real(*args)
 
-    monkeypatch.setattr(anns, "fs_rename", crash_on_second)
-    with pytest.raises(RuntimeError, match="mid-swap"):
+        return call
+
+    for name in ("fs_rename", "fs_delete", "fs_write_text"):
+        real = getattr(fsutil, name)
+        for mod in (fsutil, anns):
+            if hasattr(mod, name):
+                monkeypatch.setattr(mod, name, patched(name, real))
+
+    def restore():
+        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
+            shutil.rmtree(d, ignore_errors=True)
+        shutil.copytree(pristine, index_dir)
+
+    def served():
+        try:
+            got = ann_query_index(spark, index_dir, queries, k=3)
+        except ValueError as e:
+            assert "no ANN index" in str(e)
+            return None
+        return read_ann_geometry(spark, index_dir)["n_planes"], _rows(got, *cols)
+
+    # a clean migration's mutating calls, and the one that commits
+    anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
+    clean = list(calls)
+    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
+    assert len(clean) >= 5, clean
+
+    for k in range(1, len(clean) + 1):
+        restore()
+        calls.clear()
+        crash_at["k"] = k
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
+        crash_at["k"] = None
+        if k < commit:
+            expect = (6, want[6])
+        elif k == commit:
+            expect = None  # between the two renames: no index, loud
+        else:
+            expect = (4, want[4])
+        assert served() == expect, k
         anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
-    monkeypatch.setattr(anns, "fs_rename", real)
-
-    # the loud window: no index at index_dir, no mixed answers possible
-    assert not os.path.exists(index_dir)
-    with pytest.raises(ValueError, match="no ANN index"):
-        ann_query_index(spark, index_dir, queries, k=3)
-
-    # re-run finishes the swap from the complete scratch
-    out = anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
-    assert out.get("recovered") is True
-    assert not os.path.exists(index_dir + ".migrate_old")
-    assert not os.path.exists(index_dir + ".migrate_scratch")
-    assert read_ann_geometry(spark, index_dir)["n_planes"] == 4
-    want = lsh_topk(all_corpus, queries, k=3, dim=DIM, n_planes=4)
-    got = ann_query_index(spark, index_dir, queries, k=3)
-    assert _rows(got, *cols) == _rows(want, *cols) and got.count() > 0
-
-    # incomplete-scratch window: old dir renamed aside, scratch junk
-    os.rename(index_dir, index_dir + ".migrate_old")
-    os.makedirs(index_dir + ".migrate_scratch/__batch_id=-9", exist_ok=True)
-    out2 = anns.migrate_ann_index_geometry(spark, index_dir, n_planes=6)
-    assert out2["migrated_partitions"] > 0
-    assert read_ann_geometry(spark, index_dir)["n_planes"] == 6
-    want6 = lsh_topk(all_corpus, queries, k=3, dim=DIM, n_planes=6)
-    assert _rows(
-        ann_query_index(spark, index_dir, queries, k=3), *cols
-    ) == _rows(want6, *cols)
+        assert served() == (4, want[4]), k
+        assert not os.path.exists(index_dir + ".old"), k
+        assert not os.path.exists(index_dir + ".staging"), k
 
     # uncommitted partition above the watermark aborts (fresh ckpt:
     # wm=-1, so the batch-5 partition is provably uncommitted)
-    incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(
+    incremental_ann_sink(index_dir, dim=DIM, n_planes=4)(
         emb.filter(F.col("vec_id") == 250), 5
     )
     with pytest.raises(ValueError, match="committed watermark"):
         anns.migrate_ann_index_geometry(
-            spark, index_dir, n_planes=4,
+            spark, index_dir, n_planes=6,
             checkpoint_dir=str(tmp_path / "ckpt_none"),
         )
 

@@ -308,54 +308,37 @@ def test_steady_cycle_runs_fewer_tasks_than_one_shuffle(spark, workspace):
     assert 0 < tasks < 32
 
 
-def test_scd_upsert_partitioned_rewrites_only_touched_buckets(spark, tmp_path):
-    """Partition-scoped SCD (round-1 verdict item 6): an incoming batch
-    must rewrite ONLY the hash buckets containing its keys — every
-    parquet byte in untouched partition dirs stays identical — while the
-    flag protocol still matches apply_current_flag semantics globally."""
-    import hashlib
+def test_raw_report_glob_builds_without_a_listing_job(spark, tmp_path):
+    """``read_raw_reports(spark, "<dir>/*.csv")`` reads the directory
+    with the last segment as ``pathGlobFilter``. Handed the glob, Spark
+    lists each of more than 32 matching files as a root path, in a
+    parallel listing job with one task per file, while the frame is
+    still being built."""
+    from webscrap_datapipeline_spark.sources.csv_reports import read_raw_reports
 
-    from webscrap_datapipeline_spark.operators.scd import scd_upsert_partitioned
+    raw = str(tmp_path / "raw")
+    os.makedirs(raw)
+    names = {f"H{i:02d}_08132026_10-00-00.csv" for i in range(40)}
+    for name in names:
+        _write_raw(raw, name.split("_", 1)[0], "08132026_10-00-00", 2)
+    with open(os.path.join(raw, "README.txt"), "w") as fh:
+        fh.write("not a report\n")
 
-    target = str(tmp_path / "scd_target")
-    n_buckets = 8
-    keys = ["A", "B", "C", "D", "E", "F"]
-    initial = spark.createDataFrame(
-        [(k, 1, f"v1-{k}") for k in keys], ["k", "ts", "payload"]
-    )
-    scd_upsert_partitioned(
-        spark, initial, target, key="k", ts="ts", n_buckets=n_buckets
-    )
+    sc = spark.sparkContext
+    group = "raw-report-frame-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_raw_reports(spark, raw + "/*.csv")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
-    def bucket_files():
-        out = {}
-        for root, _dirs, files in os.walk(target):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    with open(p, "rb") as fh:
-                        out[os.path.relpath(p, target)] = hashlib.md5(fh.read()).hexdigest()
-        return out
-
-    before = bucket_files()
-    batch = spark.createDataFrame([("A", 2, "v2-A")], ["k", "ts", "payload"])
-    touched = scd_upsert_partitioned(
-        spark, batch, target, key="k", ts="ts", n_buckets=n_buckets
-    )
-    assert len(touched) == 1
-    touched_dir = f"__bucket={touched[0]}"
-    after = bucket_files()
-
-    untouched_before = {p: h for p, h in before.items() if not p.startswith(touched_dir)}
-    untouched_after = {p: h for p, h in after.items() if not p.startswith(touched_dir)}
-    assert untouched_before == untouched_after  # byte-identical, not rewritten
-
-    wh = spark.read.parquet(target)
-    cur = {r["k"]: r["payload"] for r in wh.filter(F.col("CURRENT_IND") == "Y").collect()}
-    assert cur["A"] == "v2-A"  # new version flagged current
-    assert {cur[k] for k in "BCDEF"} == {f"v1-{k}" for k in "BCDEF"}
-    old_a = wh.filter((F.col("k") == "A") & (F.col("CURRENT_IND").isNull())).collect()
-    assert len(old_a) == 1 and old_a[0]["payload"] == "v1-A"  # history kept, de-flagged
+    rows = df.select("src_path", "Ref Code").collect()
+    assert len(rows) == 2 * len(names)
+    assert {os.path.basename(r["src_path"]) for r in rows} == names
+    assert {r["Ref Code"] for r in rows} == {"00000", "00001"}
 
 
 # ----------------------------------------------------------------------------
@@ -400,18 +383,18 @@ def test_documents_ascii_pure_at_every_shipped_sf(sf_name):
 
 
 def test_scd_upsert_target_exists_via_hadoop_fs(spark, tmp_path):
-    """_target_exists consults the Hadoop FileSystem for the path's own
+    """fs_exists consults the Hadoop FileSystem for the path's own
     scheme (ADVICE r2: os.path.exists misreads any non-driver-local URI
-    as absent, turning the init overwrite into silent data loss)."""
-    from webscrap_datapipeline_spark.operators.scd import _target_exists
+    as absent, turning an init overwrite into silent data loss)."""
+    from webscrap_datapipeline_spark.fsutil import fs_exists
 
     missing = str(tmp_path / "nope")
-    assert not _target_exists(spark, missing)
+    assert not fs_exists(spark, missing)
     present = str(tmp_path / "yes")
     spark.range(3).write.parquet(present)
-    assert _target_exists(spark, present)
+    assert fs_exists(spark, present)
     # file:// URI form resolves through the same FileSystem API
-    assert _target_exists(spark, "file://" + present)
+    assert fs_exists(spark, "file://" + present)
 
 
 def test_label_centroids_array_matches_exploded(spark):

@@ -408,24 +408,6 @@ def test_contamination_screen_broadcasts_probes_never_shuffles_docs(spark):
     assert plan.count("+- Exchange") == 1, plan[:2000]
 
 
-def test_scd_upsert_read_prunes_to_touched_buckets(spark, tmp_path):
-    """The partition-scoped SCD read-back must prune at the partition
-    level: the touched-bucket isin filter has to land in PartitionFilters
-    of the parquet scan, not a post-scan Filter over all buckets."""
-    from webscrap_datapipeline_spark.operators.scd import scd_upsert_partitioned
-
-    target = str(tmp_path / "scd_prune")
-    initial = spark.createDataFrame(
-        [(k, 1, f"v1-{k}") for k in "ABCDEF"], ["k", "ts", "payload"]
-    )
-    scd_upsert_partitioned(spark, initial, target, key="k", ts="ts", n_buckets=8)
-    touched = [0, 3]
-    pruned = spark.read.parquet(target).filter(F.col("__bucket").isin(touched))
-    plan = plan_str(pruned)
-    part_filters = plan.split("PartitionFilters:")[1].splitlines()[0]
-    assert "__bucket" in part_filters, plan[:2000]
-
-
 def test_activity_concentration_has_no_single_task_global_sort(spark):
     """Round-3 VERDICT item 4: the user-rank in
     user_activity_concentration must come from the two-pass range-

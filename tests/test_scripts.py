@@ -7,6 +7,9 @@ metrics were never captured) are data-integrity bugs, not conveniences.
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib.util
 import json
 import os
 import sys
@@ -221,3 +224,30 @@ def test_ann_probe_synth_vec_deterministic_and_injective(spark):
     assert len(set(vecs)) == len(vecs)
     assert all(-1.0 <= x <= 1.0 for v in vecs for x in v)
     assert all(len(v) == 16 for v in vecs)
+
+
+def test_script_package_imports_resolve():
+    """Every ``from webscrap_datapipeline_spark... import name`` in
+    ``scripts/*.py``, at any nesting, names something that exists. A
+    probe imports most package names inside ``main()``, so a deleted
+    package function otherwise surfaces only when someone runs it."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    missing = []
+    n = 0
+    for path in sorted(glob.glob(os.path.join(root, "scripts", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[0] == "webscrap_datapipeline_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                n += 1
+                if not hasattr(mod, alias.name) and importlib.util.find_spec(
+                    f"{node.module}.{alias.name}"
+                ) is None:
+                    missing.append(f"{os.path.basename(path)}: {node.module}.{alias.name}")
+    assert n > 0 and not missing, missing

@@ -94,60 +94,10 @@ def test_stateful_change_detection_across_microbatches(spark, tmp_path):
     assert len([r for r in allrows if r[0] == "A"]) == 1
 
 
-def test_jvm_monotone_change_stream_semantics(spark, tmp_path):
-    """The JVM fast path (update-mode max aggregate) vs its contract:
-    every true change emitted with the key's current maximum; unchanged
-    re-observation MAY re-emit the same (key, value) row (at-least-once
-    — Spark flushes every state row a batch touches), so the DEDUPED
-    emission set must equal the exact path's change set modulo the
-    change_kind tag. Monotone versions, matching the reference's
-    advancing scrape timestamps."""
-    from webscrap_datapipeline_spark.streaming.change_detection import (
-        detect_changes_stream_monotone,
-    )
-
-    src_dir = str(tmp_path / "keys_jvm")
-    ckpt = str(tmp_path / "ckpt_jvm")
-    _write_events_json(src_dir, ['{"key": "A", "last_seen_ts": "t1"}',
-                                 '{"key": "B", "last_seen_ts": "t1"}'])
-    stream = spark.readStream.schema("key string, last_seen_ts string").json(src_dir)
-    q = (
-        detect_changes_stream_monotone(stream)
-        .writeStream.format("memory")
-        .queryName("cd_jvm_test")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = {(r["key"], r["last_seen_ts"])
-                 for r in spark.sql("select * from cd_jvm_test").collect()}
-        assert first == {("A", "t1"), ("B", "t1")}
-
-        # second micro-batch: A unchanged (dup), B advanced, C new
-        _write_events_json(src_dir, ['{"key": "A", "last_seen_ts": "t1"}',
-                                     '{"key": "B", "last_seen_ts": "t2"}',
-                                     '{"key": "C", "last_seen_ts": "t1"}'])
-        q.processAllAvailable()
-        allrows = [(r["key"], r["last_seen_ts"])
-                   for r in spark.sql("select * from cd_jvm_test").collect()]
-    finally:
-        q.stop()
-    emitted = set(allrows)
-    # deduped emissions == the exact path's change set (kind aside):
-    # {A:t1 new, B:t1 new, B:t2 changed, C:t1 new}
-    assert emitted == {("A", "t1"), ("B", "t1"), ("B", "t2"), ("C", "t1")}
-    # at-least-once, never wrong-valued: no row may carry a non-current
-    # value at emission time — for monotone inputs that means no value
-    # other than the key's running max ever appears
-    assert ("B", "t1") in emitted  # the pre-advance max was emitted in batch 1
-
-
 def test_jvm_monotone_exactly_once_wrapper(spark, tmp_path):
-    """detect_changes_stream_monotone_exactly_once: the dedupe-only
-    exactly-once form (round-7 VERDICT note 2). Same change set as the
-    at-least-once aggregate path, but a duplicate equal-value
+    """detect_changes_stream_monotone_exactly_once: the all-JVM
+    change feed for monotone versions. It emits the exact path's change
+    set without the change_kind tag, and a duplicate equal-value
     re-observation inside the watermark horizon emits NOTHING — row
     count equals the number of true changes exactly, no consumer-side
     dedupe needed."""
@@ -190,58 +140,6 @@ def test_jvm_monotone_exactly_once_wrapper(spark, tmp_path):
         q.stop()
     # exactly-once: the MULTISET equals the change set — 4 rows, no dups
     assert sorted(allrows) == [("A", "t1"), ("B", "t1"), ("B", "t2"), ("C", "t1")]
-
-
-def test_monotone_agg_then_dedupe_chain_is_rejected(spark, tmp_path):
-    """Adjudication pin (round-7 VERDICT task 4 prescribed an
-    agg → dropDuplicatesWithinWatermark post-stage): Spark 4.1.2
-    structurally rejects that chain in BOTH output modes — update mode
-    trips the global-watermark correctness checker (stateful op
-    downstream of one that can emit watermark-late rows), append mode
-    refuses the non-windowed streaming aggregation itself. If a future
-    Spark version starts accepting it, this test fails and the
-    post-stage design should be revisited."""
-    import pytest
-    from pyspark.sql.utils import AnalysisException
-
-    from webscrap_datapipeline_spark.streaming.change_detection import (
-        detect_changes_stream_monotone,
-    )
-
-    src_dir = str(tmp_path / "keys_chain")
-    _write_events_json(
-        src_dir,
-        ['{"key": "A", "last_seen_ts": "t1", "event_ts": "2026-01-01T00:00:00"}'],
-    )
-    stream = spark.readStream.schema(
-        "key string, last_seen_ts string, event_ts timestamp"
-    ).json(src_dir)
-    agg = (
-        stream.withWatermark("event_ts", "10 seconds")
-        .groupBy("key")
-        .agg(F.max("last_seen_ts").alias("last_seen_ts"),
-             F.max("event_ts").alias("event_ts"))
-    )
-    chained = agg.withWatermark("event_ts", "10 seconds").dropDuplicatesWithinWatermark(
-        ["key", "last_seen_ts"]
-    )
-    for mode in ("update", "append"):
-        ckpt = str(tmp_path / f"ckpt_chain_{mode}")
-        with pytest.raises(AnalysisException):
-            q = (
-                chained.writeStream.format("memory")
-                .queryName(f"cd_chain_{mode}")
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            # some rejections surface at start(), belt-and-braces:
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-    # the shipped monotone agg path itself remains valid in update mode
-    assert detect_changes_stream_monotone(stream.select("key", "last_seen_ts")) is not None
 
 
 def test_file_source_streams_new_reports(spark, tmp_path):
@@ -659,11 +557,10 @@ def test_probe_change_dilution_monotone_and_change_rate(spark):
         .collect()
     )
     for r in per_key:
-        # the jvm mode orders the RAW STRING with F.max, so monotonicity
-        # must hold on the strings themselves, not just int(ts) — the
-        # fixed-width %019d encoding makes the two orders coincide
-        # (round-8 ADVICE: bare decimal strings diverge across
-        # digit-length boundaries)
+        # the column is a STRING, so monotonicity must hold on the
+        # strings themselves, not just int(ts) — the fixed-width %019d
+        # encoding makes the two orders coincide (round-8 ADVICE: bare
+        # decimal strings diverge across digit-length boundaries)
         raw_seq = [s["ts"] for s in r["seq"]]
         assert raw_seq == sorted(raw_seq), "per-key RAW ts strings must be non-decreasing"
         assert all(len(s) == 19 for s in raw_seq), "fixed-width encoding"

@@ -6,9 +6,10 @@ this engine declares every schema up front — on a 100 TB lake, schema
 inference is a full extra scan and a correctness hazard.
 
 Tables ship as parquet under ``/root/testdata/sf*/`` (see TESTDATA.md).
-Parquet is self-describing, so ``spark.read.parquet`` needs no schema —
-but we still pin the *expected* schemas here and validate on load, which
-is what a production catalog (metastore) would do.
+Parquet is self-describing, so ``spark.read.parquet`` needs no schema.
+``EXPECTED_SCHEMAS`` pins each table's expected columns; ``load_table``
+uses it to name the known tables and to find the timestamp columns it
+normalizes. It does not validate the file schema against it.
 """
 
 from __future__ import annotations

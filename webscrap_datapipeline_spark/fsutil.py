@@ -1,17 +1,19 @@
 """Hadoop FileSystem helpers shared by every module that touches paths
-outside a DataFrame reader/writer (SCD upserts, streaming index
-maintenance, small-file compaction, the pipeline's warehouse and state
-swaps).
+outside a DataFrame reader/writer: streaming index maintenance and
+retention (``streaming/index_core``, ``dedup_stream``, ``ann_stream``),
+small-file compaction (``operators/maintenance``), and the one
+whole-directory replace protocol, :func:`fs_swap` plus
+:func:`fs_heal_swap`, through which the pipeline's warehouse, the state
+store, the streaming warehouse sink and the ANN geometry migration
+commit.
 
-One home instead of per-module copies (round-9 review: `scd.py`,
-`streaming/dedup_stream.py`, and `operators/maintenance.py` had each
-open-coded the same Path/getFileSystem boilerplate — a URI-scheme or
-py4j fix to one would have silently missed the others). Everything
-goes through the scheme's OWN FileSystem, never ``os.path``: the paths
-are s3a://, hdfs://, or executor-only URIs in any real deployment,
-where a driver-local ``os.path.exists`` reports an existing table as
-absent.
-"""
+One home instead of per-module copies (round-9 review: three modules
+had each open-coded the same Path/getFileSystem boilerplate — a
+URI-scheme or py4j fix to one would have silently missed the others).
+Everything goes through the scheme's OWN FileSystem, never
+``os.path``: the paths are s3a://, hdfs://, or executor-only URIs in
+any real deployment, where a driver-local ``os.path.exists`` reports
+an existing table as absent."""
 
 from __future__ import annotations
 

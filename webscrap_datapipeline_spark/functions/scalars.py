@@ -70,14 +70,6 @@ def data_amount(col: Column | str) -> Column:
     return F.coalesce(c, F.lit(0)).cast("int")
 
 
-# F9: quoted IN-list rendering (src/web_scrape.py:125) — kept only for
-# log/debug output; real plans use joins (SURVEY.md J5).
-def quoted_csv(arr: Column) -> Column:
-    return F.concat_ws(
-        ", ", F.transform(arr, lambda x: F.concat(F.lit('"'), x, F.lit('"')))
-    )
-
-
 # F11: path basename (src/process_files.py:38 os.path.basename).
 def path_basename(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col

@@ -41,11 +41,6 @@ def stopword_count(col: Column | str) -> Column:
     return F.size(F.filter(tokens(col), lambda w: w.isin(*STOPWORDS)))
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles as an array<string>; deduplicated (set
     semantics — what Jaccard needs). Docs shorter than n words yield

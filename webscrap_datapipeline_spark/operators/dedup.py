@@ -59,13 +59,6 @@ def shingled(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame
     )
 
 
-def shingle_index(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Inverted index: one row per (doc, distinct word-n-gram shingle)."""
-    return shingled(df, text_col, id_col, n).select(
-        "doc", F.explode("sh").alias("shingle")
-    )
-
-
 def _pair_combos(arr: Column) -> Column:
     """All (i < j) element pairs of an array column, as structs
     (a, b). Input must be pre-sorted for deterministic a<b order."""

@@ -1,10 +1,12 @@
 """SCD current-flag maintenance — the reference's K5+K3 protocol
 (src/gcp_processes.py:29-47 UPDATE CURRENT_IND=NULL + append with 'Y',
-src/process_files.py:50) re-expressed three ways per SURVEY.md §2.6:
+src/process_files.py:50), one writer per storage kind:
 
   * storage-time: ``apply_current_flag`` — deterministic overwrite
     protocol (read target ∪ new → window → rewrite flags). Plain
-    parquet gets the same end state a MERGE would.
+    parquet gets the same end state a MERGE would;
+    ``pipeline.run_incremental`` writes it beside the warehouse and
+    commits it with ``fsutil.fs_swap``.
   * engine-primitive: ``scd_merge_into`` — the reference's two
     statements as Spark 4 SQL against a CATALOG table: ``MERGE INTO``
     (de-flag matched keys) + ``INSERT INTO`` (append flagged 'Y').
@@ -13,9 +15,6 @@ src/process_files.py:50) re-expressed three ways per SURVEY.md §2.6:
     (round-5 VERDICT item 2 — this container ships no v2 catalog, so
     the MERGE statement itself is pinned analyze-clean and its
     transcript is engine-verified via DuckDB's UPDATE+INSERT form).
-  * query-time:  ``latest_per_key`` — row_number()==1 view, no mutation
-    at all (the formulation that scales best: the flag becomes derived
-    data, and the append stays blind/idempotent).
 """
 
 from __future__ import annotations
@@ -25,16 +24,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from ..fsutil import fs_exists
-
-
-def latest_per_key(df: DataFrame, key: str, ts: str, tiebreak: str | None = None) -> DataFrame:
-    """Query-time current rows: row_number over (key, ts desc[, tiebreak
-    desc]) == 1. Deterministic when a tiebreak is supplied."""
-    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def apply_current_flag(
@@ -73,74 +62,6 @@ def apply_current_flag(
     return combined.withColumn(
         flag_col, F.when(is_current, F.lit("Y")).otherwise(F.lit(None).cast("string"))
     )
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem API, not ``os.path`` —
-    the target of an upsert is an s3a://, hdfs://, or executor-only URI
-    in any real deployment, where a driver-local ``os.path.exists``
-    reports an EXISTING table as absent and the init branch's plain
-    ``mode('overwrite')`` would then clobber it (round-2 ADVICE).
-    Shared implementation in ``fsutil`` (round-9 review: three modules
-    had open-coded the same boilerplate)."""
-    return fs_exists(spark, path)
-
-
-def scd_upsert_partitioned(
-    spark: SparkSession,
-    incoming: DataFrame,
-    target_path: str,
-    key: str,
-    ts: str,
-    flag_col: str = "CURRENT_IND",
-    tiebreak: str | None = None,
-    n_buckets: int = 64,
-    dedupe_exact: bool = True,
-    bucket_col: str = "__bucket",
-) -> list[int]:
-    """Partition-scoped storage-time SCD — reference K5's MERGE semantics
-    (src/gcp_processes.py:29-47) without rewriting the whole target.
-
-    The target is laid out hash-bucketed by key (``bucket_col`` =
-    pmod(xxhash64(key), n_buckets) partition dirs). An incoming batch:
-
-      1. computes its touched buckets (≤ n_buckets ints — driver-sized
-         by construction, never key-cardinality);
-      2. reads back ONLY those buckets (the isin filter prunes at the
-         parquet partition level — at 100 TB the read is proportional to
-         the batch's key spread, not the corpus);
-      3. re-flags existing ∪ incoming via ``apply_current_flag``;
-      4. rewrites ONLY the touched partition dirs via dynamic partition
-         overwrite — untouched partition files stay byte-identical
-         (asserted in tests/test_pipeline_e2e.py).
-
-    The eager localCheckpoint before the write is required, not a
-    convenience: Spark (correctly) refuses to overwrite a path that the
-    write's own plan is still reading; checkpointing the merged slice
-    truncates lineage to an in-memory RDD first. Its size is the touched
-    slice only. Returns the touched bucket ids.
-    """
-    bucket = F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(n_buckets)).cast("int")
-    inc = incoming.withColumn(bucket_col, bucket)
-    if not _target_exists(spark, target_path):
-        merged = apply_current_flag(
-            inc.limit(0), inc, key, ts, flag_col, tiebreak, dedupe_exact
-        )
-        merged.write.mode("overwrite").partitionBy(bucket_col).parquet(target_path)
-        return sorted(r[0] for r in inc.select(bucket_col).distinct().collect())
-
-    touched = sorted(r[0] for r in inc.select(bucket_col).distinct().collect())
-    existing = spark.read.parquet(target_path).filter(F.col(bucket_col).isin(touched))
-    merged = apply_current_flag(
-        existing, inc, key, ts, flag_col, tiebreak, dedupe_exact
-    ).localCheckpoint(eager=True)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(bucket_col)
-        .parquet(target_path)
-    )
-    return touched
 
 
 def _qid(ident: str, quote: str) -> str:
@@ -225,8 +146,7 @@ def scd_merge_into(
 
     Scale note: the MERGE source is ``SELECT DISTINCT key`` — batch-key
     cardinality, broadcastable; a row-level v2 catalog turns the
-    de-flag into a touched-file rewrite, the same locality
-    ``scd_upsert_partitioned`` engineers by hand for plain parquet.
+    de-flag into a touched-file rewrite.
     """
     # Per-call unique view name (round-6 ADVICE): a hash of the table
     # name collides across concurrent calls (same target, or different
@@ -250,8 +170,8 @@ def scd_merge_into(
                 raise
             # v1 table: same end state via overwrite. The eager
             # localCheckpoint truncates lineage so INSERT OVERWRITE is
-            # not reading the table it rewrites (same reason as
-            # scd_upsert_partitioned).
+            # not reading the table it rewrites (Spark refuses to
+            # overwrite a table its own plan still reads).
             tbl = spark.table(target_table)
             # eqNullSafe, not `on=key`: the MERGE form above matches
             # NULL keys via <=>, so the fallback must de-flag them too

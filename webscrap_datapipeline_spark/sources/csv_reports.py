@@ -13,6 +13,8 @@ hold the union — README.md:46).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,25 +44,23 @@ RAW_REPORT_SCHEMA = T.StructType(
 )
 
 
+_GLOB_CHARS = re.compile(r"[*?\[{\\]")
+
+
 def read_raw_reports(
     spark: SparkSession, path_glob: str, schema: T.StructType = RAW_REPORT_SCHEMA
 ) -> DataFrame:
     """Scan all raw pipe-delimited reports in one pass, attaching
-    per-file lineage as ``src_path``."""
-    return (
-        spark.read.option("sep", "|")
-        .option("header", True)
-        .schema(schema)
-        .csv(path_glob)
-        .withColumn("src_path", F.input_file_name())
-    )
+    per-file lineage as ``src_path``.
 
-
-def write_reports(df: DataFrame, path: str, partition_col: str | None = "LOC_ID") -> None:
-    """Enriched-layer sink (reference K1 per-file writes,
-    src/process_files.py:57): one partitioned write replaces the per-file
-    fan-out; partitionBy mirrors the per-hotel file layout for pruning."""
-    w = df.write.mode("overwrite").option("header", True)
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.csv(path)
+    When only the last path segment is a wildcard (``raw/*.csv``), the
+    parent directory is read with that segment as ``pathGlobFilter``.
+    Given the glob itself, Spark lists every matching file as a root
+    path: above 32 files that is a parallel listing job with one task
+    per file, and its metadata-directory probe logs a
+    FileNotFoundException on every call."""
+    reader = spark.read.option("sep", "|").option("header", True).schema(schema)
+    parent, _, name = path_glob.rpartition("/")
+    if parent and _GLOB_CHARS.search(name) and not _GLOB_CHARS.search(parent):
+        reader, path_glob = reader.option("pathGlobFilter", name), parent
+    return reader.csv(path_glob).withColumn("src_path", F.input_file_name())

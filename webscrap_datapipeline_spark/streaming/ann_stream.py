@@ -81,8 +81,9 @@ from ..functions.vectors import cosine
 from ..fsutil import (
     fs_delete,
     fs_exists,
+    fs_heal_swap,
     fs_read_text,
-    fs_rename,
+    fs_swap,
     fs_write_text,
     list_child_names,
 )
@@ -736,43 +737,21 @@ def migrate_ann_index_geometry(
 
     Crash safety — a mixed-geometry index is the SILENT-wrong-answer
     state the sidecar exists to prevent, so the swap is
-    whole-directory, never in-place: (1) a complete replacement index
-    (data first, sidecar LAST as the completion marker) is built in a
-    sibling scratch dir; (2) the old index is renamed aside; (3) the
-    scratch is renamed in; (4) the old dir is deleted. A crash leaves
-    one of: old index intact (re-run restarts cleanly), no index at
-    ``index_dir`` with a COMPLETE scratch (re-run finishes the swap —
-    readers meanwhile fail loudly with "no geometry", never mix), or
-    no index with an incomplete scratch (re-run restores the old dir
-    and restarts). Every window is loud-or-recoverable; no window
-    serves mixed buckets."""
+    whole-directory, never in-place: a complete replacement index
+    (data first, sidecar LAST) is built in the fixed sibling
+    ``<index_dir>.staging``, then ``fsutil.fs_swap`` renames the old
+    index aside, renames the scratch in and deletes the aside copy.
+    Each call starts with ``fs_heal_swap`` and deletes any stale
+    scratch. A crash before the second rename leaves the old index
+    answering (or, between the two renames, no index at all: readers
+    fail loudly with "no ANN index", never mix); the next call
+    restores the old index and migrates again from the start. A crash
+    after it leaves the new index serving and a stale ``.old`` that the
+    next call deletes."""
     base = index_dir.rstrip("/")
-    scratch = base + ".migrate_scratch"
-    old_bak = base + ".migrate_old"
-
-    # recovery preamble (crash-window states documented above)
-    if not fs_exists(spark, base):
-        if read_ann_geometry(spark, scratch) is not None:
-            # crashed between rename-aside and rename-in: finish the swap
-            if not fs_rename(spark, scratch, base):  # pragma: no cover - FS race
-                raise IOError(f"migrate recovery: rename {scratch} -> {base} failed")
-            fs_delete(spark, old_bak)
-            parts = list_batch_partitions(spark, base)
-            return {
-                "migrated_partitions": 0,
-                "rows": None,
-                "new_partition_id": parts[0] if parts else None,
-                "recovered": True,
-            }
-        if fs_exists(spark, old_bak):
-            # crashed with an incomplete scratch: restore and restart
-            fs_delete(spark, scratch)
-            if not fs_rename(spark, old_bak, base):  # pragma: no cover - FS race
-                raise IOError(f"migrate recovery: rename {old_bak} -> {base} failed")
-        else:
-            raise ValueError(f"no ANN index under {index_dir}")
+    scratch = base + ".staging"
+    fs_heal_swap(spark, base)
     fs_delete(spark, scratch)
-    fs_delete(spark, old_bak)
 
     old_geo = read_ann_geometry(spark, base)
     if old_geo is None:
@@ -828,11 +807,7 @@ def migrate_ann_index_geometry(
     if tss and all(t is not None for t in tss):
         fs_write_text(spark, f"{data_dir}/.maxts", repr(max(tss)))
     _write_geometry(spark, scratch, new_geo)  # completion marker, LAST
-    if not fs_rename(spark, base, old_bak):  # pragma: no cover - FS race
-        raise IOError(f"migrate: rename {base} aside failed")
-    if not fs_rename(spark, scratch, base):  # pragma: no cover - FS race
-        raise IOError(f"migrate: rename {scratch} -> {base} failed")
-    fs_delete(spark, old_bak)
+    fs_swap(spark, base, scratch)
     return {
         "migrated_partitions": len(part_vals),
         "rows": rows,

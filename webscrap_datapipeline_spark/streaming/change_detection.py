@@ -8,6 +8,11 @@ A3).
 State is partitioned by key across executors — the JSON-file state store
 this replaces is a single-writer bottleneck; here state scales with the
 cluster and survives restarts via checkpointing.
+
+Two paths, one per contract: ``detect_changes_stream`` (exact, any
+version column, tags 'new'/'changed') and
+``detect_changes_stream_monotone_exactly_once`` (monotone versions,
+all-JVM, no tag).
 """
 
 from __future__ import annotations
@@ -17,7 +22,6 @@ from collections.abc import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -77,83 +81,44 @@ def detect_changes_stream(source: DataFrame) -> DataFrame:
     )
 
 
-def detect_changes_stream_monotone(source: DataFrame) -> DataFrame:
-    """JVM-only fast path for MONOTONE version columns (the reference's
-    actual workload — scrape timestamps only advance): a streaming
-    ``groupBy(key).agg(max(last_seen_ts))`` whose UPDATE-mode output is
-    the change feed. Write it with ``.outputMode("update")``.
-
-    Why this exists: at 1M keys ``detect_changes_stream`` is bound by
-    per-group Python dispatch (~100s of µs per key per batch inside the
-    applyInPandasWithState harness — Arrow slice, GroupState construct,
-    state-update frame — round-6 probe: ~25k key-groups/s). This path
-    keeps every per-key operation in the JVM state store: no Python
-    worker, no per-group Arrow slicing, so throughput is bounded by the
-    hash-aggregate exchange instead.
-
-    Chaining the aggregate IN FRONT of applyInPandasWithState — the
-    obvious "pre-aggregate each micro-batch" fix — is structurally
-    impossible in Spark: ``applyInPandasWithState`` after a streaming
-    aggregation is rejected in BOTH append and update modes
-    (UnsupportedOperationChecker; verified empirically on 4.1.2), so
-    the aggregate must BE the operator, not feed it.
-
-    Semantic contract vs the exact path (pytest pins both halves):
-      * every true change is emitted, with the key's current maximum —
-        equality-change semantics coincide with max-advance semantics
-        when versions are monotone;
-      * emission is AT-LEAST-ONCE: a key re-observed with an UNCHANGED
-        value re-emits its current row (Spark's update mode flushes
-        every state row the batch touched), so consumers dedupe on
-        (key, last_seen_ts) — idempotent by construction because the
-        emitted value is a pure function of the key's history;
-      * no ``change_kind`` tag — 'new' vs 'changed' requires first-seen
-        state the aggregate form doesn't expose; use the exact path
-        when the tag matters.
-    """
-    return source.groupBy("key").agg(F.max("last_seen_ts").alias("last_seen_ts"))
-
-
 def detect_changes_stream_monotone_exactly_once(
     source: DataFrame,
     event_time_col: str = "event_ts",
     delay: str = "10 minutes",
 ) -> DataFrame:
-    """EXACTLY-ONCE change feed for MONOTONE version columns — the
-    one-liner consumers of ``detect_changes_stream_monotone`` would
-    otherwise hand-roll (round-7 VERDICT note 2). Write it with
-    ``.outputMode("append")``.
+    """EXACTLY-ONCE change feed for MONOTONE version columns (the
+    reference's actual workload: scrape timestamps only advance). Write
+    it with ``.outputMode("append")``.
+
+    Why this exists: at 1M keys ``detect_changes_stream`` is bound by
+    per-group Python dispatch inside the applyInPandasWithState harness
+    (Arrow slice, GroupState construct, state-update frame; round-6
+    probe: ~25k key-groups/s). This path keeps every per-key operation
+    in the JVM state store.
 
     Plan: ``withWatermark(event_time_col, delay)`` →
     ``dropDuplicatesWithinWatermark(["key", "last_seen_ts"])`` — ONE
     JVM stateful operator, no Python worker. For a monotone source
     every advance is a never-seen (key, value) pair, so each change
-    emits exactly once and an equal-value re-observation inside the
-    watermark horizon emits NOTHING; this is also finer-grained than
-    the aggregate path (each intra-batch advance emits its own row,
-    matching the exact Python path's per-change emission).
+    emits exactly once (each intra-batch advance its own row, matching
+    the exact path's per-change emission) and an equal-value
+    re-observation inside the watermark horizon emits NOTHING.
 
-    Why NOT the obvious "agg → dropDuplicatesWithinWatermark
-    post-stage": chaining a dedupe AFTER the update-mode aggregate is
-    rejected by Spark (verified empirically on 4.1.2; pytest pins it):
-    in update mode the global-watermark correctness checker refuses a
-    stateful op downstream of one that can emit rows older than the
-    watermark, and in append mode a non-windowed streaming aggregation
-    is itself unsupported (STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION).
-    So exactly-once comes from making the dedupe BE the operator, not
-    a post-stage.
+    A streaming aggregate cannot stand in for the dedupe, nor feed it:
+    Spark (verified on 4.1.2) rejects ``applyInPandasWithState`` or a
+    watermark dedupe downstream of a streaming aggregation in update
+    mode, and a non-windowed streaming aggregation in append mode.
 
-    Contract / trade vs the aggregate path:
+    Contract vs the exact path:
       * state is O(distinct (key, value) pairs inside the watermark
         horizon) — bounded by ``delay`` × change rate — instead of
         O(keys); size ``delay`` to the duplicate-delivery window, not
         to taste;
       * a duplicate straggling in LATER than ``delay`` re-emits (the
         bounded-state price; widen ``delay`` to widen the guarantee);
-      * requires an event-time timestamp column for the watermark
-        (the aggregate path needs none);
-      * no ``change_kind`` tag — as for the aggregate path, use the
-        exact ``detect_changes_stream`` when the tag matters.
+      * requires an event-time timestamp column for the watermark;
+      * no ``change_kind`` tag — 'new' vs 'changed' needs first-seen
+        state; use ``detect_changes_stream`` when the tag matters.
     """
     return (
         source.withWatermark(event_time_col, delay)

@@ -48,10 +48,11 @@ def warehouse_append_sink(
       batch remains O(total keys) of cluster work; pick this while the
       key set is merely large (10⁶–10⁸).
     * Past that, a full rewrite per batch is the wrong shape no matter
-      how sharded: use the JVM monotone stateful path
-      (`streaming/change_detection.detect_changes_stream`), which
-      keeps per-key watermark state INSIDE Spark's state store —
-      per-batch cost ∝ touched keys, not total keys.
+      how sharded: use the all-JVM monotone change feed
+      (`streaming/change_detection.detect_changes_stream_monotone_exactly_once`),
+      which keeps its dedupe state INSIDE Spark's state store —
+      per-batch cost ∝ changes in the watermark horizon, not total
+      keys.
     """
     if state_shards < 1:
         raise ValueError(f"state_shards must be >= 1, got {state_shards}")

@@ -1,6 +1,6 @@
 """Windowed streaming aggregations over an event stream — watermarked
-tumbling / sliding / session windows (the extension surface SURVEY.md
-§2.8 names: F.window, withWatermark, F.session_window over `events`).
+tumbling / sliding windows (the extension surface SURVEY.md §2.8 names:
+F.window, withWatermark over `events`).
 
 Each builder takes any streaming-or-batch DataFrame with (ts, event_type,
 value) columns; the SAME call works in both modes (Spark's unified API) —
@@ -44,24 +44,4 @@ def sliding_counts(
         src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-
-
-def session_counts(
-    events: DataFrame, gap: str = "4 hours", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Data-driven session windows per user (F.session_window — state
-    merges adjacent events within `gap`). The deterministic batch
-    formulation used for oracle checks is plans/temporal_queries.py
-    session_windows_4h (gaps-and-islands)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
     )
