@@ -241,9 +241,7 @@ def main() -> None:
         synth_text(F.col("id")).alias("text"),
     )
     if args.replicate > 1:
-        from webscrap_datapipeline_spark.streaming.dedup_stream import (
-            _write_index_partition,
-        )
+        from webscrap_datapipeline_spark.fsutil import write_batch_partition
 
         # minhash the base corpus once into a scratch dir, replicate
         # the resulting index, publish as the bootstrap partition
@@ -256,12 +254,12 @@ def main() -> None:
         )
         big = replicate_band_index(base_idx, args.replicate)
         # a reused --workdir may hold a previous run's index: the
-        # replicate path writes only partition -1 by dynamic overwrite,
-        # so stale __batch_id>=0 partitions would survive into (and
-        # contaminate) the new corpus (round-11 review);
-        # bootstrap_lsh_index does this wipe itself on the normal path
+        # replicate path writes only partition -1, so stale
+        # __batch_id>=0 partitions would survive into (and contaminate)
+        # the new corpus (round-11 review); bootstrap_lsh_index replaces
+        # the whole index itself on the normal path
         shutil.rmtree(index_dir, ignore_errors=True)
-        _write_index_partition(big, -1, index_dir)
+        write_batch_partition(big, index_dir, -1)
         shutil.rmtree(scratch, ignore_errors=True)
     else:
         bootstrap_lsh_index(corpus, index_dir)

@@ -22,6 +22,42 @@ def spark():
     spark.stop()
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``; in local mode the executors run in this JVM
+    too)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def inject_fs_crash(monkeypatch, *modules):
+    """Record every mutating ``fsutil`` call (``fs_rename``,
+    ``fs_delete``, ``fs_write_text``, ``write_batch_partition``), in
+    ``fsutil`` and in each of ``modules`` that imported them by name.
+    Returns ``(calls, crash_at)``: each call appends ``(name, args[1:])``
+    to ``calls``, and the one that makes ``len(calls) == crash_at["k"]``
+    raises ``RuntimeError("simulated crash at <name>")``."""
+    from webscrap_datapipeline_spark import fsutil
+
+    calls, crash_at = [], {"k": None}
+
+    def patched(name, real):
+        def call(*args):
+            calls.append((name, args[1:]))
+            if len(calls) == crash_at["k"]:
+                raise RuntimeError(f"simulated crash at {name}")
+            return real(*args)
+
+        return call
+
+    for name in ("fs_rename", "fs_delete", "fs_write_text", "write_batch_partition"):
+        real = getattr(fsutil, name)
+        for mod in (fsutil, *modules):
+            if hasattr(mod, name):
+                monkeypatch.setattr(mod, name, patched(name, real))
+    return calls, crash_at
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL

@@ -32,6 +32,8 @@ from webscrap_datapipeline_spark.streaming.ann_stream import (
     read_ann_index,
 )
 
+from .conftest import inject_fs_crash
+
 DIM = 64
 
 
@@ -57,7 +59,7 @@ def test_ann_sink_matches_batch_lsh_topk_and_replays_idempotently(
     """The streamed index must answer EXACTLY what the batch operator
     answers over the union corpus (same geometry, same total-order
     tiebreak) — and a replayed micro-batch must leave both the index
-    and the answers unchanged (dynamic partition overwrite)."""
+    and the answers unchanged (the batch overwrites its own partition)."""
     emb = _emb(spark, sf_dir)
     index_dir = str(tmp_path / "ann_idx")
     boot = emb.filter(F.col("vec_id") < 60)
@@ -686,7 +688,6 @@ def test_ann_geometry_migration_crash_at_every_step_recovers(
     watermark aborts."""
     import shutil
 
-    import webscrap_datapipeline_spark.fsutil as fsutil
     import webscrap_datapipeline_spark.streaming.ann_stream as anns
 
     emb = _emb(spark, sf_dir)
@@ -706,23 +707,7 @@ def test_ann_geometry_migration_crash_at_every_step_recovers(
     }
     assert want[6] and want[4] and want[6] != want[4]
 
-    calls = []
-    crash_at = {"k": None}
-
-    def patched(name, real):
-        def call(*args):
-            calls.append((name, args[1:]))
-            if len(calls) == crash_at["k"]:
-                raise RuntimeError(f"simulated crash at {name}")
-            return real(*args)
-
-        return call
-
-    for name in ("fs_rename", "fs_delete", "fs_write_text"):
-        real = getattr(fsutil, name)
-        for mod in (fsutil, anns):
-            if hasattr(mod, name):
-                monkeypatch.setattr(mod, name, patched(name, real))
+    calls, crash_at = inject_fs_crash(monkeypatch, anns)
 
     def restore():
         for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
@@ -772,6 +757,79 @@ def test_ann_geometry_migration_crash_at_every_step_recovers(
             spark, index_dir, n_planes=6,
             checkpoint_dir=str(tmp_path / "ckpt_none"),
         )
+
+
+def test_ann_bootstrap_crash_at_every_step_keeps_an_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A re-bootstrap builds the new index aside (data, then sidecar)
+    and swaps it in. The k-th mutating ``fsutil`` call of a clean
+    re-bootstrap (the partition write included) raises, for every k.
+    After the crash the index serves the old corpus until the swap's
+    commit rename, fails loudly with "no ANN index" at it, and serves
+    the new corpus after it. The next sink batch restores an index
+    renamed aside before it checks the geometry, so it appends to the
+    old corpus instead of starting an index of its own. The next
+    re-bootstrap ends at the new index with no ``.old`` or
+    ``.staging`` sibling left."""
+    import shutil
+
+    import webscrap_datapipeline_spark.streaming.ann_stream as anns
+
+    emb = _emb(spark, sf_dir)
+    index_dir = str(tmp_path / "ann_idx")
+    pristine = str(tmp_path / "pristine")
+    queries = _queries(emb, 250, 253)
+    cols = ("query_id", "vec_id", "rnk")
+    old = emb.filter(F.col("vec_id") < 100)
+    new = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200))
+    batch = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 250))
+    bootstrap_ann_index(old, index_dir, dim=DIM, n_planes=6)
+    shutil.copytree(index_dir, pristine)
+    want = {
+        name: _rows(lsh_topk(corpus, queries, k=3, dim=DIM, n_planes=6), *cols)
+        for name, corpus in (
+            ("old", old), ("new", new),
+            ("old+batch", old.unionByName(batch)), ("new+batch", new.unionByName(batch)),
+        )
+    }
+    assert len(set(map(frozenset, want.values()))) == 4
+
+    calls, crash_at = inject_fs_crash(monkeypatch, anns)
+
+    def restore():
+        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
+            shutil.rmtree(d, ignore_errors=True)
+        shutil.copytree(pristine, index_dir)
+
+    def served():
+        try:
+            got = ann_query_index(spark, index_dir, queries, k=3)
+        except ValueError as e:
+            assert "no ANN index" in str(e)
+            return None
+        return _rows(got, *cols)
+
+    bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
+    clean = list(calls)
+    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
+    assert len(clean) == 6, clean
+    assert served() == want["new"]
+
+    for k in range(1, len(clean) + 1):
+        restore()
+        calls.clear()
+        crash_at["k"] = k
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
+        crash_at["k"] = None
+        assert served() == (want["old"] if k < commit else None if k == commit else want["new"]), k
+        incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(batch, 0)
+        assert served() == want["old+batch" if k <= commit else "new+batch"], k
+        bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
+        assert served() == want["new"], k
+        assert not os.path.exists(index_dir + ".old"), k
+        assert not os.path.exists(index_dir + ".staging"), k
 
 
 def test_ann_legacy_bucket_parts_sidecar_fails_loudly(spark, sf_dir, tmp_path):

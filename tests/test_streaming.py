@@ -669,6 +669,127 @@ def test_incremental_near_dup_stream_matches_batch_twin(spark, tmp_path):
     assert spark.read.parquet(index_dir).count() == n_idx_rows
 
 
+def test_near_dup_stream_compiles_no_classes_after_its_second_batch(spark, tmp_path):
+    """A live stream runs the same plans every micro-batch, so from
+    batch 2 on a batch finds every generated class it needs in the
+    codegen cache and compiles none. A batch id in the plan (a literal
+    ``__batch_id`` column) is inlined into generated code and compiles
+    new classes in every batch, forever."""
+    import json as _json
+
+    from webscrap_datapipeline_spark.streaming.dedup_stream import (
+        bootstrap_lsh_index,
+        incremental_near_dup_sink,
+    )
+
+    from .conftest import codegen_compiles
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+
+    def text(i):
+        return " ".join(words[i % 10:] + words[: i % 10])
+
+    index_dir = str(tmp_path / "lsh_index")
+    pairs_dir = str(tmp_path / "pairs")
+    src_dir = str(tmp_path / "docs_in")
+    staged = str(tmp_path / "staged")
+    os.makedirs(src_dir)
+    bootstrap_lsh_index(
+        spark.createDataFrame(
+            [(f"c{i}", text(i)) for i in range(4)], "doc_id string, text string"
+        ),
+        index_dir,
+    )
+    q = (
+        spark.readStream.schema("doc_id string, text string")
+        .option("maxFilesPerTrigger", 1)
+        .json(src_dir)
+        .writeStream.foreachBatch(incremental_near_dup_sink(index_dir, pairs_dir))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    compiled = []
+    try:
+        for b in range(5):
+            path = _write_events_json(
+                staged,
+                [_json.dumps({"doc_id": f"b{b}d{i}", "text": text(b + i)}) for i in range(3)],
+            )
+            before = codegen_compiles(spark)
+            os.rename(path, os.path.join(src_dir, f"batch_{b}.json"))
+            q.processAllAvailable()
+            compiled.append(codegen_compiles(spark) - before)
+    finally:
+        q.stop()
+    assert compiled[2:] == [0, 0, 0], compiled
+    idx = spark.read.parquet(index_dir)
+    assert {r[0] for r in idx.select("__batch_id").distinct().collect()} == {
+        -1, 0, 1, 2, 3, 4
+    }
+    assert idx.count() == (4 + 5 * 3) * 8
+    pairs = spark.read.parquet(pairs_dir)
+    assert {r[0] for r in pairs.select("__batch_id").distinct().collect()} == set(range(5))
+
+
+def test_lsh_bootstrap_crash_at_every_step_keeps_an_index(spark, tmp_path, monkeypatch):
+    """A re-bootstrap builds the new index aside and swaps it in. The
+    k-th mutating ``fsutil`` call of a clean re-bootstrap (the partition
+    write included) raises, for every k. The next micro-batch then
+    mines against the old corpus up to and including the swap's commit
+    rename (the sink restores an index renamed aside before it reads
+    the corpus) and against the new corpus after it. The next
+    re-bootstrap ends at the new index with no ``.old`` or ``.staging``
+    sibling left."""
+    import shutil
+
+    import pytest
+
+    import webscrap_datapipeline_spark.streaming.dedup_stream as ds
+
+    from .conftest import inject_fs_crash
+
+    t_old = "alpha beta gamma delta epsilon zeta eta theta"
+    t_new = "one two three four five six seven eight nine"
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id string, text string")
+    old, new = mk([("c1", t_old)]), mk([("c2", t_new)])
+    batch = mk([("n1", t_old), ("n2", t_new)])
+    index_dir = str(tmp_path / "lsh_index")
+    pristine = str(tmp_path / "pristine")
+    ds.bootstrap_lsh_index(old, index_dir)
+    shutil.copytree(index_dir, pristine)
+
+    calls, crash_at = inject_fs_crash(monkeypatch, ds)
+
+    def restore():
+        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
+            shutil.rmtree(d, ignore_errors=True)
+        shutil.copytree(pristine, index_dir)
+
+    def mined(k):
+        pairs_dir = str(tmp_path / f"pairs_{k}")
+        ds.incremental_near_dup_sink(index_dir, pairs_dir)(batch, 0)
+        return {(r["doc_a"], r["doc_b"]) for r in spark.read.parquet(pairs_dir).collect()}
+
+    ds.bootstrap_lsh_index(new, index_dir)
+    clean = list(calls)
+    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
+    assert len(clean) == 5, clean
+    assert mined("clean") == {("n2", "c2")}
+
+    for k in range(1, len(clean) + 1):
+        restore()
+        calls.clear()
+        crash_at["k"] = k
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            ds.bootstrap_lsh_index(new, index_dir)
+        crash_at["k"] = None
+        assert mined(k) == ({("n1", "c1")} if k <= commit else {("n2", "c2")}), k
+        ds.bootstrap_lsh_index(new, index_dir)
+        assert mined(f"{k}-again") == {("n2", "c2")}, k
+        assert not os.path.exists(index_dir + ".old"), k
+        assert not os.path.exists(index_dir + ".staging"), k
+
+
 def test_compact_lsh_index_preserves_mining_and_replay_contract(spark, tmp_path):
     """streaming/dedup_stream.compact_lsh_index: folding committed
     partitions into one consolidated negative-id partition (1) leaves

@@ -1,11 +1,12 @@
 """Hadoop FileSystem helpers shared by every module that touches paths
 outside a DataFrame reader/writer: streaming index maintenance and
 retention (``streaming/index_core``, ``dedup_stream``, ``ann_stream``),
-small-file compaction (``operators/maintenance``), and the one
+small-file compaction (``operators/maintenance``), the one
 whole-directory replace protocol, :func:`fs_swap` plus
 :func:`fs_heal_swap`, through which the pipeline's warehouse, the state
-store, the streaming warehouse sink and the ANN geometry migration
-commit.
+store, the streaming warehouse sink and the ANN and LSH index
+bootstraps and migration commit, and :func:`write_batch_partition`,
+the one way a micro-batch publishes its ``__batch_id`` partition.
 
 One home instead of per-module copies (round-9 review: three modules
 had each open-coded the same Path/getFileSystem boilerplate — a
@@ -17,7 +18,7 @@ an existing table as absent."""
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -93,6 +94,15 @@ def fs_heal_swap(spark: SparkSession, path: str) -> None:
         fs_delete(spark, old)
     elif not fs_rename(spark, old, path):
         raise IOError(f"fs_heal_swap: rename {old} -> {path} failed")
+
+
+def write_batch_partition(df: DataFrame, base: str, batch_id: int) -> None:
+    """Write ``df`` as the ``__batch_id=<batch_id>`` partition of the
+    parquet table under ``base``, replacing what that partition held: a
+    replayed batch rewrites exactly its own output. The id is in the
+    path only, never in the plan: a per-batch literal is inlined into
+    generated code, so every batch would compile new classes."""
+    df.write.mode("overwrite").parquet(f"{base.rstrip('/')}/__batch_id={batch_id}")
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:

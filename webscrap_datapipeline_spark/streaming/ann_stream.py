@@ -11,10 +11,11 @@ IVF Voronoi cells) as an append-only index and keeps it current from
 a stream:
 
   1. :func:`bootstrap_ann_index` backfills an existing corpus as the
-     ``__batch_id = -1`` partition and pins the GEOMETRY in a
-     ``_geometry.json`` sidecar. Two cell geometries, chosen at
-     bootstrap: ``hyperplane`` (seeded sign-bit LSH — zero training,
-     uniform cells; dim/planes/seed in the sidecar) and ``ivf``
+     ``__batch_id = -1`` partition (built aside and swapped in whole)
+     and pins the GEOMETRY in a ``_geometry.json`` sidecar. Two cell
+     geometries, chosen at bootstrap: ``hyperplane`` (seeded sign-bit
+     LSH — zero training, uniform cells; dim/planes/seed in the
+     sidecar) and ``ivf``
      (nearest-centroid Voronoi cells — higher recall on CLUSTERED
      real-world embeddings at the same probe budget; the train-once
      codebook itself rides in the sidecar, because cell ids are only
@@ -23,7 +24,7 @@ a stream:
   2. :func:`incremental_ann_sink` is a ``foreachBatch`` function: each
      micro-batch is bucketed map-side (pure column math — no shuffle,
      no fit step, no driver state) and appended as its own
-     ``__batch_id`` partition via dynamic partition overwrite, so a
+     ``__batch_id`` partition (`fsutil.write_batch_partition`), so a
      replayed batch rewrites exactly its own rows (the same
      idempotence discipline as the dedup index and
      `sinks.warehouse_append_sink`);
@@ -86,6 +87,7 @@ from ..fsutil import (
     fs_swap,
     fs_write_text,
     list_child_names,
+    write_batch_partition,
 )
 from ..operators.similarity import (
     _probe_cids,
@@ -144,9 +146,10 @@ def _check_geometry(spark: SparkSession, index_dir: str, geo: dict) -> dict:
     geometry (or the sidecar was deleted) — adopting the caller's
     geometry over rows bucketed under an unknown one would mix
     incomparable buckets silently, the exact failure this guard
-    exists for. Refuse and make the operator re-bootstrap. (Writers
-    order sidecar-before-data to keep this window to a crash INSIDE
-    the very first write — see :func:`bootstrap_ann_index`.)"""
+    exists for. Refuse and make the operator re-bootstrap. (A sink
+    pins the sidecar before its first batch's data and a bootstrap
+    swaps in a complete index, so this window is a crash INSIDE a
+    sink's very first write.)"""
     existing = read_ann_geometry(spark, index_dir)
     if existing is None:
         if any(
@@ -311,29 +314,31 @@ def bootstrap_ann_index(
     protocol — partitions, replay, compaction, retention, serve cuts —
     is identical, because none of them care what the bucket MEANS.
 
-    The sidecar is written BEFORE the data: a crash mid-backfill then
-    leaves (sidecar, partial data) — a later writer with matching
-    geometry appends safely, a mismatched one fails loudly, and a
-    re-bootstrap replaces the lot. Data-before-sidecar would leave
-    rows bucketed under an unrecorded geometry, which
-    :func:`_check_geometry` must refuse outright (it cannot know what
-    planes produced them)."""
+    Crash safety is the geometry migration's: the new index (data
+    first, sidecar LAST) is built in the fixed sibling
+    ``<index_dir>.staging`` and committed by ``fsutil.fs_swap``. A
+    crash before the swap leaves the old index serving, and the next
+    bootstrap deletes the stale scratch; a crash between the swap's two
+    renames leaves only ``<index_dir>.old`` (readers fail loudly with
+    "no ANN index"), which the next bootstrap, migration or sink batch
+    restores first."""
     spark = corpus.sparkSession
     geo = _build_geometry(
         corpus.schema, id_col, vec_col, dim, n_planes, seed, centroids
     )
-    fs_delete(spark, index_dir)
-    _write_geometry(spark, index_dir, geo)
+    base = index_dir.rstrip("/")
+    staging = base + ".staging"
+    fs_delete(spark, staging)
     obs = Observation("ann_bootstrap_rows")
-    (
-        _bucketed_batch(corpus, geo, id_col, vec_col)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .withColumn("__batch_id", F.lit(-1).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(index_dir)
+    write_batch_partition(
+        _bucketed_batch(corpus, geo, id_col, vec_col).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ),
+        staging,
+        -1,
     )
+    _write_geometry(spark, staging, geo)  # completion marker, LAST
+    fs_swap(spark, base, staging)
     return int(obs.get["n"])
 
 
@@ -359,9 +364,9 @@ def incremental_ann_sink(
         ).option("checkpointLocation", ckpt).start()
 
     Each micro-batch is bucketed map-side and written as its own
-    ``__batch_id`` partition with dynamic partition overwrite — a
-    replayed batch rewrites exactly its own rows, so the index is a
-    pure function of the committed stream. Within one batch, ids are
+    ``__batch_id`` partition — a replayed batch rewrites exactly its
+    own rows, so the index is a pure function of the committed stream.
+    Within one batch, ids are
     expected unique (an at-least-once source re-delivering an id in a
     LATER batch creates a newer physical row; serving resolves every
     id to its newest candidate row — see :func:`ann_query_index`).
@@ -394,6 +399,10 @@ def incremental_ann_sink(
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # a bootstrap or migration that crashed mid-swap leaves the
+        # index renamed aside: restore it before the geometry check,
+        # which would otherwise start a fresh index over it
+        fs_heal_swap(spark, index_dir.rstrip("/"))
         geo = _build_geometry(
             batch_df.schema, id_col, vec_col, dim, n_planes, seed, centroids
         )
@@ -408,13 +417,8 @@ def incremental_ann_sink(
             src = batch_df.observe(
                 tobs, F.max(F.col(ts_col).cast("double")).alias("t")
             )
-        (
-            _bucketed_batch(src, geo, id_col, vec_col)
-            .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(index_dir)
+        write_batch_partition(
+            _bucketed_batch(src, geo, id_col, vec_col), index_dir, batch_id
         )
         if tobs is not None and tobs.get["t"] is not None:
             fs_write_text(

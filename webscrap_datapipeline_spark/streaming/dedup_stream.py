@@ -14,9 +14,10 @@ module wires that operator into Structured Streaming via
      plus new-vs-new from the batch's own banding
      (`incremental_lsh_candidates_from_index`, the exact batch-twin
      relation),
-  3. writes the pairs partitioned by ``__batch_id`` (dynamic partition
-     overwrite — a replayed batch rewrites exactly its own output, the
-     same idempotence discipline as `sinks.warehouse_append_sink`),
+  3. writes the pairs as their own ``__batch_id`` partition
+     (`fsutil.write_batch_partition` — a replayed batch rewrites exactly
+     its own output, the same idempotence discipline as
+     `sinks.warehouse_append_sink`),
   4. only THEN appends the batch's own band rows to the index, also
      ``__batch_id``-partitioned (the reference's commit ordering, ST2:
      a crash between 3 and 4 replays the batch against the same
@@ -51,7 +52,14 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..fsutil import fs_delete, fs_exists, fs_write_text
+from ..fsutil import (
+    fs_delete,
+    fs_exists,
+    fs_heal_swap,
+    fs_swap,
+    fs_write_text,
+    write_batch_partition,
+)
 from ..operators.dedup import (
     incremental_lsh_candidates_from_index,
     lsh_band_index,
@@ -196,19 +204,6 @@ def compact_lsh_index(
     )
 
 
-def _write_index_partition(idx: DataFrame, batch_id: int, index_dir: str) -> None:
-    """Publish one ``__batch_id`` partition of the band index by
-    dynamic partition overwrite: a replayed batch rewrites exactly its
-    own partition."""
-    (
-        idx.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(index_dir)
-    )
-
-
 def bootstrap_lsh_index(
     docs: DataFrame,
     index_dir: str,
@@ -222,11 +217,22 @@ def bootstrap_lsh_index(
     """Seed ``index_dir`` with the band index of an existing corpus —
     the one-time batch backfill before the stream takes over. Stamped
     ``__batch_id = -1`` so streaming batches (ids ≥ 0) can never
-    collide with the bootstrap partition; replaces any prior index."""
+    collide with the bootstrap partition.
+
+    Replaces any prior index whole: the new one is built in the fixed
+    sibling ``<index_dir>.staging`` and committed by ``fsutil.fs_swap``.
+    A crash before the swap leaves the old index serving (the next
+    bootstrap deletes the stale scratch); a crash between the swap's
+    two renames leaves only ``<index_dir>.old``, which the sink's
+    ``fs_heal_swap`` restores before it reads the corpus."""
+    spark = docs.sparkSession
+    base = index_dir.rstrip("/")
+    staging = base + ".staging"
     sigs = minhash_signatures(docs, text_col, id_col, n, num_hashes)
     idx = lsh_band_index(sigs, bands, rows_per_band)
-    fs_delete(docs.sparkSession, index_dir)  # a bootstrap replaces the whole index
-    _write_index_partition(idx, -1, index_dir)
+    fs_delete(spark, staging)
+    write_batch_partition(idx, staging, -1)
+    fs_swap(spark, base, staging)
 
 
 def incremental_near_dup_sink(
@@ -320,6 +326,9 @@ def incremental_near_dup_sink(
         new_idx = lsh_band_index(sigs, bands, rows_per_band).localCheckpoint(
             eager=True
         )
+        # a bootstrap that crashed mid-swap leaves the index renamed
+        # aside: restore it, or this batch would mine an empty corpus
+        fs_heal_swap(spark, index_dir.rstrip("/"))
         if fs_exists(spark, index_dir):
             # the corpus side is the index AS IT STOOD BEFORE THIS
             # BATCH (__batch_id < batch_id, partition-pruned): a
@@ -346,17 +355,11 @@ def incremental_near_dup_sink(
             # reduce to the batch's own new-vs-new posting lists
             corpus = new_idx.limit(0)
         pairs = incremental_lsh_candidates_from_index(corpus, new_idx)
-        (
-            pairs.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(pairs_dir)
-        )
+        write_batch_partition(pairs, pairs_dir, batch_id)
         # index advances ONLY after the pairs write returned (ST2
         # ordering); __batch_id partitioning makes a replay overwrite
         # its own rows instead of double-appending
-        _write_index_partition(new_idx, batch_id, index_dir)
+        write_batch_partition(new_idx, index_dir, batch_id)
         if tobs is not None and tobs.get["t"] is not None:
             fs_write_text(
                 spark,

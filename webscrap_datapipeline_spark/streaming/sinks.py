@@ -16,7 +16,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_exists, fs_heal_swap, fs_swap
+from ..fsutil import fs_exists, fs_heal_swap, fs_swap, write_batch_partition
 
 
 def warehouse_append_sink(
@@ -29,10 +29,11 @@ def warehouse_append_sink(
     """Build a foreachBatch function: idempotent append + ordered state
     commit.
 
-    Idempotence: the warehouse write is partitioned by __batch_id, so a
-    batch replay rewrites exactly its own partition (dynamic partition
-    overwrite) — the micro-batch equivalent of the reference's
-    retry-same-hotels-next-hour behavior, without the duplicates.
+    Idempotence: each batch is written as its own ``__batch_id``
+    partition (`fsutil.write_batch_partition`), so a batch replay
+    rewrites exactly its own partition — the micro-batch equivalent of
+    the reference's retry-same-hotels-next-hour behavior, without the
+    duplicates.
 
     SCALE CEILING of the state table (round-11 VERDICT "what's wrong"
     note): with the default ``state_shards=1`` the per-key watermark
@@ -59,13 +60,7 @@ def warehouse_append_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        stamped = batch_df.withColumn("__batch_id", F.lit(batch_id))
-        (
-            stamped.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(warehouse_dir)
-        )
+        write_batch_partition(batch_df, warehouse_dir, batch_id)
         # state advances ONLY after the warehouse write returned — the
         # reference's commit ordering (ST2).
         watermarks = batch_df.groupBy(key_col).agg(F.max(ts_col).alias("last_seen"))
