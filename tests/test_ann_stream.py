@@ -32,7 +32,7 @@ from webscrap_datapipeline_spark.streaming.ann_stream import (
     read_ann_index,
 )
 
-from .conftest import inject_fs_crash
+from .conftest import crash_at_every_step
 
 DIM = 64
 
@@ -686,33 +686,22 @@ def test_ann_geometry_migration_crash_at_every_step_recovers(
     migration ends at the new geometry with no ``.old`` or ``.staging``
     sibling left. An uncommitted partition above the checkpoint
     watermark aborts."""
-    import shutil
-
     import webscrap_datapipeline_spark.streaming.ann_stream as anns
 
     emb = _emb(spark, sf_dir)
     index_dir = str(tmp_path / "ann_idx")
-    pristine = str(tmp_path / "pristine")
     queries = _queries(emb, 200, 203)
     cols = ("query_id", "vec_id", "rnk")
     bootstrap_ann_index(emb.filter(F.col("vec_id") < 150), index_dir, dim=DIM, n_planes=6)
     incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(
         emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200)), 0
     )
-    shutil.copytree(index_dir, pristine)
     corpus = emb.filter(F.col("vec_id") < 200)
     want = {
         n: _rows(lsh_topk(corpus, queries, k=3, dim=DIM, n_planes=n), *cols)
         for n in (6, 4)
     }
     assert want[6] and want[4] and want[6] != want[4]
-
-    calls, crash_at = inject_fs_crash(monkeypatch, anns)
-
-    def restore():
-        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.copytree(pristine, index_dir)
 
     def served():
         try:
@@ -722,30 +711,23 @@ def test_ann_geometry_migration_crash_at_every_step_recovers(
             return None
         return read_ann_geometry(spark, index_dir)["n_planes"], _rows(got, *cols)
 
-    # a clean migration's mutating calls, and the one that commits
-    anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
-    clean = list(calls)
-    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
-    assert len(clean) >= 5, clean
-
-    for k in range(1, len(clean) + 1):
-        restore()
-        calls.clear()
-        crash_at["k"] = k
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
-        crash_at["k"] = None
-        if k < commit:
-            expect = (6, want[6])
-        elif k == commit:
-            expect = None  # between the two renames: no index, loud
-        else:
-            expect = (4, want[4])
+    def after_crash(k, commit):
+        # between the two renames: no index, loud
+        expect = (6, want[6]) if k < commit else None if k == commit else (4, want[4])
         assert served() == expect, k
-        anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4)
-        assert served() == (4, want[4]), k
-        assert not os.path.exists(index_dir + ".old"), k
-        assert not os.path.exists(index_dir + ".staging"), k
+
+    def settled():
+        assert served() == (4, want[4])
+
+    clean = crash_at_every_step(
+        monkeypatch, [anns], index_dir,
+        lambda: anns.migrate_ann_index_geometry(spark, index_dir, n_planes=4),
+        after_crash, settled,
+    )
+    assert [name for name, _ in clean] == [
+        "fs_delete", "write_batch_partition", "fs_write_text", "fs_write_text",
+        "fs_rename", "fs_rename", "fs_delete",
+    ], clean
 
     # uncommitted partition above the watermark aborts (fresh ckpt:
     # wm=-1, so the batch-5 partition is provably uncommitted)
@@ -772,20 +754,16 @@ def test_ann_bootstrap_crash_at_every_step_keeps_an_index(
     old corpus instead of starting an index of its own. The next
     re-bootstrap ends at the new index with no ``.old`` or
     ``.staging`` sibling left."""
-    import shutil
-
     import webscrap_datapipeline_spark.streaming.ann_stream as anns
 
     emb = _emb(spark, sf_dir)
     index_dir = str(tmp_path / "ann_idx")
-    pristine = str(tmp_path / "pristine")
     queries = _queries(emb, 250, 253)
     cols = ("query_id", "vec_id", "rnk")
     old = emb.filter(F.col("vec_id") < 100)
     new = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200))
     batch = emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 250))
     bootstrap_ann_index(old, index_dir, dim=DIM, n_planes=6)
-    shutil.copytree(index_dir, pristine)
     want = {
         name: _rows(lsh_topk(corpus, queries, k=3, dim=DIM, n_planes=6), *cols)
         for name, corpus in (
@@ -795,13 +773,6 @@ def test_ann_bootstrap_crash_at_every_step_keeps_an_index(
     }
     assert len(set(map(frozenset, want.values()))) == 4
 
-    calls, crash_at = inject_fs_crash(monkeypatch, anns)
-
-    def restore():
-        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.copytree(pristine, index_dir)
-
     def served():
         try:
             got = ann_query_index(spark, index_dir, queries, k=3)
@@ -810,26 +781,20 @@ def test_ann_bootstrap_crash_at_every_step_keeps_an_index(
             return None
         return _rows(got, *cols)
 
-    bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
-    clean = list(calls)
-    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
-    assert len(clean) == 6, clean
-    assert served() == want["new"]
-
-    for k in range(1, len(clean) + 1):
-        restore()
-        calls.clear()
-        crash_at["k"] = k
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
-        crash_at["k"] = None
+    def after_crash(k, commit):
         assert served() == (want["old"] if k < commit else None if k == commit else want["new"]), k
         incremental_ann_sink(index_dir, dim=DIM, n_planes=6)(batch, 0)
         assert served() == want["old+batch" if k <= commit else "new+batch"], k
-        bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6)
-        assert served() == want["new"], k
-        assert not os.path.exists(index_dir + ".old"), k
-        assert not os.path.exists(index_dir + ".staging"), k
+
+    def settled():
+        assert served() == want["new"]
+
+    clean = crash_at_every_step(
+        monkeypatch, [anns], index_dir,
+        lambda: bootstrap_ann_index(new, index_dir, dim=DIM, n_planes=6),
+        after_crash, settled,
+    )
+    assert len(clean) == 6, clean
 
 
 def test_ann_legacy_bucket_parts_sidecar_fails_loudly(spark, sf_dir, tmp_path):

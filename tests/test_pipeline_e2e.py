@@ -299,14 +299,15 @@ def test_steady_cycle_runs_fewer_tasks_than_one_shuffle(spark, workspace):
 
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    stages = {
-        sid
-        for job in tracker.getJobIdsForGroup(group)
-        for sid in tracker.getJobInfo(job).stageIds
-    }
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {sid for job in jobs for sid in tracker.getJobInfo(job).stageIds}
     # past spark.ui.retainedStages the status store drops stages with no
-    # completion time first: skipped ones, which ran no task
+    # completion time first: skipped ones, which ran no task. No more
+    # may be missing than the cycle's jobs skipped.
     infos = [tracker.getStageInfo(sid) for sid in stages]
+    missing = sum(info is None for info in infos)
+    store = sc._jsc.sc().statusStore()
+    assert missing <= sum(store.job(job).numSkippedStages() for job in jobs)
     tasks = sum(info.numCompletedTasks for info in infos if info is not None)
     assert 0 < tasks < 32
 

@@ -740,13 +740,11 @@ def test_lsh_bootstrap_crash_at_every_step_keeps_an_index(spark, tmp_path, monke
     the corpus) and against the new corpus after it. The next
     re-bootstrap ends at the new index with no ``.old`` or ``.staging``
     sibling left."""
-    import shutil
-
-    import pytest
+    import itertools
 
     import webscrap_datapipeline_spark.streaming.dedup_stream as ds
 
-    from .conftest import inject_fs_crash
+    from .conftest import crash_at_every_step
 
     t_old = "alpha beta gamma delta epsilon zeta eta theta"
     t_new = "one two three four five six seven eight nine"
@@ -754,40 +752,25 @@ def test_lsh_bootstrap_crash_at_every_step_keeps_an_index(spark, tmp_path, monke
     old, new = mk([("c1", t_old)]), mk([("c2", t_new)])
     batch = mk([("n1", t_old), ("n2", t_new)])
     index_dir = str(tmp_path / "lsh_index")
-    pristine = str(tmp_path / "pristine")
     ds.bootstrap_lsh_index(old, index_dir)
-    shutil.copytree(index_dir, pristine)
+    runs = itertools.count()
 
-    calls, crash_at = inject_fs_crash(monkeypatch, ds)
-
-    def restore():
-        for d in (index_dir, index_dir + ".old", index_dir + ".staging"):
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.copytree(pristine, index_dir)
-
-    def mined(k):
-        pairs_dir = str(tmp_path / f"pairs_{k}")
+    def mined():
+        pairs_dir = str(tmp_path / f"pairs_{next(runs)}")
         ds.incremental_near_dup_sink(index_dir, pairs_dir)(batch, 0)
         return {(r["doc_a"], r["doc_b"]) for r in spark.read.parquet(pairs_dir).collect()}
 
-    ds.bootstrap_lsh_index(new, index_dir)
-    clean = list(calls)
-    commit = clean.index(("fs_rename", (index_dir + ".staging", index_dir))) + 1
-    assert len(clean) == 5, clean
-    assert mined("clean") == {("n2", "c2")}
+    def after_crash(k, commit):
+        assert mined() == ({("n1", "c1")} if k <= commit else {("n2", "c2")}), k
 
-    for k in range(1, len(clean) + 1):
-        restore()
-        calls.clear()
-        crash_at["k"] = k
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            ds.bootstrap_lsh_index(new, index_dir)
-        crash_at["k"] = None
-        assert mined(k) == ({("n1", "c1")} if k <= commit else {("n2", "c2")}), k
-        ds.bootstrap_lsh_index(new, index_dir)
-        assert mined(f"{k}-again") == {("n2", "c2")}, k
-        assert not os.path.exists(index_dir + ".old"), k
-        assert not os.path.exists(index_dir + ".staging"), k
+    def settled():
+        assert mined() == {("n2", "c2")}
+
+    clean = crash_at_every_step(
+        monkeypatch, [ds], index_dir, lambda: ds.bootstrap_lsh_index(new, index_dir),
+        after_crash, settled,
+    )
+    assert len(clean) == 5, clean
 
 
 def test_compact_lsh_index_preserves_mining_and_replay_contract(spark, tmp_path):
@@ -876,9 +859,10 @@ def test_compact_lsh_index_preserves_mining_and_replay_contract(spark, tmp_path)
 
 
 def test_empty_first_batch_does_not_wedge_the_stream(spark, tmp_path):
-    """round-9 review: an empty first micro-batch writes a
+    """round-9 review: an empty first micro-batch leaves a
     data-file-less index dir; the corpus read must use the explicit
-    schema (inference over it throws and would replay-fail forever)."""
+    schema (inference over it throws and would replay-fail forever).
+    The empty batch writes no partition, to the index or the pairs."""
     from webscrap_datapipeline_spark.streaming.dedup_stream import (
         incremental_near_dup_sink,
     )
@@ -888,6 +872,8 @@ def test_empty_first_batch_does_not_wedge_the_stream(spark, tmp_path):
     sink = incremental_near_dup_sink(index_dir, pairs_dir)
     empty = spark.createDataFrame([], "doc_id string, text string")
     sink(empty, 0)  # creates index_dir with no data files
+    for d in (index_dir, pairs_dir):
+        assert not os.path.exists(f"{d}/__batch_id=0"), d
 
     t = "alpha beta gamma delta epsilon zeta eta theta"
     sink(spark.createDataFrame([("a", t), ("b", t)], "doc_id string, text string"), 1)
@@ -1066,6 +1052,55 @@ def test_dedup_time_based_retention_prunes_by_event_time(spark, tmp_path):
             index_dir, pairs_dir, ts_col="ts", retain_ts_seconds=10.0,
             compact_every=2,
         )
+
+
+def test_time_retention_still_prunes_after_a_fold_over_an_empty_batch(spark, tmp_path):
+    """An empty micro-batch writes no index partition. Had it written
+    one, the partition would carry no ``.maxts`` (the batch has no
+    event time), a tiered fold taking it in would stamp no ``.maxts``
+    on its chunk, and time retention would keep that chunk, and every
+    chunk later merged with it, for good: a doc older than the window
+    would go on pairing."""
+    from webscrap_datapipeline_spark.streaming.dedup_stream import (
+        incremental_near_dup_sink,
+    )
+    from webscrap_datapipeline_spark.streaming.index_core import (
+        list_batch_partitions,
+        max_ingest_ts_marker,
+    )
+
+    t_a = "alpha beta gamma delta epsilon zeta eta theta"
+    t_b = "one two three four five six seven eight nine"
+    t_c = "red orange yellow green blue indigo violet black"
+    index_dir = str(tmp_path / "lsh_index")
+    pairs_dir = str(tmp_path / "pairs")
+    sink = incremental_near_dup_sink(
+        index_dir, pairs_dir, ts_col="ts", retain_ts_seconds=300.0,
+        compact_every=2, compact_max_partitions=3,
+    )
+    schema = "doc_id string, text string, ts double"
+    batches = [
+        [("a0", t_a, 100.0)],
+        [],
+        [("b2", t_b, 110.0)],
+        [("c3", t_c, 120.0)],
+        [("d4", t_a, 1000.0)],  # mined before retention: pairs with a0
+        [("e5", t_a, 1010.0)],
+    ]
+    for batch_id, rows in enumerate(batches):
+        sink(spark.createDataFrame(rows, schema), batch_id)
+
+    assert not os.path.exists(f"{index_dir}/__batch_id=1")
+    pairs = spark.read.parquet(pairs_dir)
+    got = {(r["__batch_id"], r["doc_a"], r["doc_b"]) for r in pairs.collect()}
+    assert got == {(4, "d4", "a0"), (5, "e5", "d4")}
+    # batch 4's fold took in batches 0, 2 and 3; its chunk is older
+    # than the window and is gone
+    parts = sorted(list_batch_partitions(spark, index_dir))
+    assert parts == [4, 5], parts
+    assert all(
+        max_ingest_ts_marker(spark, index_dir, v) >= 1010.0 - 300.0 for v in parts
+    )
 
 
 def test_compaction_crashed_nonatomic_publish_never_loses_rows(

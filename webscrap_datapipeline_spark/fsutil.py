@@ -6,7 +6,8 @@ whole-directory replace protocol, :func:`fs_swap` plus
 :func:`fs_heal_swap`, through which the pipeline's warehouse, the state
 store, the streaming warehouse sink and the ANN and LSH index
 bootstraps and migration commit, and :func:`write_batch_partition`,
-the one way a micro-batch publishes its ``__batch_id`` partition.
+through which the sinks, the bootstraps and the ANN migration write a
+``__batch_id`` partition.
 
 One home instead of per-module copies (round-9 review: three modules
 had each open-coded the same Path/getFileSystem boilerplate — a
@@ -18,7 +19,8 @@ an existing table as absent."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -96,13 +98,27 @@ def fs_heal_swap(spark: SparkSession, path: str) -> None:
         raise IOError(f"fs_heal_swap: rename {old} -> {path} failed")
 
 
-def write_batch_partition(df: DataFrame, base: str, batch_id: int) -> None:
+def write_batch_partition(df: DataFrame, base: str, batch_id: int) -> int:
     """Write ``df`` as the ``__batch_id=<batch_id>`` partition of the
     parquet table under ``base``, replacing what that partition held: a
-    replayed batch rewrites exactly its own output. The id is in the
-    path only, never in the plan: a per-batch literal is inlined into
-    generated code, so every batch would compile new classes."""
-    df.write.mode("overwrite").parquet(f"{base.rstrip('/')}/__batch_id={batch_id}")
+    replayed batch rewrites exactly its own output. Returns the row
+    count, observed on the write's own job.
+
+    An empty ``df`` leaves no partition (and a replayed empty batch
+    deletes the one it had). An empty partition would carry no
+    ``.maxts`` sidecar, and a fold that takes it in stamps none on its
+    chunk, so time retention could never expire that chunk.
+
+    The id is in the path only, never in the plan: a per-batch literal
+    is inlined into generated code, so every batch would compile new
+    classes."""
+    path = f"{base.rstrip('/')}/__batch_id={batch_id}"
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    rows = int(obs.get["n"])
+    if rows == 0:
+        fs_delete(df.sparkSession, path)
+    return rows
 
 
 def fs_write_text(spark: SparkSession, path: str, text: str) -> None:

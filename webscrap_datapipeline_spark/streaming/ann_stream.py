@@ -329,17 +329,12 @@ def bootstrap_ann_index(
     base = index_dir.rstrip("/")
     staging = base + ".staging"
     fs_delete(spark, staging)
-    obs = Observation("ann_bootstrap_rows")
-    write_batch_partition(
-        _bucketed_batch(corpus, geo, id_col, vec_col).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ),
-        staging,
-        -1,
+    rows = write_batch_partition(
+        _bucketed_batch(corpus, geo, id_col, vec_col), staging, -1
     )
     _write_geometry(spark, staging, geo)  # completion marker, LAST
     fs_swap(spark, base, staging)
-    return int(obs.get["n"])
+    return rows
 
 
 def incremental_ann_sink(
@@ -783,23 +778,17 @@ def migrate_ann_index_geometry(
         }
 
     new_id = min(min(part_vals), -1) - 1
-    obs = Observation("ann_migrate_rows")
-    rebucketed = (
-        _bucketed_batch(
-            read_ann_index(spark, base, geo=old_geo).select(
-                "vec_id", "embedding", "__ingest"
-            ),
-            new_geo,
-            "vec_id",
-            "embedding",
-            keep=("__ingest",),
-        )
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-    )
+    rebucketed = _bucketed_batch(
+        read_ann_index(spark, base, geo=old_geo).select(
+            "vec_id", "embedding", "__ingest"
+        ),
+        new_geo,
+        "vec_id",
+        "embedding",
+        keep=("__ingest",),
+    ).distinct()
+    rows = write_batch_partition(rebucketed, scratch, new_id)
     data_dir = f"{scratch}/__batch_id={new_id}"
-    rebucketed.write.mode("overwrite").parquet(data_dir)
-    rows = int(obs.get["n"])
     # age markers from the SOURCES (read before they are deleted);
     # either marker only when every source knows it — the shared
     # fail-safe rule (index_core.write_age_markers writes into the

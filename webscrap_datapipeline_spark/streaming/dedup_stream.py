@@ -338,10 +338,10 @@ def incremental_near_dup_sink(
             # (batch, batch_id), which is what makes the partition
             # overwrite idempotent in CONTENT and not just in layout.
             # Schema is EXPLICIT (batch schema + the partition column):
-            # an empty first batch writes a data-file-less dir, and
-            # schema inference over it would throw and wedge every
-            # subsequent batch behind the same AnalysisException
-            # (round-9 review)
+            # an empty first batch leaves the index dir with no
+            # partition, and schema inference over it would throw and
+            # wedge every subsequent batch behind the same
+            # AnalysisException (round-9 review)
             corpus_schema = T.StructType(
                 list(new_idx.schema) + [T.StructField("__batch_id", T.LongType())]
             )
