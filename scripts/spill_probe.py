@@ -107,40 +107,6 @@ def _cross_modal_lsh_auto(spark, corpus_dir: str):
     return lsh_cosine_edges(corpus, b)
 
 
-def _simhash_multi_band_mining(spark, corpus_dir: str):
-    """Corpus-scale SimHash near-dup mining in its PRODUCTION form,
-    end-to-end: wide-aggregate signatures (operators/dedup.simhash,
-    wide=True — the only form that computes ×1024 signatures in sane
-    time), band scheme from simhash_auto_band_scheme (k=4 at the ×1024
-    corpus), candidates + exact popcount rescore via the SHIPPED
-    simhash_near_dup_pairs_multi. The round-7 band-volume table
-    (SCALE.md) predicts ~21B candidate pairs at ×1024/k=4 — an 80.6×
-    cut from the single-band 1.67T; this runner proves the rescore
-    COMPLETES under an 8 GiB heap rather than only counting what it
-    would cost. The oracled twin (simhash_multi_band_volume) hash-checks
-    the same composite-key arithmetic at driver scale."""
-    from webscrap_datapipeline_spark.catalog import load_table
-    from webscrap_datapipeline_spark.operators.dedup import (
-        simhash,
-        simhash_auto_band_scheme,
-        simhash_near_dup_pairs_multi,
-    )
-
-    docs = load_table(spark, "documents", corpus_dir).select("doc_id", "text")
-    n = docs.count()
-    k, bands, width = simhash_auto_band_scheme(n)
-    # scheme info goes to STDERR: the probe's stdout contract is ONE
-    # final metrics JSON line (round-8 ADVICE — a second stdout line
-    # breaks any consumer parsing the output as a single JSON object)
-    print(
-        json.dumps({"corpus_docs": n, "k": k, "bands": bands, "width": width}),
-        file=sys.stderr,
-        flush=True,
-    )
-    sh = simhash(docs, "text", "doc_id")
-    return simhash_near_dup_pairs_multi(sh, hamming_tol=8, k=k)
-
-
 # Non-registry probe plans: production forms of shipped channels whose
 # oracled queries freeze a knob the production path scales (the bucket
 # expression is driver-checked semantics, so the registry entry can't
@@ -148,7 +114,6 @@ def _simhash_multi_band_mining(spark, corpus_dir: str):
 # plane arithmetic, this runs the actual channel under memory pressure).
 CHANNELS = {
     "cross_modal_lsh_auto": _cross_modal_lsh_auto,
-    "simhash_multi_band": _simhash_multi_band_mining,
 }
 
 

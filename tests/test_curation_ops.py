@@ -336,33 +336,36 @@ def test_simhash_multi_band_pairs_equal_single_band(spark):
     from webscrap_datapipeline_spark.operators.dedup import (
         simhash,
         simhash_bit_band_keys,
-        simhash_near_dup_pairs_multi,
+        simhash_multi_band_keys,
     )
+
+    def pairs(keys, idx, val):
+        # self-join on the band/composite key, then the exact rescore
+        a, b = keys.alias("a"), keys.alias("b")
+        return {
+            (r["doc_a"], r["doc_b"], r["hamming"])
+            for r in (
+                a.join(
+                    b,
+                    (F.col(f"a.{idx}") == F.col(f"b.{idx}"))
+                    & (F.col(f"a.{val}") == F.col(f"b.{val}"))
+                    & (F.col("a.doc") < F.col("b.doc")),
+                )
+                .select(
+                    F.col("a.doc").alias("doc_a"),
+                    F.col("b.doc").alias("doc_b"),
+                    F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+                        "hamming"
+                    ),
+                )
+                .filter(F.col("hamming") <= 8)
+                .distinct()
+            ).collect()
+        }
 
     docs = load_table(spark, "documents", SF_SMALL).filter(F.col("doc_id") < 300)
     sh = simhash(docs, "text", "doc_id").localCheckpoint()
-    single = simhash_bit_band_keys(sh)
-    a, b = single.alias("a"), single.alias("b")
-    base = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_val") == F.col("b.band_val"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(
-                F.col("a.doc").alias("doc_a"),
-                F.col("b.doc").alias("doc_b"),
-                F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
-                    "hamming"
-                ),
-            )
-            .filter(F.col("hamming") <= 8)
-            .distinct()
-        ).collect()
-    }
+    base = pairs(simhash_bit_band_keys(sh), "band_idx", "band_val")
     assert base, "corpus slice must contain near-dup pairs for the test to bind"
     # k=4 is the scheme simhash_auto_band_scheme picks at the ×1024
     # corpus (4, 12, 5) — C(12,4)=495 combos, the regime where the key
@@ -371,11 +374,8 @@ def test_simhash_multi_band_pairs_equal_single_band(spark):
     # the production mitigation path, not just the small-k shapes, is
     # recall-exact.
     for k in (2, 3, 4):
-        multi = {
-            (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in simhash_near_dup_pairs_multi(sh, hamming_tol=8, k=k).collect()
-        }
-        assert multi == base
+        multi_keys = simhash_multi_band_keys(sh, hamming_tol=8, k=k)
+        assert pairs(multi_keys, "key_idx", "key_val") == base
 
 
 def test_simhash_wide_and_exploded_forms_identical(spark):

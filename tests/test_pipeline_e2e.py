@@ -218,6 +218,23 @@ def test_pipeline_quarantine_stage_diverts_bad_rows(spark, workspace, tmp_path):
     assert (res.changed_keys, res.quarantined_rows, res.loaded_rows) == (1, 2, 6)
     assert spark.read.parquet(qpath).count() == 4
 
+    # a newer ALPHA file: only its rows are split; the already-loaded
+    # first ALPHA file is not quarantined a second time
+    _write_raw(workspace["raw"], "ALPHA", "08142026_09-00-00", 5)
+    available = _available(spark, [("ALPHA", "2026-08-14T09"), ("BRAVO", "2026-08-13T11")])
+    res = run_incremental(
+        spark, available, workspace["raw"] + "/*.csv",
+        workspace["state"], workspace["warehouse"], workspace["log"],
+        quarantine_rules={"rate_in_band": F.col("RATE_USD") <= 102.0},
+        quarantine_path=qpath,
+    )
+    assert (res.changed_keys, res.quarantined_rows, res.loaded_rows) == (1, 2, 9)
+    per_file = {
+        r["SRC_FILENAME"]: r["count"]
+        for r in spark.read.parquet(qpath).groupBy("SRC_FILENAME").count().collect()
+    }
+    assert sorted(per_file.values()) == [2, 2, 2]
+
 
 def test_cycle_result_counts_match_what_the_cycle_wrote(spark, workspace):
     """The cycle reports its counts without reading them back: the log

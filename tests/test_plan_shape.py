@@ -125,74 +125,6 @@ def test_anti_join_state_side_broadcasts_or_shuffles_on_key(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_bucketed_join_elides_both_exchanges(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts must
-    sort-merge join with ZERO Exchange operators — the write-time layout
-    replaces the runtime shuffle (operators/bucketing.py). This property
-    is what makes repeated fact-to-fact joins affordable at 100 TB."""
-    from webscrap_datapipeline_spark.operators.bucketing import bucketed, write_bucketed
-
-    orders = load_table(spark, "orders", SF_SMALL)
-    li = load_table(spark, "lineitem", SF_SMALL)
-    try:
-        write_bucketed(
-            orders, "b_orders", ["o_orderkey"], 8, str(tmp_path / "b_orders")
-        )
-        write_bucketed(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "b_lineitem",
-            ["o_orderkey"],
-            8,
-            str(tmp_path / "b_lineitem"),
-        )
-        # Disable broadcast so the tiny test tables take the join path a
-        # 100 TB fact⋈fact join would take (broadcast is right at this SF
-        # but is exactly what bucketing exists to replace at scale).
-        saved = [
-            (k, spark.conf.get(k, None))
-            for k in (
-                "spark.sql.autoBroadcastJoinThreshold",
-                "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            )
-        ]
-        try:
-            for k, _ in saved:
-                spark.conf.set(k, "-1")
-            joined = bucketed(spark, "b_orders").join(
-                bucketed(spark, "b_lineitem"), "o_orderkey"
-            )
-            plan = plan_str(joined)
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-            assert "Exchange" not in plan, plan
-            assert "SelectedBucketsCount" in plan
-            # and the layout actually computes the right answer
-            assert joined.count() == li.count()
-        finally:
-            for k, v in saved:
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_groupby_elides_exchange(spark, tmp_path):
-    """groupBy on the bucket key reuses the write-time distribution —
-    the aggregate plan must not re-shuffle."""
-    from webscrap_datapipeline_spark.operators.bucketing import bucketed, write_bucketed
-
-    orders = load_table(spark, "orders", SF_SMALL)
-    try:
-        write_bucketed(orders, "b_orders2", ["o_custkey"], 8, str(tmp_path / "b2"))
-        agg = bucketed(spark, "b_orders2").groupBy("o_custkey").count()
-        plan = plan_str(agg)
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders2")
-
-
 def test_partitioned_write_prunes_partitions_on_read(spark, tmp_path):
     """Hive-style partitionBy layout must turn an equality filter on the
     partition column into PartitionFilters at the scan — reading 1/Nth

@@ -3,6 +3,8 @@ round 6: corpus-reuse provenance decisions and event-log metric parsing.
 These scripts feed SCALE.md's evidence tables, so their failure modes
 (silently mixing corpora from two sources; reporting all-zero spill when
 metrics were never captured) are data-integrity bugs, not conveniences.
+Two static scans ride along: every package import in ``scripts/``
+resolves, and every public package function is reached.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ import importlib.util
 import json
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -251,3 +254,75 @@ def test_script_package_imports_resolve():
                 ) is None:
                     missing.append(f"{os.path.basename(path)}: {node.module}.{alias.name}")
     assert n > 0 and not missing, missing
+
+
+# Public package functions that no other package code calls, each with
+# the reason it stays: the streaming and batch entry points a deployment
+# calls directly, and the reference implementations a check compares to.
+ENTRY_POINTS = (
+    ("pipeline.run_incremental", "one batch ingest cycle: the pipeline entry point"),
+    ("session.get_spark", "session factory that bench.py, perfbench and scripts start from"),
+    ("sources.scrape.fetch_partitioned", "scrape scaffold that lists the pipeline's available keys"),
+    ("operators.cdc.apply_change_feed", "round-trip inverse of snapshot_diff, property-checked"),
+    ("operators.dedup.incremental_lsh_candidates", "batch twin of the near-dup sink; perfbench checks against it"),
+    ("operators.similarity.brute_force_topk", "exact top-k that ANN recall is measured against"),
+    ("operators.packing.pack_greedy", "hard-capacity twin of pack_fill; only tests reach it"),
+    ("plans.vector_queries.label_centroids_array", "array form of label_centroids; only a test reaches it"),
+    ("streaming.enrich.enrich_stream", "stream-static enrichment join"),
+    ("streaming.enrich.dedup_stream", "watermarked per-key stream dedup"),
+    ("streaming.enrich.interval_join_streams", "stream-stream interval join"),
+    ("streaming.windows.tumbling_counts", "tumbling-window stream aggregate"),
+    ("streaming.windows.sliding_counts", "sliding-window stream aggregate"),
+    ("streaming.file_source.stream_raw_reports", "raw-report file stream source"),
+    ("streaming.change_detection.detect_changes_stream", "exact streaming change feed"),
+    ("streaming.change_detection.detect_changes_stream_monotone_exactly_once", "exactly-once monotone change feed"),
+    ("streaming.sinks.warehouse_append_sink", "foreachBatch warehouse sink"),
+    ("streaming.dedup_stream.bootstrap_lsh_index", "builds the near-dup index a stream folds into"),
+    ("streaming.dedup_stream.incremental_near_dup_sink", "near-dup foreachBatch sink"),
+    ("streaming.ann_stream.bootstrap_ann_index", "builds the ANN index a stream folds into"),
+    ("streaming.ann_stream.incremental_ann_sink", "ANN foreachBatch sink"),
+    ("streaming.ann_stream.ann_query_index", "serves top-k from the live ANN index"),
+    ("streaming.ann_stream.committed_serve_cut", "read-consistent serving cut of a live ANN stream"),
+    ("streaming.ann_stream.migrate_ann_index_geometry", "rebuckets a live ANN index under new geometry"),
+)
+
+
+def test_every_public_package_function_is_reached():
+    """Each public top-level function of the package is referenced by
+    other package code (a registered query, ``pipeline.py`` or another
+    module) or is a named entry point above. A function only tests or
+    probes call is a parallel variant no shipped path runs."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "webscrap_datapipeline_spark")
+
+    def names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.alias):
+                yield n.name.split(".")[-1]
+
+    refs: Counter[str] = Counter()
+    defs = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        refs.update(names(tree))
+        module = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            registered = any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                for d in getattr(node, "decorator_list", ())
+            )
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_") and not registered:
+                own = sum(1 for n in names(node) if n == node.name)
+                defs.append((f"{module}.{node.name}", node.name, own))
+    entry = dict(ENTRY_POINTS)
+    public = {qual for qual, *_ in defs}
+    assert not set(entry) - public, f"stale entry points: {sorted(set(entry) - public)}"
+    unreached = [
+        qual for qual, name, own in defs if qual not in entry and refs[name] == own
+    ]
+    assert not unreached, unreached

@@ -1,8 +1,7 @@
 """Hadoop FileSystem helpers shared by every module that touches paths
 outside a DataFrame reader/writer: streaming index maintenance and
 retention (``streaming/index_core``, ``dedup_stream``, ``ann_stream``),
-small-file compaction (``operators/maintenance``), the one
-whole-directory replace protocol, :func:`fs_swap` plus
+the one whole-directory replace protocol, :func:`fs_swap` plus
 :func:`fs_heal_swap`, through which the pipeline's warehouse, the state
 store, the streaming warehouse sink and the ANN and LSH index
 bootstraps and migration commit, and :func:`write_batch_partition`,
@@ -37,9 +36,9 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def fs_delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
+def fs_delete(spark: SparkSession, path: str) -> bool:
     fs, jpath = hadoop_fs(spark, path)
-    return bool(fs.delete(jpath, recursive))
+    return bool(fs.delete(jpath, True))
 
 
 def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:

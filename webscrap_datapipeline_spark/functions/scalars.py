@@ -29,11 +29,6 @@ def filename_timestamp(col: Column | str) -> Column:
     )
 
 
-def filename_timestamp_str(col: Column | str) -> Column:
-    """The reference's rendered form: 'yyyy-MM-dd HH:mm:ss' string."""
-    return F.date_format(filename_timestamp(col), "yyyy-MM-dd HH:mm:ss")
-
-
 # F3: first all-caps token of the path is the hotel/location code
 # (reference src/process_files.py:37-41: re.findall(r"\b([A-Z]+)\b")[0]).
 def location_code(col: Column | str) -> Column:

@@ -11,8 +11,7 @@ class they care about (Catalyst pushes that filter into the join).
 
 Scale notes:
   * one shuffle, keyed on the diff key — if both snapshots are written
-    bucketed on the key (see ``operators/bucketing.py``) even that
-    shuffle disappears;
+    with Spark's ``bucketBy`` on the key, even that shuffle disappears;
   * compare columns are hashed into one 64-bit value per side BEFORE the
     join when ``hash_compare=True``, so wide rows shuffle 8 bytes of
     payload instead of the whole row — the standard trick for
@@ -114,7 +113,7 @@ def apply_change_feed(state: DataFrame, feed: DataFrame, keys: list[str]) -> Dat
     ``apply_change_feed(old, snapshot_diff(old, new), keys) == new``.
 
     Scale: one shuffle on the keys, feed-sized state churn only when
-    bucketed layouts co-locate both sides (operators/bucketing.py).
+    bucketed layouts (Spark's ``bucketBy``) co-locate both sides.
     """
     val_cols = [c for c in state.columns if c not in keys]
     s = state.select(

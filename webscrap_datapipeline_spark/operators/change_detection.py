@@ -26,14 +26,6 @@ def detect_changes(source: DataFrame, state: DataFrame, key: str, ts: str) -> Da
     return source.join(F.broadcast(state), [key, ts], "left_anti").dropDuplicates([key])
 
 
-def missing_keys(source: DataFrame, state: DataFrame, key: str) -> DataFrame:
-    """Reference J1 in isolation (new keys only) — kept for parity
-    testing of J1 ∪ J2 ≡ composite-anti (tests/test_change_detection.py)."""
-    return source.select(key).distinct().join(
-        F.broadcast(state.select(key)), key, "left_anti"
-    )
-
-
 def update_state(state: DataFrame, updates: DataFrame, key: str, ts: str) -> DataFrame:
     """J3: overwrite per-key ts where an update exists, keep otherwise,
     and append brand-new keys — left join + coalesce + anti-union, the

@@ -18,10 +18,10 @@ back to shuffling the symmetrized list by vertex id each round —
 localCheckpoint does NOT preserve hash partitioning (verified on
 Spark 4.1.2: the Exchange reappears even when the checkpointed frame
 was pre-repartitioned on the join key), so the per-round shuffle
-cannot be hoisted out of the loop with checkpoints alone; the
-cluster-scale contingency is a bucketed scratch table for the
-symmetrized edges. Iterations converge in O(graph diameter);
-duplicate clusters are near-cliques, so 2-3 iterations in practice.
+cannot be hoisted out of the loop with checkpoints alone. The loop
+runs until no label changes: hash-min labels only decrease, so it
+stops after at most diameter + 1 rounds; duplicate clusters are
+near-cliques, so 2-3 iterations in practice.
 Lineage is truncated per iteration with an eager localCheckpoint
 (the label table is O(vertices in pairs) — vertices touched by at
 least one candidate pair, a small fraction of the corpus), which
@@ -44,27 +44,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    max_iters: int = 20,
-    sym_materializer=None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Label every vertex appearing in ``edges`` with its component id =
     the minimum vertex id reachable from it. Returns (vertex,
-    component). Deterministic: min-label is order-independent.
-
-    ``sym_materializer``: optional ``callable(sym_df) -> DataFrame``
-    that materializes the symmetrized edge list the loop joins against
-    every round. Default: eager localCheckpoint (in-memory blocks).
-    The cluster-scale contingency documented above routes it through a
-    bucketed scratch table on ``u``
-    (`operators/bucketing.write_bucketed` + catalog read) so each
-    round's join reads pre-distributed buckets with no edge-side
-    Exchange — localCheckpoint cannot provide that (it drops hash
-    partitioning on Spark 4.1.2, measured round 8); probed ABAB in
-    `scripts/bucketed_cc_probe.py` (SCALE.md round 9)."""
+    component). Deterministic: min-label is order-independent."""
     # Materialize the symmetrized edge list ONCE before looping: every
     # iteration joins against it, and without the checkpoint each join
     # would re-execute the edges' entire upstream plan (at the call
@@ -104,22 +87,19 @@ def connected_components(
             )
         ).alias("e")
     ).select("e.u", "e.v")
-    if sym_materializer is None:
-        # Materialize at the plan's natural width (the checkpoint job is
-        # the expensive pair-mining compute — never cap it), THEN bound
-        # the loop's read side: every CC round re-reads this checkpoint,
-        # and read-side slivers scheduled ~230 tasks/round on kilobytes
-        # of labels at sf0.1 (guide §2.2: fewer, larger partitions).
-        # coalesce AFTER the checkpoint is a narrow merge of in-memory
-        # blocks only — upstream compute width is untouched (round-12
-        # ADVICE: coalesce-before-checkpoint propagated up to the
-        # previous shuffle boundary and could cap the per-row
-        # Jaccard/cosine filter stage at exactly core count).
-        sym = sym.localCheckpoint(eager=False).coalesce(
-            edges.sparkSession.sparkContext.defaultParallelism
-        )
-    else:
-        sym = sym_materializer(sym)
+    # Materialize at the plan's natural width (the checkpoint job is
+    # the expensive pair-mining compute — never cap it), THEN bound
+    # the loop's read side: every CC round re-reads this checkpoint,
+    # and read-side slivers scheduled ~230 tasks/round on kilobytes
+    # of labels at sf0.1 (guide §2.2: fewer, larger partitions).
+    # coalesce AFTER the checkpoint is a narrow merge of in-memory
+    # blocks only — upstream compute width is untouched (round-12
+    # ADVICE: coalesce-before-checkpoint propagated up to the
+    # previous shuffle boundary and could cap the per-row
+    # Jaccard/cosine filter stage at exactly core count).
+    sym = sym.localCheckpoint(eager=False).coalesce(
+        edges.sparkSession.sparkContext.defaultParallelism
+    )
     labels = (
         sym.groupBy(F.col("u").alias("vertex"))
         .agg(F.min("v").alias("__mn"))
@@ -128,7 +108,7 @@ def connected_components(
         )
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iters):
+    while True:
         nbr_min = (
             sym.join(labels, sym["u"] == labels["vertex"])
             .groupBy(F.col("v").alias("vertex2"))
@@ -148,8 +128,7 @@ def connected_components(
         n_changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.drop("__changed")
         if n_changed == 0:
-            break
-    return labels
+            return labels
 
 
 def dedup_survivors(

@@ -417,33 +417,6 @@ def simhash_multi_band_keys(
     )
 
 
-def simhash_near_dup_pairs_multi(
-    sh: DataFrame, hamming_tol: int = 8, k: int = 2, bits: int = 63
-) -> DataFrame:
-    """Corpus-sized SimHash near-dup mining: composite-key candidates
-    (``simhash_multi_band_keys``) → exact popcount(xor) ≤ tol rescore →
-    distinct pairs. Same output as single-band mining at the same
-    tolerance (pytest pins the equality) with the candidate join volume
-    divided by ~2**(width·(k−1))."""
-    keys = simhash_multi_band_keys(sh, hamming_tol, k, bits)
-    a, b = keys.alias("a"), keys.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.key_idx") == F.col("b.key_idx"))
-            & (F.col("a.key_val") == F.col("b.key_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= hamming_tol)
-        .distinct()
-    )
-
-
 # Affine MinHash permutation constants: deterministic (md5-derived),
 # sized so a*h+b never overflows a signed 64-bit long under ANSI mode
 # (a < 2^20 odd, h < 2^32, b < 2^20 → a*h+b < 2^53).

@@ -30,13 +30,10 @@ that freezes the range boundaries (see inline comment) truncates
 lineage into executor-local, non-replicated blocks — after it, losing
 an executor fails the job rather than recomputing, and the full input
 is materialized in executor memory/disk. That is the deliberate trade
-for boundary determinism on a long-lived cluster job; jobs that need
-loss-recoverability pass ``reliable=True``, which freezes the
-boundaries through a *reliable* ``df.checkpoint()`` instead
-(``spark.sparkContext.setCheckpointDir`` required), at the cost of a
-distributed-FS round-trip. Ids are identical on both paths — the unit
-test pins that. Same pattern SCALE.md documents for the
-iterative-loop operators.
+for boundary determinism: a replicated ``df.checkpoint()`` would
+survive executor loss, but needs a configured checkpoint dir and pays
+a distributed-FS round-trip on every call. Same pattern SCALE.md
+documents for the iterative-loop operators.
 
 ``monotonically_increasing_id`` remains the zero-shuffle alternative
 when ids only need uniqueness + per-partition monotonicity, not
@@ -71,7 +68,6 @@ def _ranged_with_offsets(
     order_cols: list[Column],
     n: int,
     weight_col: str | None,
-    reliable: bool = False,
 ) -> tuple[DataFrame, Column]:
     """Shared two-pass core: range-repartition on ``order_cols``,
     freeze the boundaries, and return (ranged df with ``__pid``, the
@@ -86,28 +82,12 @@ def _ranged_with_offsets(
     offsets disagree with the actual partition sizes and ids come out
     with gaps/collisions. Reproduced at sf0.1 (round 3); the smaller
     SFs sample every row, which made the boundaries accidentally
-    deterministic and hid the bug.
-
-    ``reliable=True`` freezes via a *reliable* ``df.checkpoint()``
-    (replicated to the configured checkpoint dir — survives executor
-    loss, costs a distributed-FS round-trip) instead of the default
-    executor-local ``localCheckpoint`` (round-4 VERDICT item 4: the
-    fault-tolerance trade becomes a switch, not a caveat). Both freeze
-    the sampled boundaries identically, so ids are bit-identical on
-    either path."""
-    ranged = df.repartitionByRange(n, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
+    deterministic and hid the bug."""
+    ranged = (
+        df.repartitionByRange(n, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True needs a checkpoint dir: call "
-                "spark.sparkContext.setCheckpointDir(<fault-tolerant path>) first"
-            )
-        ranged = ranged.checkpoint(eager=True)
-    else:
-        ranged = ranged.localCheckpoint(eager=True)
     agg = (
         F.count(F.lit(1)).alias("w")
         if weight_col is None
@@ -133,22 +113,16 @@ def assign_contiguous_ids(
     order_col: str | Column | Sequence[Column],
     id_name: str = "row_id",
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """Add ``id_name``: the 0-based rank of each row in the total order
     of ``order_col`` — a column name (ascending), a single Column, or an
     explicit list of ordering Columns (e.g. ``[F.col("n").desc(),
     F.col("k").asc()]`` for a global rank without a global sort). The
     combined order key must be unique — ties would make the rank
-    assignment of equal keys arbitrary. Two-pass, no global window.
-    ``reliable=True`` uses a replicated checkpoint to freeze the range
-    boundaries (executor-loss recoverable; needs ``setCheckpointDir``);
-    ids are identical on both paths."""
+    assignment of equal keys arbitrary. Two-pass, no global window."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     order_cols = _as_order_cols(order_col)
-    ranged, offset_expr = _ranged_with_offsets(
-        df, order_cols, n, weight_col=None, reliable=reliable
-    )
+    ranged, offset_expr = _ranged_with_offsets(df, order_cols, n, weight_col=None)
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return ranged.withColumn(
         id_name, (F.row_number().over(w) - 1 + offset_expr).cast("bigint")
@@ -161,7 +135,6 @@ def budgeted_take(
     weight_col: str,
     budget: int,
     num_partitions: int | None = None,
-    reliable: bool = False,
 ) -> DataFrame:
     """Keep the prefix of ``df`` in the total order of ``order_cols``
     whose running ``weight_col`` sum stays ≤ ``budget`` — "take the
@@ -177,15 +150,10 @@ def budgeted_take(
     cumulative sum + offset. The first row that would cross the budget
     is excluded (strict prefix ≤ budget). Weights must be non-negative;
     the order key must be unique (ties would make the crossing row
-    ambiguous). ``reliable=True`` freezes the range boundaries through a
-    replicated ``df.checkpoint()`` exactly as in
-    :func:`assign_contiguous_ids`; the kept prefix is identical on both
-    paths."""
+    ambiguous)."""
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     order = [F.col(c).asc() for c in order_cols]
-    ranged, offset_expr = _ranged_with_offsets(
-        df, order, n, weight_col=weight_col, reliable=reliable
-    )
+    ranged, offset_expr = _ranged_with_offsets(df, order, n, weight_col=weight_col)
     w = (
         Window.partitionBy("__pid")
         .orderBy(*order)

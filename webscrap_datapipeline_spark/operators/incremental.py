@@ -13,7 +13,7 @@ a sketch — see approx_distinct_users' HLL.)
 
 Scale: the merge is a full-outer equi-join on the group keys — one
 shuffle of two *aggregate-sized* tables (|keys| rows, not |fact| rows).
-With both sides written bucketed on the keys (operators/bucketing.py),
+With both sides written bucketed on the keys (Spark's ``bucketBy``),
 even that shuffle disappears — the nightly merge touches only new data.
 """
 

@@ -133,48 +133,6 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def default_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Production resize hook — REPLACE via ``resizer=`` injection (no
-    image libs in this environment; fails loudly by contract)."""
-    raise NotImplementedError("no image resizer installed: inject resizer=...")
-
-
-def fake_resizer(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in: truncates/pads the payload to width*height
-    bytes — wrong as pixels, right as a testable byte-level contract."""
-    target = max(1, width * height)
-    return (payload or b"\x00")[:target].ljust(target, b"\x00")
-
-
-def resize_images(
-    media: DataFrame,
-    width: int,
-    height: int,
-    resizer: Callable[[bytes, int, int], bytes] = default_resizer,
-) -> DataFrame:
-    """Resize every image payload via mapInPandas, rewriting the meta
-    struct to the new dimensions. Non-image rows pass through untouched
-    (kind-dispatch inside the batch, no second scan)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            resized, metas = [], []
-            for k, p, m in zip(pdf["kind"], pdf["payload"], pdf["meta"]):
-                if k == "image":
-                    resized.append(resizer(bytes(p) if p is not None else b"", width, height))
-                    m = dict(m or {})
-                    m["width"], m["height"] = width, height
-                    metas.append(m)
-                else:
-                    resized.append(p)
-                    metas.append(m)
-            out["payload"], out["meta"] = resized, metas
-            yield out
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
 def default_frame_sampler(payload: bytes, ts_ms: int) -> bytes:
     """Production video-frame extraction hook (ffmpeg-shaped). Stub."""
     raise NotImplementedError("no video decoder installed: inject sampler=...")
@@ -218,102 +176,3 @@ def sample_frames(
             yield pd.DataFrame(rows)
 
     return vids.mapInPandas(run, FRAME_SCHEMA)
-
-
-def payload_sizes_arrow(media: DataFrame) -> DataFrame:
-    """Per-kind payload byte totals computed through ``mapInArrow`` —
-    the zero-copy sibling of mapInPandas: batches arrive as
-    ``pyarrow.RecordBatch`` with the binary payload column as an Arrow
-    Binary array, never materialized into Python bytes objects unless
-    touched. For pure metadata/size passes over huge blobs this skips
-    the pandas conversion entirely (no per-row object allocation).
-    """
-    import pyarrow as pa
-
-    def run(batches):
-        for batch in batches:
-            tbl = pa.table(
-                {
-                    "kind": batch.column(batch.schema.get_field_index("kind")),
-                    # Arrow computes value lengths without copying payloads
-                    "n_bytes": pa.compute.binary_length(
-                        batch.column(batch.schema.get_field_index("payload"))
-                    ).cast(pa.int64()),
-                }
-            )
-            yield from tbl.to_batches()
-
-    out = media.mapInArrow(run, "kind string, n_bytes long")
-    return out.groupBy("kind").agg(
-        F.sum("n_bytes").alias("total_bytes"), F.count(F.lit(1)).alias("n_items")
-    )
-
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("chunk_idx", T.IntegerType()),
-        T.StructField("start_ms", T.IntegerType()),
-        T.StructField("end_ms", T.IntegerType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def default_audio_chunker(payload: bytes, start_ms: int, end_ms: int) -> bytes:
-    """Production audio slicing hook (codec-aware). Stub by contract."""
-    raise NotImplementedError("no audio decoder installed: inject chunker=...")
-
-
-def fake_audio_chunker(payload: bytes, start_ms: int, end_ms: int) -> bytes:
-    """Deterministic stand-in: byte slice proportional to the time
-    window (treats the payload as fixed-rate samples) — verifies chunk
-    boundaries and lineage without a codec."""
-    if not payload:
-        return b""
-    n = len(payload)
-    dur = max(1, end_ms)
-    lo = min(n, start_ms * n // dur)
-    hi = min(n, end_ms * n // dur) or 1
-    return payload[lo:hi]
-
-
-def chunk_audio(
-    media: DataFrame,
-    window_ms: int = 30_000,
-    overlap_ms: int = 5_000,
-    max_chunks: int = 128,
-    chunker: Callable[[bytes, int, int], bytes] = default_audio_chunker,
-) -> DataFrame:
-    """1:N overlapped windowing over audio rows — the ASR/embedding
-    preprocessing shape (e.g. 30 s windows with 5 s overlap): chunk k
-    covers [k·(window−overlap), k·(window−overlap)+window). Bounded
-    fan-out (``max_chunks``) like frame sampling; per-chunk time lineage
-    rides along for alignment back to the source. Metadata-only rows
-    (duration) drive the fan-out, so a mis-tagged payload can't explode
-    a task."""
-    if overlap_ms >= window_ms:
-        raise ValueError("overlap_ms must be smaller than window_ms")
-    auds = media.filter(F.col("kind") == "audio")
-    stride = window_ms - overlap_ms
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "chunk_idx": [], "start_ms": [], "end_ms": [], "payload": []}
-            for mid, p, m in zip(pdf["media_id"], pdf["payload"], pdf["meta"]):
-                duration = int((m or {}).get("duration_ms") or 0)
-                raw = bytes(p) if p is not None else b""
-                n = 0
-                start = 0
-                while start < duration and n < max_chunks:
-                    end = min(start + window_ms, duration)
-                    rows["media_id"].append(mid)
-                    rows["chunk_idx"].append(n)
-                    rows["start_ms"].append(start)
-                    rows["end_ms"].append(end)
-                    rows["payload"].append(chunker(raw, start, end))
-                    n += 1
-                    start += stride
-            yield pd.DataFrame(rows)
-
-    return auds.mapInPandas(run, CHUNK_SCHEMA)

@@ -79,48 +79,3 @@ def pack_greedy(
     return df.select(group_col, id_col, weight_col).groupBy(group_col).applyInPandas(
         pack, schema
     )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    weight_col: str,
-    n_shards: int,
-    group_col: str | None = None,
-) -> None:
-    """Materialize the corpus as ``n_shards`` balanced training shards:
-    shard = contiguous-fill bin index over the global token budget
-    (total/n_shards per shard), written as a Hive-partitioned layout
-    ``path/shard=K/``. One extra aggregate to learn the total weight,
-    one window to assign shards, one partitioned write — the shard
-    column also becomes the reader's partition-pruning key (train on
-    shard k ⇒ scan 1/n of the files).
-
-    Sharding is in ``id_col`` order (deterministic, resumable); if
-    ``group_col`` is given, packing runs per group and shard ids are
-    (group-local shard, group) partitions instead.
-    """
-    key = group_col if group_col is not None else "__g"
-    base = df if group_col is not None else df.withColumn("__g", F.lit(0))
-    totals = base.groupBy(key).agg(F.sum(weight_col).alias("__total"))
-    budgeted = base.join(F.broadcast(totals), key).withColumn(
-        "__budget",
-        F.greatest(
-            (F.col("__total") / F.lit(n_shards)).cast("bigint"), F.lit(1)
-        ),
-    )
-    w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_before = F.sum(F.col(weight_col)).over(w) - F.col(weight_col)
-    sharded = budgeted.withColumn(
-        "shard",
-        F.least(
-            F.floor(cum_before / F.col("__budget")), F.lit(n_shards - 1)
-        ).cast("int"),
-    ).drop("__total", "__budget", "__g")
-    cols = ["shard"] if group_col is None else [group_col, "shard"]
-    sharded.write.mode("overwrite").partitionBy(*cols).parquet(path)

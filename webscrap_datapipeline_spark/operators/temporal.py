@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -104,45 +103,3 @@ def range_join(
     return left.join(
         F.broadcast(bands), (value >= F.col(lo)) & (value < F.col(hi)), "inner"
     )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    matched_as: str = "matched_ts",
-) -> DataFrame:
-    """Same contract as :func:`asof_join`, implemented as a grouped-map
-    ``applyInPandas`` running ``pd.merge_asof`` per key group — the
-    pattern for as-of logic too bespoke for window expressions
-    (multi-column tolerance, nearest-rather-than-backward, ...).
-
-    Trade-off vs the window formulation: one extra cogroup shuffle and an
-    Arrow round trip, but per-group logic is arbitrary pandas. The pytest
-    suite asserts both implementations agree row-for-row.
-    """
-    import pandas as pd
-    from pyspark.sql.types import StructField, TimestampType
-
-    out_schema = T.StructType(
-        list(left.schema.fields) + [StructField(matched_as, TimestampType())]
-    )
-
-    def merge(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        if rpdf.empty:
-            lpdf[matched_as] = pd.NaT
-            return lpdf
-        rp = (
-            rpdf[[right_ts]]
-            .assign(**{matched_as: lambda d: d[right_ts]})
-            .sort_values(right_ts, kind="mergesort")
-        )
-        merged = pd.merge_asof(
-            lpdf, rp, left_on=left_ts, right_on=right_ts, direction="backward"
-        )
-        return merged[[f.name for f in out_schema.fields]]
-
-    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(merge, out_schema)

@@ -74,20 +74,6 @@ def run_incremental(
     raw = read_raw_reports(spark, raw_glob)
     enriched = enrich_reports(raw).join(F.broadcast(requested), "LOC_ID", "left_semi")
 
-    # Optional row quarantine (ST4 generalized): rule violations leave
-    # the load path as DATA (reprocessable, with reasons) instead of
-    # being swallowed like the reference's per-row try/except.
-    n_quarantined = 0
-    if quarantine_rules:
-        enriched, bad = quarantine(enriched, quarantine_rules)
-        if quarantine_path is None:
-            n_quarantined = bad.count()
-        else:  # this cycle's rows only, counted as they are written
-            q_obs = Observation()
-            bad = bad.observe(q_obs, F.count("*").alias("n"))
-            bad.write.mode("append").parquet(quarantine_path)
-            n_quarantined = int(q_obs.get["n"])
-
     # Warehouse append with SCD current-flag maintenance (K5+K3).
     existing = enriched.limit(0)
     if fs_exists(spark, warehouse_path):
@@ -102,6 +88,23 @@ def run_incremental(
         # that filesystem lifecycle and is replay-safe)
         lineage = existing.select("LOC_ID", "SRC_FILENAME").distinct()
         enriched = enriched.join(lineage, ["LOC_ID", "SRC_FILENAME"], "left_anti")
+
+    # Optional row quarantine (ST4 generalized): rule violations leave
+    # the load path as DATA (reprocessable, with reasons) instead of
+    # being swallowed like the reference's per-row try/except. Split
+    # after the lineage anti-join, so a file loaded by an earlier cycle
+    # is not quarantined again when its key changes again.
+    n_quarantined = 0
+    if quarantine_rules:
+        enriched, bad = quarantine(enriched, quarantine_rules)
+        if quarantine_path is None:
+            n_quarantined = bad.count()
+        else:  # this cycle's rows only, counted as they are written
+            q_obs = Observation()
+            bad = bad.observe(q_obs, F.count("*").alias("n"))
+            bad.write.mode("append").parquet(quarantine_path)
+            n_quarantined = int(q_obs.get["n"])
+
     merged = apply_current_flag(
         existing, enriched, key="LOC_ID", ts="LST_UPDT_TS", tiebreak="SRC_FILENAME"
     )

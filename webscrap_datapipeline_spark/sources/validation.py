@@ -1,59 +1,16 @@
-"""Ingestion guards: schema-drift detection and row quarantine.
+"""Ingestion guard: row quarantine.
 
-The reference trusts whatever pandas infers and swallows per-row
-failures inside try/except (src/web_scrape.py:107-110) — failures leave
-at most a NULL row in the log table. At 100 TB ingest, both failure
-modes need to be *data*: schema drift reported as typed findings before
-a bad batch pollutes a table, and per-row rule violations split into a
-quarantine table with machine-readable reasons (reprocessable later)
-instead of being dropped.
+The reference swallows per-row failures inside try/except
+(src/web_scrape.py:107-110) — failures leave at most a NULL row in the
+log table. At 100 TB ingest that failure mode needs to be *data*:
+per-row rule violations split into a quarantine table with
+machine-readable reasons (reprocessable later) instead of being dropped.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-@dataclass(frozen=True)
-class SchemaDrift:
-    kind: str  # 'missing' | 'extra' | 'type_changed' | 'nullability_tightened'
-    column: str
-    expected: str | None
-    actual: str | None
-
-
-def schema_drift(actual: T.StructType, expected: T.StructType) -> list[SchemaDrift]:
-    """Compare an incoming batch's schema against the contract. Pure
-    metadata — zero jobs. ``nullability_tightened`` fires only when the
-    contract promises non-null but the batch may deliver NULLs (the
-    dangerous direction; the reverse is a safe narrowing)."""
-    exp = {f.name: f for f in expected.fields}
-    act = {f.name: f for f in actual.fields}
-    out: list[SchemaDrift] = []
-    for name, f in exp.items():
-        if name not in act:
-            out.append(SchemaDrift("missing", name, f.dataType.simpleString(), None))
-        else:
-            a = act[name]
-            if a.dataType != f.dataType:
-                out.append(
-                    SchemaDrift(
-                        "type_changed",
-                        name,
-                        f.dataType.simpleString(),
-                        a.dataType.simpleString(),
-                    )
-                )
-            if a.nullable and not f.nullable:
-                out.append(SchemaDrift("nullability_tightened", name, "not null", "nullable"))
-    for name, a in act.items():
-        if name not in exp:
-            out.append(SchemaDrift("extra", name, None, a.dataType.simpleString()))
-    return out
 
 
 def quarantine(
