@@ -26,7 +26,7 @@ after ``repartitionByRange(n, …)`` are dense in [0, n), so a dense
 positional array is always addressable.
 
 Fault-tolerance note (round-3 ADVICE): the eager ``localCheckpoint``
-that freezes the range boundaries (see inline comment) truncates
+that freezes the range boundaries (see ``_ranged_with_offsets``) truncates
 lineage into executor-local, non-replicated blocks — after it, losing
 an executor fails the job rather than recomputing, and the full input
 is materialized in executor memory/disk. That is the deliberate trade
